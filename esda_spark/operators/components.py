@@ -19,19 +19,12 @@ do not accumulate storage.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# edge-count gate below which components run in-core on the driver:
-# star contraction pays ~2 shuffle stages x O(log n) rounds of fixed
-# job latency, which dwarfs the actual work on small graphs (the
-# ADBSCAN 150k regression in VERDICT r4).  2M edges is ~32 MB driver
-# memory — far below any driver heap, far above every "small" graph.
-_INCORE_EDGES = int(os.environ.get("ESDA_SPARK_CC_INCORE_EDGES", "2000000"))
+from esda_spark.plans import gate
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -104,18 +97,47 @@ def incore_components_arrays(
     return nodes, nodes[parent]
 
 
-def _incore_components(e: DataFrame) -> DataFrame:
-    """Driver-side components for small edge sets (see
-    :func:`incore_components_arrays`)."""
-    spark = e.sparkSession
-    pdf = e.select("u", "v").toPandas()
-    if len(pdf) == 0:
+def _incore_components(spark, u: np.ndarray, v: np.ndarray) -> DataFrame:
+    """(id, component) Spark frame of the driver-side components of the
+    edge arrays (see :func:`incore_components_arrays`)."""
+    if len(u) == 0:
         return spark.createDataFrame([], "id long, component long")
-    nodes, comp = incore_components_arrays(
-        pdf["u"].to_numpy(np.int64), pdf["v"].to_numpy(np.int64)
+    nodes, comp = incore_components_arrays(u, v)
+    return spark.createDataFrame(
+        pd.DataFrame({"id": nodes, "component": comp}),
+        "id long, component long",
     )
-    out = pd.DataFrame({"id": nodes, "component": comp})
-    return spark.createDataFrame(out)
+
+
+def component_groups(ids: DataFrame, comp: DataFrame | None) -> DataFrame:
+    """(<key>, group_id, is_canonical) for every row of the one-column
+    frame ``ids`` (named <key>): group_id is the row's component, or
+    its own id when ``comp`` is None or holds no row for it (a
+    singleton); is_canonical = 1 for the group minimum.  ``comp`` is
+    (id, component) as :func:`connected_components` returns it."""
+    key = ids.columns[0]
+    if comp is None:
+        return ids.select(key, F.col(key).alias("group_id"),
+                          F.lit(1).alias("is_canonical"))
+    group = F.coalesce("component", F.col(key))
+    return (
+        ids.join(comp.withColumnRenamed("id", key), key, "left")
+        .select(
+            key, group.alias("group_id"),
+            F.when(group == F.col(key), 1).otherwise(0)
+            .alias("is_canonical"),
+        )
+    )
+
+
+def incore_groups(ids: DataFrame, u: np.ndarray, v: np.ndarray) -> DataFrame:
+    """:func:`component_groups` of the driver-side closure over the
+    (verified) edge arrays ``u``/``v`` — the in-core tail of the dedup
+    operators."""
+    if len(u) == 0:
+        return component_groups(ids, None)
+    comp = _incore_components(ids.sparkSession, u, v)
+    return component_groups(ids, F.broadcast(comp))
 
 
 def connected_components(
@@ -131,12 +153,12 @@ def connected_components(
     Only nodes that appear in at least one non-self edge are returned —
     isolated nodes are the caller's concern (coalesce with their own id).
 
-    Edge sets at or below ``incore_max_edges`` (default
-    ``ESDA_SPARK_CC_INCORE_EDGES`` = 2M) collect to the driver and run
-    a vectorized union-find — small graphs otherwise pay O(log n) star
-    rounds of pure Spark job latency (the 150k-point ADBSCAN regression
-    of round 4).  Pass ``incore_max_edges=0`` to force the distributed
-    path.
+    Distinct edge sets at or below ``incore_max_edges`` (default: the
+    ``cc_edges`` gate, :mod:`esda_spark.plans.gate`) collect to the
+    driver and run a vectorized union-find — small graphs otherwise pay
+    O(log n) star rounds of pure Spark job latency (the 150k-point
+    ADBSCAN regression of round 4).  Pass ``incore_max_edges=0`` to
+    force the distributed path.
 
     Convergence (distributed path) is detected by an order-independent
     checksum of the edge set (count + sum of per-edge hashes): both
@@ -144,7 +166,8 @@ def connected_components(
     of the checksum is a fixed point of the edge set, which the paper
     shows is the star forest rooted at component minima.
     """
-    sc = edges.sparkSession.sparkContext
+    spark = edges.sparkSession
+    sc = spark.sparkContext
     pids_before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
 
     e = (
@@ -154,17 +177,13 @@ def connected_components(
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    limit = _INCORE_EDGES if incore_max_edges is None else incore_max_edges
-    if limit > 0 and e.count() <= limit:
-        comp = _incore_components(e)
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in set(jmap.keySet().toArray()) - pids_before:
-            jr = jmap.get(rid)
-            if jr is not None:
-                jr.unpersist()
-        return comp
+    pdf = gate.collect_if_fits(e, "cc_edges", limit=incore_max_edges)
+    if pdf is not None:
+        return _incore_components(
+            spark, pdf["u"].to_numpy(np.int64), pdf["v"].to_numpy(np.int64)
+        )
+    e = e.localCheckpoint(eager=True)
     prev_sig = None
     converged = False
     for _ in range(max_iterations):

@@ -38,7 +38,6 @@ are pinned and outputs deterministic across runs and partitionings.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -47,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from esda_spark.operators.significance import permutation_significance
+from esda_spark.plans import gate
 
 # Site-chunk budget (m*k) and rep-block width for the streaming path;
 # the rep block keeps per-segment working sets cache-resident, which is
@@ -54,16 +54,13 @@ from esda_spark.operators.significance import permutation_significance
 _CHUNK_ELEMS = 8_000_000
 _REP_BLOCK = 2048
 
-# mode="auto" switchover: below this many sites the broadcast path
-# (driver collect + broadcast of the value vector) measurably wins —
-# interleaved A/B at 1M sites: broadcast 24.7 s vs tiled 35-45 s at
-# 9999 perms on local[8], a tie at 999 perms — so the switch sits
-# where the O(n) driver collect itself becomes the wall (~160 MB of
-# doubles at 2e7 sites), not where the tiled path merely exists.
-# Override with ESDA_SPARK_CRAND_TILED_ROWS; see PLANS.md.
-_AUTO_TILED_ROWS = int(
-    os.environ.get("ESDA_SPARK_CRAND_TILED_ROWS", "20000000")
-)
+# mode="auto" switchover (gate ``crand_tiled_sites``): below it the
+# broadcast path (driver collect + broadcast of the value vector)
+# measurably wins — interleaved A/B at 1M sites: broadcast 24.7 s vs
+# tiled 35-45 s at 9999 perms on local[8], a tie at 999 perms — so the
+# switch sits where the O(n) driver collect itself becomes the wall
+# (~160 MB of doubles at 2e7 sites), not where the tiled path merely
+# exists.  See PLANS.md.
 
 
 # --- stat kernels -----------------------------------------------------------
@@ -286,7 +283,8 @@ def conditional_randomization(
               global value distribution, so the conditional null is
               statistically equivalent; nothing n-sized ever reaches
               the driver or a broadcast).  "auto" (default) counts the
-              sites and picks: broadcast below ``_AUTO_TILED_ROWS``
+              sites and picks: broadcast below the
+              ``crand_tiled_sites`` gate
               (measured faster through 1e6 sites, and the reference's
               exact-draw semantics are preserved where users test
               against the reference), tiled at or above it — the
@@ -321,7 +319,8 @@ def conditional_randomization(
     if mode == "auto":
         if n_sites is None:
             n_sites = values.count()
-        mode = "tiled" if n_sites >= _AUTO_TILED_ROWS else "broadcast"
+        mode = ("tiled" if n_sites >= gate.LIMITS["crand_tiled_sites"]
+                else "broadcast")
     if mode == "tiled":
         return _crand_tiled(
             values, edges, observed, stat_func, permutations, seed,

@@ -7,10 +7,10 @@ window sorts, checkpoint counts) regardless of input size; at the
 "at this size fixed job overhead dominates and 32 threads buy
 nothing").  This module is the gated fast path, following the same
 precedent as ``components._incore_components`` (round-4/5 accepted):
-when the TARGET side fits comfortably in a broadcast
-(``ESDA_SPARK_KNN_INCORE_TARGETS``, default 2M rows ≈ 110 MB of
-numpy arrays), collect it once, broadcast the grid index, and compute
-every focal's exact top-k inside ONE ``mapInPandas`` job:
+when the TARGET side fits the ``knn_targets`` gate
+(:mod:`esda_spark.plans.gate`), the gate's probe collects it once, the
+grid index is broadcast, and every focal's exact top-k is computed
+inside ONE ``mapInPandas`` job:
 
 - zero shuffles (the focal side streams through in place),
 - candidate generation, the (d2 asc, neighbor asc) top-k, settlement
@@ -40,18 +40,9 @@ focal goes to the next doubling round exactly as before.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
-
-# Target-side row-count gate for the broadcast-kernel fast path.
-# ~55 B/row of numpy arrays broadcast to each Python worker; 2M rows
-# ≈ 110 MB — comfortable for local workers and cluster executors
-# alike, far above every driver-testdata table.  0 disables.
-INCORE_MAX_TARGETS = int(
-    float(os.environ.get("ESDA_SPARK_KNN_INCORE_TARGETS", 2_000_000))
-)
 
 _CY = 1 << 32
 _OFF = 1 << 20
@@ -275,32 +266,34 @@ def knn_batch(fid, fx, fy, idx, k, exclude_self, group_div):
 
 def knn_edges_incore(
     focals,
-    targets,
+    targets: pd.DataFrame,
     k: int,
     binary: bool = True,
     exclude_self: bool = True,
     keep_d2: bool = False,
     group_div: int | None = None,
-    n_targets: int | None = None,
 ):
     """Broadcast-kernel exact kNN edge build (the fast path).
 
-    ``focals``/``targets`` are DataFrames with (id, x, y); the target
-    side is collected and broadcast, the focal side streams through a
-    single ``mapInPandas`` job.  Output matches the distributed
-    builder bit-for-bit (same d2 arithmetic, same (d2, neighbor)
-    tie-break, same weight column).  The result is eagerly
-    materialized (localCheckpoint) exactly like the distributed
-    builder, so "build time" keeps meaning "materialized edges".
+    ``focals`` is a DataFrame with (id, x, y) that streams through a
+    single ``mapInPandas`` job; ``targets`` is the target side already
+    collected to the driver (the gate probe's frame), indexed and
+    broadcast.  Output matches the distributed builder bit-for-bit
+    (same d2 arithmetic, same (d2, neighbor) tie-break, same weight
+    column).  Where the two cannot agree they both raise: a
+    non-binary weight 1/sqrt(d2) over a coincident pair (d2 = 0) is a
+    DIVIDE_BY_ZERO in the distributed plan and a ValueError naming
+    the pair here.  The result is eagerly materialized
+    (localCheckpoint) exactly like the distributed builder, so "build
+    time" keeps meaning "materialized edges".
     """
-    from pyspark.sql import functions as F
-
-    spark = targets.sparkSession
-    tpdf = targets.select("id", "x", "y").toPandas()
-    tid = tpdf["id"].to_numpy(np.int64)
-    tx = tpdf["x"].to_numpy(np.float64)
-    ty = tpdf["y"].to_numpy(np.float64)
-    idx = build_target_index(tid, tx, ty, k)
+    spark = focals.sparkSession
+    idx = build_target_index(
+        targets["id"].to_numpy(np.int64),
+        targets["x"].to_numpy(np.float64),
+        targets["y"].to_numpy(np.float64),
+        k,
+    )
     bc = spark.sparkContext.broadcast(idx)
     kk = int(k)
     excl = bool(exclude_self)
@@ -323,8 +316,18 @@ def knn_edges_incore(
                 pdf["y"].to_numpy(np.float64),
                 idx_, kk, excl, gdiv,
             )
-            w = (np.ones(len(f)) if is_binary
-                 else 1.0 / np.sqrt(d2))
+            if is_binary:
+                w = np.ones(len(f))
+            else:
+                zero = np.flatnonzero(d2 == 0.0)
+                if len(zero):
+                    i = zero[0]
+                    raise ValueError(
+                        f"knn weight 1/sqrt(d2) is undefined: focal "
+                        f"{f[i]} and neighbor {n[i]} are coincident "
+                        f"(d2 = 0); use binary=True"
+                    )
+                w = 1.0 / np.sqrt(d2)
             res = {"focal": f, "neighbor": n, "weight": w}
             if want_d2:
                 res["d2"] = d2

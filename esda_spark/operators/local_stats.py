@@ -21,18 +21,7 @@ from esda_spark.functions.mathx import chi2_sf, norm_sf
 from esda_spark.operators.crand import conditional_randomization
 from esda_spark.operators.lag import spatial_lag
 from esda_spark.operators.weights import add_self_edges, transform_weights
-
-
-def _edge_moments(edges: DataFrame) -> DataFrame:
-    """(id, wi, wi2): row sums and squared row sums of W."""
-    return (
-        edges.groupBy("focal")
-        .agg(
-            F.sum("weight").alias("wi"),
-            F.sum(F.col("weight") * F.col("weight")).alias("wi2"),
-        )
-        .withColumnRenamed("focal", "id")
-    )
+from esda_spark.plans import gate
 
 
 def _fused_site_frame(edges: DataFrame, values: DataFrame,
@@ -147,9 +136,7 @@ def _crand_on_base(
     cardinality bound (one aggregate over the raw edges).  Tiled
     regime (beyond the broadcast gate): classic path — crand assembles
     its own one-exchange tile base; the p columns join back by id."""
-    from esda_spark.operators.crand import _AUTO_TILED_ROWS
-
-    if n < _AUTO_TILED_ROWS:
+    if n < gate.LIMITS["crand_tiled_sites"]:
         bk = base.select(
             *out_cols, F.col(obs_col).alias("observed"),
             "wlist", "self_weight",
@@ -246,12 +233,6 @@ def moran_local(
         c4 = float(zvals.agg(F.sum(z2c * z2c)).collect()[0][0]) * sd**4
     z4ss = c4 / sd**4
     w = transform_weights(edges, transformation)
-    # ONE exchange (round 6): the spatial lag, the wi/wi2 moments AND
-    # the crand neighborhood gather (sorted wlist + self_weight) come
-    # out of a single union + groupBy with the transform applied
-    # in-aggregate — the former shape ran a window transform plus
-    # three separate focal aggregates (lag, _edge_moments, the crand
-    # base) and joined the permutation output back at the end.
     base = _fused_site_frame(edges, zvals, "z", transformation)
     q1, q2, q3, q4 = (1, 3, 2, 4) if geoda_quads else (1, 2, 3, 4)
     base = base.withColumn(
@@ -969,12 +950,10 @@ def moran_local_partial(
         # dominant shuffle by the component count).  The mode is decided
         # ONCE from n so the tiled regime gathers tile-partitioned and
         # every component call reuses the checkpointed partitioning.
-        from esda_spark.operators.crand import (
-            _AUTO_TILED_ROWS,
-            gather_neighborhoods,
-        )
+        from esda_spark.operators.crand import gather_neighborhoods
 
-        mode = "tiled" if n >= _AUTO_TILED_ROWS else "broadcast"
+        mode = ("tiled" if n >= gate.LIMITS["crand_tiled_sites"]
+                else "broadcast")
         # persist, NOT localCheckpoint: a cached repartition keeps its
         # tile partitioning through the cogroup (InMemoryTableScan
         # reports the cached plan's outputPartitioning), so the tiled

@@ -16,7 +16,6 @@ join; the entropies are plain grouped aggregates of p·log p.
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -24,18 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from esda_spark.plans import gate
 from esda_spark.plans.cells import pack_cell, with_cell
-
-# Ring-count gate below which the polygon layer's geometry is
-# broadcast to the PIP refine kernel as a dict instead of riding every
-# candidate row: the cell join then carries only (id, x, y, poly_id)
-# into Python — the xs/ys arrays crossed the Arrow boundary once per
-# CANDIDATE before (guide §4.1: pass only the columns the function
-# needs).  200k rings ≈ tens of MB broadcast; above it the original
-# carry-the-arrays path applies unchanged.
-_PIP_BCAST_RINGS = int(
-    float(os.environ.get("ESDA_SPARK_PIP_BCAST_RINGS", 200_000))
-)
 
 
 def _poly_cells(polygons: DataFrame, cell_size: float) -> DataFrame:
@@ -86,20 +75,19 @@ def point_in_polygon(
     small) -> Arrow-batched refine.  One shuffle on the cell key.
     Boundary convention: even-odd crossing with upper-endpoint
     exclusion — each point lands in exactly one tile of a tiling.
+
+    When the layer's total vertex count fits the ``pip`` gate its
+    geometry is broadcast to the refine kernel as a dict instead of
+    riding every candidate row: the cell join then carries only
+    (id, x, y, poly_id) into Python.  Above the gate the candidates
+    carry the xs/ys arrays.  Same rows either way.
     """
     idc, xc, yc = point_cols
     pts = with_cell(points.select(idc, xc, yc), cell_size)
-    rings_pdf = None
-    if _PIP_BCAST_RINGS:
-        # one probe job doubles as the gate AND the geometry collect
-        # (limit threshold+1: an oversized layer falls through to the
-        # carry-the-arrays path without a separate count job)
-        rings_pdf = (
-            polygons.select("poly_id", "xs", "ys")
-            .limit(_PIP_BCAST_RINGS + 1).toPandas()
-        )
-        if len(rings_pdf) > _PIP_BCAST_RINGS:
-            rings_pdf = None
+    rings_pdf = gate.collect_if_fits(
+        polygons.select("poly_id", "xs", "ys"), "pip",
+        size=lambda pdf: int(pdf["xs"].map(len).sum()),
+    )
     if rings_pdf is not None:
         # broadcast-rings fast path: geometry crosses to Python once,
         # candidates carry only (id, x, y, poly_id), and the kernel
@@ -212,19 +200,17 @@ def knn_join(
 
     lpts = left.select("id", "x", "y")
     rpts = right.select("id", "x", "y")
-    # Broadcast-kernel fast path (round 6, same gate as knn_edges):
-    # the TARGET side is what gets collected/broadcast — the focal
-    # side streams through the kernel at any size, so e.g. ADBSCAN's
-    # 1-NN extension (millions of focals onto a thinned sample)
-    # qualifies whenever the sample fits the gate.
-    from esda_spark.operators.knn_incore import (
-        INCORE_MAX_TARGETS,
-        knn_edges_incore,
-    )
+    # Broadcast-kernel fast path (same gate as knn_edges): the TARGET
+    # side is what gets collected/broadcast — the focal side streams
+    # through the kernel at any size, so e.g. ADBSCAN's 1-NN extension
+    # (millions of focals onto a thinned sample) qualifies whenever the
+    # sample fits the gate.
+    from esda_spark.operators.knn_incore import knn_edges_incore
 
-    if INCORE_MAX_TARGETS and rpts.count() <= INCORE_MAX_TARGETS:
+    targets = gate.collect_if_fits(rpts, "knn_targets")
+    if targets is not None:
         edges = knn_edges_incore(
-            lpts, rpts, k, binary=True, exclude_self=False,
+            lpts, targets, k, binary=True, exclude_self=False,
             keep_d2=True, group_div=group_div,
         )
     else:

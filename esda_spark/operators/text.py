@@ -380,16 +380,18 @@ def minhash_dedup_groups(
     edges — near-dup edge sets are sparse by construction since LSH
     thresholds candidate volume).
     """
-    import os
-
     import numpy as np
+    import pandas as pd
 
     from esda_spark.operators.components import (
+        component_groups,
         connected_components,
-        incore_components_arrays,
+        incore_groups,
     )
+    from esda_spark.plans import gate
 
     spark = docs.sparkSession
+    ids = docs.select(F.col(id_col).alias("doc_id"))
     # the banding self-join references the signature pipeline on BOTH
     # sides (different output aliases defeat exchange reuse), so the
     # 16-way h60 signature pass would run twice — materialize it once
@@ -403,67 +405,35 @@ def minhash_dedup_groups(
     # transitive closure and the canonical selection all run on the
     # driver from TWO collects (pairs; candidate docs' shingle sets),
     # and only the final per-doc broadcast join stays distributed.
-    gate = int(float(os.environ.get("ESDA_SPARK_DEDUP_INCORE_PAIRS",
-                                    200_000)))
-    cand_pdf = cand.limit(gate + 1).toPandas() if gate else None
-    if cand_pdf is not None and len(cand_pdf) <= gate:
-        ids = docs.select(F.col(id_col).alias("doc_id"))
-        if len(cand_pdf) == 0:
-            return ids.select(
-                "doc_id", F.col("doc_id").alias("group_id"),
-                F.lit(1).alias("is_canonical"),
+    cand_pdf = gate.collect_if_fits(cand, "dedup_pairs")
+    if cand_pdf is not None:
+        ca = cand_pdf["doc_a"].to_numpy(np.int64)
+        cb = cand_pdf["doc_b"].to_numpy(np.int64)
+        keep = np.zeros(len(ca), dtype=bool)
+        if len(ca):
+            cid_df = spark.createDataFrame(
+                pd.DataFrame({"doc_id": np.unique(np.r_[ca, cb])}),
+                "doc_id long",
             )
-        cids = np.unique(np.concatenate([
-            cand_pdf["doc_a"].to_numpy(np.int64),
-            cand_pdf["doc_b"].to_numpy(np.int64),
-        ]))
-        cid_df = spark.createDataFrame(
-            [(int(i),) for i in cids], "doc_id long"
-        )
-        sets_pdf = (
-            docs.join(F.broadcast(cid_df),
-                      docs[id_col] == cid_df["doc_id"], "left_semi")
-            .select(
-                F.col(id_col).alias("doc_id"),
-                shingles_col(F.col(text_col), shingle_n).alias("shs"),
+            sets_pdf = (
+                docs.join(F.broadcast(cid_df),
+                          docs[id_col] == cid_df["doc_id"], "left_semi")
+                .select(
+                    F.col(id_col).alias("doc_id"),
+                    shingles_col(F.col(text_col), shingle_n).alias("shs"),
+                )
+                .toPandas()
             )
-            .toPandas()
-        )
-        sets = {
-            int(d): frozenset(s)
-            for d, s in zip(sets_pdf["doc_id"], sets_pdf["shs"])
-        }
-        ua, va = [], []
-        for a, b in zip(cand_pdf["doc_a"], cand_pdf["doc_b"]):
-            sa, sb = sets[int(a)], sets[int(b)]
-            inter = len(sa & sb)
-            union = len(sa) + len(sb) - inter
-            if union and inter / union >= threshold:
-                ua.append(int(a))
-                va.append(int(b))
-        if not ua:
-            return ids.select(
-                "doc_id", F.col("doc_id").alias("group_id"),
-                F.lit(1).alias("is_canonical"),
-            )
-        nodes, comp = incore_components_arrays(
-            np.asarray(ua, dtype=np.int64), np.asarray(va, dtype=np.int64)
-        )
-        comp_df = spark.createDataFrame(
-            [(int(n), int(c)) for n, c in zip(nodes, comp)],
-            "doc_id long, component long",
-        )
-        return (
-            ids.join(F.broadcast(comp_df), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("component", F.col("doc_id")).alias("group_id"),
-                F.when(
-                    F.coalesce("component", F.col("doc_id"))
-                    == F.col("doc_id"), 1,
-                ).otherwise(0).alias("is_canonical"),
-            )
-        )
+            sets = {
+                int(d): frozenset(s)
+                for d, s in zip(sets_pdf["doc_id"], sets_pdf["shs"])
+            }
+            for i, (a, b) in enumerate(zip(ca, cb)):
+                sa, sb = sets[int(a)], sets[int(b)]
+                inter = len(sa & sb)
+                union = len(sa) + len(sb) - inter
+                keep[i] = bool(union) and inter / union >= threshold
+        return incore_groups(ids, ca[keep], cb[keep])
 
     # distributed path (above the gate, or gate disabled): checkpoint
     # the candidates — the verify references them three times
@@ -472,18 +442,8 @@ def minhash_dedup_groups(
         ngram_jaccard_pairs(docs, cand, text_col, id_col, shingle_n)
         .where(F.col("jaccard") >= threshold)
     )
-    comp = connected_components(verified, src="doc_a", dst="doc_b")
-    ids = docs.select(F.col(id_col).alias("doc_id"))
-    return (
-        ids.join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", F.col("doc_id")).alias("group_id"),
-            F.when(
-                F.coalesce("component", F.col("doc_id"))
-                == F.col("doc_id"), 1,
-            ).otherwise(0).alias("is_canonical"),
-        )
+    return component_groups(
+        ids, connected_components(verified, src="doc_a", dst="doc_b")
     )
 
 

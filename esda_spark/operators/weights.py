@@ -36,11 +36,11 @@ the per-focal ranking partitions by point id (uniform), not by cell.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from esda_spark.plans import gate
 from esda_spark.plans.cells import (
     cell_key,
     expand_ring,
@@ -50,48 +50,20 @@ from esda_spark.plans.cells import (
 
 EDGE_COLS = ("focal", "neighbor", "weight")
 
-# Level-0 ring-candidate rows below which skewed inputs skip the
-# quadtree refinement entirely: one round-1 settlement over <= this
-# many (focal, candidate) pairs is cheaper than the density pass it
-# replaces.  Env ESDA_SPARK_FLAT_RING_BUDGET overrides (0 disables the
-# flat gate so every skewed input refines, as before round 5).
-# Sized by measurement, not by what fits in memory: the quadtree pass
-# it would skip costs ~10 s of fixed jobs, and a settlement frame
-# shuffles ~36 B/candidate through the top-k window sort, so the
-# crossover sits at the ~1e7 pairs a round-1 sort absorbs in a few
-# seconds.  (The original 2e8 — "fits comfortably in a shuffle" — sent
-# the 150k orders table flat at 86M pairs, turning a 23 s build into
-# 255 s of shuffle-bound sort, core-count-independent; see BASELINE.md
-# round 5.)
-_FLAT_CANDIDATE_BUDGET = int(
-    float(os.environ.get("ESDA_SPARK_FLAT_RING_BUDGET", 1e7))
-)
-
-# optional phase profiling (round-6 measurement; zero cost when unset)
-_PROF = bool(os.environ.get("ESDA_SPARK_PROF"))
-
-
-def _prof(label: str, t0: float) -> float:
-    import sys
-    import time
-
-    t1 = time.perf_counter()
-    if _PROF:
-        print(f"[prof] {label}: {t1 - t0:.3f}s", file=sys.stderr, flush=True)
-    return t1
-
-
 def _estimate_cell_size(points: DataFrame, k: int) -> float:
     """Pick a cell size so one cell holds ~k points on average: the
     k-th neighbor distance (~ s * sqrt(1/pi) ~ 0.56 s) then sits inside
     the radius-1 settlement guard, so the first 3x3 ring (~9k
     candidates) settles nearly every point in one pass while keeping
-    the candidate join as small as the guard allows."""
+    the candidate join as small as the guard allows.  An empty input
+    gets a unit cell (there is nothing to settle)."""
     row = points.agg(
         F.min("x").alias("x0"), F.max("x").alias("x1"),
         F.min("y").alias("y0"), F.max("y").alias("y1"),
         F.count("*").alias("n"),
     ).collect()[0]
+    if not row.n:
+        return 1.0
     area = max((row.x1 - row.x0) * (row.y1 - row.y0), 1e-12)
     return max(math.sqrt(1.0 * k * area / max(row.n, 1)), 1e-9)
 
@@ -119,21 +91,20 @@ def knn_edges(
     exact; only candidate generation adapts.
     """
     base = points.select("id", "x", "y")
-    # Broadcast-kernel fast path (round 6): when the point set fits the
-    # broadcast gate, the whole build — candidate generation, exact
-    # (d2, neighbor) top-k, settlement, straggler brute force — runs
-    # vectorized inside ONE mapInPandas job with zero shuffles, instead
-    # of ~10 fixed jobs of density metadata + per-round joins + window
-    # sorts.  Bit-identical results (same IEEE d2, same tie-break, same
-    # guard); the distributed path below is unchanged above the gate.
-    from esda_spark.operators.knn_incore import (
-        INCORE_MAX_TARGETS,
-        knn_edges_incore,
-    )
+    # Broadcast-kernel fast path: when the point set fits the
+    # ``knn_targets`` gate, the whole build — candidate generation,
+    # exact (d2, neighbor) top-k, settlement, straggler brute force —
+    # runs vectorized inside ONE mapInPandas job with zero shuffles,
+    # instead of ~10 fixed jobs of density metadata + per-round joins +
+    # window sorts.  Bit-identical results (same IEEE d2, same
+    # tie-break, same guard); the distributed path below runs above
+    # the gate.
+    from esda_spark.operators.knn_incore import knn_edges_incore
 
-    if INCORE_MAX_TARGETS and points.count() <= INCORE_MAX_TARGETS:
+    targets = gate.collect_if_fits(base, "knn_targets")
+    if targets is not None:
         return knn_edges_incore(
-            base, base, k, binary=binary, exclude_self=True,
+            base, targets, k, binary=binary, exclude_self=True,
             keep_d2=keep_d2,
         )
     # snapshot persistent-RDD ids before any materialization this build
@@ -187,8 +158,6 @@ def _density_levels(
     """
     from esda_spark.plans.cells import cell_xy, unpack_cell
 
-    import time as _time
-    _t = _time.perf_counter()
     src = density_src.select("x", "y")
     counts0 = (
         src.withColumn("_c", cell_key(F.col("x"), F.col("y"), cell_size))
@@ -198,7 +167,6 @@ def _density_levels(
     stats0 = counts0.agg(
         F.max("count").alias("mx"), F.sum("count").alias("tot")
     ).collect()[0]
-    _t = _prof("levels.counts0", _t)
     max0 = int(stats0.mx or 0)
     n_src = int(stats0.tot or 0)
     if max0 <= density_threshold:
@@ -215,11 +183,18 @@ def _density_levels(
     n_foc = n_src if same_side else focals.count()
     # k=1 callers raise the budget: their settlement is the map-side
     # min-struct aggregate, so candidates are combined before the
-    # exchange and never flow through a window sort.  The env override
-    # still disables the gate outright (budget 0 -> always refine).
-    budget = (_FLAT_CANDIDATE_BUDGET if flat_budget is None
-              else min(flat_budget, max(_FLAT_CANDIDATE_BUDGET, 1) * 20)
-              if _FLAT_CANDIDATE_BUDGET else 0)
+    # exchange and never flow through a window sort.  A zero gate
+    # still disables the flat tier outright (budget 0 -> always refine).
+    # The gate sits where measurement put it, not at what fits in
+    # memory: the quadtree pass it skips costs ~10 s of fixed jobs and
+    # a settlement frame shuffles ~36 B/candidate through the top-k
+    # window sort, so the crossover is the ~1e7 pairs a round-1 sort
+    # absorbs in a few seconds (2e8 sent the 150k orders table flat at
+    # 86M pairs: 23 s -> 255 s of shuffle-bound sort; BASELINE.md).
+    flat = gate.LIMITS["flat_ring_pairs"]
+    budget = (flat if flat_budget is None
+              else min(flat_budget, max(flat, 1) * 20)
+              if flat else 0)
     if 9 * n_foc * max0 > budget:
         cx, cy = unpack_cell(F.col("_c"))
         cgrid = counts0.select(
@@ -249,7 +224,6 @@ def _density_levels(
             .collect()[0][0]
             or 0
         )
-        _t = _prof("levels.ring_volume", _t)
     else:
         volume = 9 * n_foc * max0
     if volume <= budget:
@@ -326,7 +300,6 @@ def _density_levels(
     lvl_values = sorted(
         r["lvl"] for r in labeled.select("lvl").distinct().collect()
     )
-    _t = _prof("levels.assign+label", _t)
     levels = [(0, sparse0)] + [
         (lv, labeled.where(F.col("lvl") == lv).select("id", "x", "y"))
         for lv in lvl_values
@@ -406,9 +379,6 @@ def _knn_rounds_multi(
     results: list[DataFrame] = []
     min_rad = 1
     force_world = False
-    if _PROF:
-        import time as _time
-        _t0r = _time.perf_counter()
     for _ in range(max_rounds):
         # a straggler tail (<= 2048 focals) finishes in ONE broadcast
         # brute-force job instead of more doubling-ring rounds — each
@@ -525,14 +495,10 @@ def _knn_rounds_multi(
             .localCheckpoint(eager=False)
         )
         n_rem = unsettled.count()
-        if _PROF:
-            _t0r = _prof(f"rounds.round{len(results)} n_rem={n_rem}", _t0r)
         if n_rem == 0:
             break
         force_world = n_rem <= 2048
         min_rad *= 2
-    if _PROF:
-        _t0r = _prof(f"rounds.loop_done rounds={len(results)}", _t0r)
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
@@ -542,8 +508,6 @@ def _knn_rounds_multi(
     # RDD ids around the build and keep only the output's own blocks
     pids_mid = _pids()
     out = out.localCheckpoint(eager=True)
-    if _PROF:
-        _t0r = _prof("rounds.final_checkpoint", _t0r)
     keep = _pids() - pids_mid
     jmap = sc._jsc.getPersistentRDDs()
     for rid in (pids_mid - pids_before) - keep:

@@ -15,7 +15,7 @@ a fixed-width integer, not a string.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # World bounds used by the deterministic geocoder (degrees).
@@ -44,20 +44,6 @@ def cell_key(x: Column, y: Column, cell_size: float) -> Column:
 
 def pack_cell(cx: Column, cy: Column) -> Column:
     return F.shiftleft(cx + F.lit(1 << 20), _CY_BITS) + (cy + F.lit(1 << 20))
-
-
-def ring_offsets(spark: SparkSession, radius: int) -> DataFrame:
-    """All (dx, dy) offsets within Chebyshev distance ``radius``.
-
-    A tiny generated relation — always broadcast when joined against
-    the points table, so ring expansion never shuffles the big side.
-    """
-    r = int(radius)
-    return (
-        spark.range(-r, r + 1)
-        .toDF("dx")
-        .crossJoin(spark.range(-r, r + 1).toDF("dy"))
-    )
 
 
 def with_cell(df: DataFrame, cell_size: float, x: str = "x", y: str = "y",

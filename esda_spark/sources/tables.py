@@ -13,12 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
-
-
 def load_table(
     spark: SparkSession,
     name: str,
@@ -32,10 +26,6 @@ def load_table(
         # requires an Iceberg catalog configured on the session
         return spark.read.table(name)
     return spark.read.format(fmt).load(f"{sf_dir}/{name}")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TPCH_TABLES}
 
 
 def write_partitioned(

@@ -112,3 +112,25 @@ def test_raster_vector_tiling(spark):
     for r in rows:
         counts[r.poly_id] = counts.get(r.poly_id, 0) + 1
     assert counts == {0: 16, 1: 16, 2: 16, 3: 16}
+
+
+def test_pip_gate_bounds_vertices(spark, pts, monkeypatch):
+    """The PIP broadcast gate bounds total polygon vertices, not rings:
+    a layer under the ring count but over the vertex count takes the
+    carry-the-arrays path, with the same rows."""
+    from esda_spark.plans import gate
+
+    _, df = pts
+    polys = rotated_tiling(spark, 3, BBOX, theta=0.3)  # 9 rings, 36 vertices
+
+    def run():
+        out = point_in_polygon(df, polys, 3.0)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return sorted(tuple(r) for r in out.collect()), plan
+
+    bcast, plan = run()
+    assert "refine_bc(" in plan
+    monkeypatch.setitem(gate.LIMITS, "pip", 35)
+    carried, plan = run()
+    assert "refine_bc(" not in plan and "refine(" in plan
+    assert carried == bcast and len(bcast) == 200

@@ -116,12 +116,12 @@ def test_knn_flat_gate_parity_on_skewed_points(spark, monkeypatch):
     # skewed-but-small input: one hot cluster (hot cell > threshold)
     # plus a sparse field; the flat gate must pick a single level AND
     # produce the exact edge set the quadtree path produces
-    from esda_spark.operators import knn_incore as KI
     from esda_spark.operators import weights as W
+    from esda_spark.plans import gate
 
     # this test targets the DISTRIBUTED builder's flat-gate logic:
-    # disable the round-6 in-core fast path so it actually runs
-    monkeypatch.setattr(KI, "INCORE_MAX_TARGETS", 0)
+    # disable the in-core fast path so it actually runs
+    monkeypatch.setitem(gate.LIMITS, "knn_targets", 0)
 
     rng = np.random.default_rng(11)
     hot = rng.normal(loc=(5.0, 5.0), scale=0.05, size=(400, 2))
@@ -137,7 +137,7 @@ def test_knn_flat_gate_parity_on_skewed_points(spark, monkeypatch):
     assert [lv for lv, _ in levels] == [0], "flat gate should trigger"
 
     flat = knn_edges(pts, k=8, keep_d2=True)
-    monkeypatch.setattr(W, "_FLAT_CANDIDATE_BUDGET", 0)
+    monkeypatch.setitem(gate.LIMITS, "flat_ring_pairs", 0)
     quad = W.knn_edges(pts, k=8, keep_d2=True)
     assert (
         flat.exceptAll(quad).count() + quad.exceptAll(flat).count() == 0
@@ -152,6 +152,7 @@ def test_knn_flat_gate_budget_is_k_aware(spark, monkeypatch):
     # aggregate map-side and pass a raised flat_budget.  Fixture volume
     # ~165k ring pairs sits between the two.
     from esda_spark.operators import weights as W
+    from esda_spark.plans import gate
 
     rng = np.random.default_rng(11)
     hot = rng.normal(loc=(5.0, 5.0), scale=0.05, size=(400, 2))
@@ -162,7 +163,7 @@ def test_knn_flat_gate_budget_is_k_aware(spark, monkeypatch):
     base = pts.select("id", "x", "y")
     cs = W._estimate_cell_size(base, 8)
 
-    monkeypatch.setattr(W, "_FLAT_CANDIDATE_BUDGET", 100_000)
+    monkeypatch.setitem(gate.LIMITS, "flat_ring_pairs", 100_000)
     # default (k>1 window-sort) budget: volume exceeds it -> refine
     levels = W._density_levels(base, base, cs, 32, 12)
     assert [lv for lv, _ in levels] != [0], "should refine above budget"
@@ -171,8 +172,8 @@ def test_knn_flat_gate_budget_is_k_aware(spark, monkeypatch):
     levels1 = W._density_levels(base, base, cs, 32, 12,
                                 flat_budget=int(2e8))
     assert [lv for lv, _ in levels1] == [0], "k=1 budget should stay flat"
-    # env disable (module budget 0) wins over any explicit flat_budget
-    monkeypatch.setattr(W, "_FLAT_CANDIDATE_BUDGET", 0)
+    # a zero gate wins over any explicit flat_budget
+    monkeypatch.setitem(gate.LIMITS, "flat_ring_pairs", 0)
     levels0 = W._density_levels(base, base, cs, 32, 12,
                                 flat_budget=int(2e8))
     assert [lv for lv, _ in levels0] != [0], "budget 0 must always refine"

@@ -4,7 +4,8 @@ Builds points + exact kNN(8) once, then alternates
 conditional_randomization(mode="broadcast") / (mode="tiled") for REPS
 rounds each (interleaving cancels the shared VM's drift), reporting
 per-mode samples, min and median.  This is the measurement behind the
-``_AUTO_TILED_ROWS`` crossover documented in PLANS.md / crand.py.
+``crand_tiled_sites`` crossover in ``esda_spark/plans/gate.py::LIMITS``
+(documented in PLANS.md / crand.py).
 
 Usage: python tools/ab_crand.py [n] [perms] [reps] [tiles]
 """
