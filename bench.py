@@ -333,11 +333,12 @@ def _kernel_task(args):
     z = rng.normal(size=n)
     P = vec_permutations(card, n, k, 12345)
     ids = np.sort(rng.choice(n, m, replace=False))
-    wl = [np.full(card, 1.0 / card)] * m
+    cards = np.full(m, card)
+    flat_w = np.full(m * card, 1.0 / card)
     obs = rng.normal(size=m)
     t0 = time.perf_counter()
     crand_partition(
-        ids, obs, np.zeros(m), wl, z, P, "moran_local",
+        ids, obs, np.zeros(m), cards, flat_w, z, P, "moran_local",
         scaling=1.0, island_weight=0.0, alternative="directed",
         keep=False, permutations=k,
     )

@@ -14,10 +14,16 @@ Re-expression of the reference engine (``crand.py:59-243`` driver,
    deviation is tile-conditional permutation (permute within salted
    spatial tiles).  At 1e8 sites the broadcast is 800 MB — fine for
    cluster executors.
-3. The per-site neighborhood (sorted neighbor weights) is gathered
-   with ``groupBy(focal).agg(sort_array(collect_list(...)))`` — the
-   shuffle plays the role of the reference's joblib chunking
-   (``crand.py:360-459``); one Arrow batch ≈ one chunk.
+3. The per-site neighborhood arrives as flat rows: one
+   ``(id=focal, neighbor, w)`` row per edge plus one marker row per
+   site carrying the observed statistic (or the site's value), hash
+   partitioned on ``id`` into one task per core and sorted by
+   ``(id, neighbor, w)`` inside each partition.  Only three primitive
+   columns cross the Arrow boundary (no ``list<double>`` column, no
+   aggregate); the kernel cuts the sorted stream into sites in numpy,
+   carrying a site whose rows straddle an Arrow batch into the next,
+   and the shuffle plays the role of the reference's joblib chunking
+   (``crand.py:360-459``).
 4. A ``mapInPandas`` kernel evaluates all k simulations with NO
    (m, k, c) temporaries at all: the reference's masked draw
    ``z_no_i[P] = z[P + (P >= i)]`` (``_prepare_univariate``,
@@ -45,7 +51,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from esda_spark.functions.mathx import norm_sf
 from esda_spark.operators.significance import permutation_significance
+from esda_spark.operators.weights import transform_weights
 from esda_spark.plans import gate
 
 # Site-chunk budget (m*k) and rep-block width for the streaming path;
@@ -53,6 +61,8 @@ from esda_spark.plans import gate
 # what makes the kernel scale with cores instead of RAM bandwidth.
 _CHUNK_ELEMS = 8_000_000
 _REP_BLOCK = 2048
+# Sites per crand_partition call on the flat path (its streaming chunk).
+_SITE_CHUNK = 8192
 
 # mode="auto" switchover (gate ``crand_tiled_sites``): below it the
 # broadcast path (driver collect + broadcast of the value vector)
@@ -234,17 +244,275 @@ def gather_neighborhoods(
     return out
 
 
-def _moment_cols(res: dict, obs: np.ndarray, e_sim, v_sim) -> None:
-    from esda_spark.functions.mathx import norm_sf
+def _p_schema(moments: bool, keep: bool) -> str:
+    """Schema of the p columns a crand kernel appends."""
+    out = ", p_sim double"
+    if moments:
+        out += ", E_sim double, V_sim double, z_sim double, p_z_sim double"
+    if keep:
+        out += ", sims array<double>"
+    return out
 
-    se = np.sqrt(v_sim)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        z_sim = np.where(se > 0, (obs - e_sim) / se, np.nan)
-    res["E_sim"] = e_sim
-    res["V_sim"] = v_sim
-    res["z_sim"] = z_sim
-    res["p_z_sim"] = np.where(
-        np.isfinite(z_sim), norm_sf(np.abs(z_sim)), np.nan
+
+def _p_frame(res: dict, rows, obs, selfws, cards, flat_w, z, P_full,
+             kw: dict, moments: bool) -> pd.DataFrame:
+    """Run :func:`crand_partition` on one batch of sites (``rows``:
+    their rows in ``z``) and append its p columns to ``res``."""
+    if (rows < 0).any():
+        raise ValueError("observed contains ids absent from values")
+    p_out, sims_out, e_sim, v_sim = crand_partition(
+        rows, obs, selfws, cards, flat_w, z, P_full, **kw
+    )
+    res["p_sim"] = p_out
+    if moments:
+        se = np.sqrt(v_sim)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            z_sim = np.where(se > 0, (obs - e_sim) / se, np.nan)
+        res.update(E_sim=e_sim, V_sim=v_sim, z_sim=z_sim, p_z_sim=np.where(
+            np.isfinite(z_sim), norm_sf(np.abs(z_sim)), np.nan))
+    if kw["keep"]:
+        res["sims"] = sims_out
+    return pd.DataFrame(res)
+
+
+def _flatten(wl) -> tuple[np.ndarray, np.ndarray]:
+    """Per-site neighbor weight lists -> (cards, flat_w) buffers."""
+    cards = np.fromiter((len(w) for w in wl), dtype=np.int64, count=len(wl))
+    flat_w = (
+        np.concatenate([np.asarray(w, dtype=np.float64) for w in wl if len(w)])
+        if cards.sum() else np.empty(0)
+    )
+    return cards, flat_w
+
+
+def _max_card(edges: DataFrame) -> int:
+    """Most non-self edges at one focal: the permutation table width
+    (transform-independent, so raw edges serve)."""
+    return int(
+        edges.where(F.col("focal") != F.col("neighbor"))
+        .groupBy("focal").count()
+        .agg(F.max("count")).collect()[0][0] or 1
+    )
+
+
+def _broadcast_setup(values: DataFrame, permutations: int, seed: int,
+                     scaling: float | None, max_card):
+    """Driver side of the broadcast regime: collect the value table
+    (the permutation-table width job ``max_card()`` runs concurrently),
+    then broadcast it with the shared permutation table.  Returns
+    (n, ids, z, table, scaling) — ``ids`` broadcasts the sorted value
+    ids, or None when they are dense 0..n-1 (a site's row in z is then
+    its id); otherwise sites index z by rank."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    sc = values.sparkSession.sparkContext
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        card = pool.submit(max_card) if permutations else None
+        pdf = values.toPandas()
+        width = card.result() if card else None
+    ids = pdf["id"].to_numpy(np.int64)
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    if (ids[1:] == ids[:-1]).any():
+        raise ValueError("conditional_randomization requires unique value ids")
+    z = pdf[[c for c in values.columns if c != "id"]].to_numpy(np.float64)
+    z = z[order] if z.shape[1] > 1 else z[order, 0]
+    n = len(z)
+    if scaling is None:
+        z0 = z if z.ndim == 1 else z[:, 0]
+        scaling = (n - 1) / float((z0 * z0).sum())
+    dense = bool((ids == np.arange(n)).all())
+    table = vec_permutations(width, n, permutations, seed) if width else None
+    return (n, sc.broadcast(None if dense else ids), sc.broadcast(z),
+            sc.broadcast(table), float(scaling))
+
+
+def _rank(ids: np.ndarray | None, n: int, q: np.ndarray) -> np.ndarray:
+    """Row of each id of ``q`` in the sorted value ids (``None``: dense
+    0..n-1), -1 where absent."""
+    if ids is None:
+        return np.where((q >= 0) & (q < n), q, -1)
+    pos = np.minimum(np.searchsorted(ids, q), max(n - 1, 0))
+    return np.where(ids[pos] == q, pos, -1) if n else np.full(len(q), -1)
+
+
+# Marker rows carry this in the neighbor slot: it sorts before every
+# real neighbor id, so each site's rows open with its marker.
+_MARK = -(1 << 63)
+
+
+def _site_runs(batches: Iterator[pd.DataFrame], min_sites: int):
+    """Yield (id, neighbor, w) arrays holding whole sites, more than
+    ``min_sites`` marker rows each except the last: the rows of the
+    partition's last site so far may continue in the next Arrow batch,
+    so they carry over."""
+    parts, marks = [], 0
+    for pdf in batches:
+        cols = (pdf["id"].to_numpy(np.int64),
+                pdf["neighbor"].to_numpy(np.int64),
+                pdf["w"].to_numpy(np.float64))
+        parts.append(cols)
+        marks += int((cols[1] == _MARK).sum())
+        if marks <= min_sites:
+            continue
+        ids, nb, w = (np.concatenate(c) for c in zip(*parts))
+        cut = int(np.searchsorted(ids, ids[-1]))
+        if cut:
+            yield ids[:cut], nb[:cut], w[:cut]
+        parts = [(ids[cut:], nb[cut:], w[cut:])]
+        marks = int((nb[cut:] == _MARK).sum())
+    if parts:
+        ids, nb, w = (np.concatenate(c) for c in zip(*parts))
+        if len(ids):
+            yield ids, nb, w
+
+
+def _sites(ids: np.ndarray, nb: np.ndarray, w: np.ndarray):
+    """Cut an id-sorted run into sites: (site ids, marker values, site
+    index / neighbor / w of every edge row).  Sites without a marker
+    row (edges whose focal is not scored) drop out."""
+    new = np.r_[True, ids[1:] != ids[:-1]]
+    marked = nb[new] == _MARK
+    if not marked.all():
+        keep = marked[np.cumsum(new) - 1]
+        ids, nb, w = ids[keep], nb[keep], w[keep]
+        new = np.r_[True, ids[1:] != ids[:-1]]
+    edge = nb != _MARK
+    seg = (np.cumsum(new) - 1)[edge]
+    return ids[new], w[new], seg, nb[edge], w[edge]
+
+
+def _flat_crand(
+    values: DataFrame,
+    edges: DataFrame,
+    marks: DataFrame,
+    stat_func: str,
+    permutations: int,
+    seed: int,
+    scaling: float | None,
+    island_weight: float,
+    alternative: str,
+    keep: bool,
+    moments: bool,
+    local: tuple | None = None,
+) -> DataFrame:
+    """Broadcast-regime crand on flat, focal-sorted edge rows.
+
+    ``marks`` holds one (id, w) row per site: the observed statistic,
+    or with ``local`` = (value_col, style, obs_col, observe) the site's
+    value.  In the latter case the kernel also forms, from the
+    broadcast value vector, the site's spatial lag and row moments wi /
+    wi2 under the weight ``style`` (R: sums of raw weights divided by
+    the row sum afterwards, each neighbor weight the single division
+    ``w / rowsum`` a windowed row-standardization makes; B: unit
+    weights; O: weights as given) and the observed value
+    ``observe(value, lag)``.  Edges to ids absent from ``values``
+    drop out of the lag, as in a join.  Returns (id, p columns) or,
+    with ``local``, (id, value_col, lag, wi, wi2, obs_col [, p cols])."""
+    n, ids_bc, z_bc, perm_bc, scaling = _broadcast_setup(
+        values, permutations, seed, scaling, lambda: _max_card(edges))
+    kw = dict(
+        scaling=scaling, island_weight=float(island_weight),
+        alternative=alternative, keep=keep, permutations=permutations,
+        stat_func=stat_func,
+    )
+    wcol = F.col("weight")
+    out_schema = "id long"
+    if local is not None:
+        value_col, style, obs_col, observe = local
+        style = style.upper()
+        if style not in ("R", "B", "O"):
+            edges, style = transform_weights(edges, style), "O"
+        if style == "B":
+            wcol = F.lit(1.0)
+        out_schema += (f", {value_col} double, lag double, wi double,"
+                       f" wi2 double, {obs_col} double")
+    if permutations:
+        out_schema += _p_schema(moments, keep)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        z, vids = z_bc.value, ids_bc.value
+        for run in _site_runs(batches, _SITE_CHUNK):
+            sid, mark, seg, nb, w = _sites(*run)
+            m = len(sid)
+            res, obs = {"id": sid}, mark
+            if local is not None:
+                pos = _rank(vids, n, nb)
+                ok = pos >= 0
+                if not ok.all():
+                    seg, nb, w, pos = seg[ok], nb[ok], w[ok], pos[ok]
+            is_self = nb == sid[seg]
+            selfw = np.zeros(m)
+            if is_self.any():
+                top = np.full(m, -np.inf)
+                np.maximum.at(top, seg[is_self], w[is_self])
+                selfw = np.where(np.isneginf(top), 0.0, top)
+            if local is not None:
+                wi = np.bincount(seg, weights=w, minlength=m)
+                lag = np.bincount(seg, weights=w * z[pos], minlength=m)
+                wi2 = np.bincount(seg, weights=w * w, minlength=m)
+                if style == "R":
+                    safe = np.where(wi != 0.0, wi, 1.0)
+                    lag, wi, wi2 = lag / safe, wi / safe, wi2 / (safe * safe)
+                    w, selfw = w / safe[seg], selfw / safe
+                obs = observe(mark, lag)
+                res.update({value_col: mark, "lag": lag, "wi": wi,
+                            "wi2": wi2, obs_col: obs})
+            if not permutations:
+                yield pd.DataFrame(res)
+                continue
+            yield _p_frame(
+                res, _rank(vids, n, sid), obs, selfw,
+                np.bincount(seg[~is_self], minlength=m), w[~is_self],
+                z, perm_bc.value, kw, moments,
+            )
+
+    edge_rows = edges.select(
+        F.col("focal").cast("long").alias("id"),
+        F.col("neighbor").cast("long"), wcol.cast("double").alias("w"),
+    )
+    mark_rows = marks.where(F.col("w").isNotNull()).select(
+        F.col("id").cast("long"), F.lit(_MARK).alias("neighbor"),
+        F.col("w").cast("double"),
+    )
+    # one task per core (REPARTITION_BY_NUM: AQE keeps the count); a
+    # site's rows land contiguous, marker first, neighbors ascending
+    sc = values.sparkSession.sparkContext
+    return (
+        edge_rows.unionByName(mark_rows)
+        .repartition(sc.defaultParallelism, "id")
+        .sortWithinPartitions("id", "neighbor", "w")
+        .mapInPandas(kernel, schema=out_schema)
+    )
+
+
+def local_crand(
+    values: DataFrame,
+    edges: DataFrame,
+    transformation: str,
+    observe,
+    obs_col: str,
+    stat_func: str,
+    permutations: int = 999,
+    seed: int = 12345,
+    scaling: float | None = None,
+    alternative: str = "directed",
+    keep: bool = False,
+    moments: bool = False,
+) -> DataFrame:
+    """(id, value, lag, wi, wi2, obs_col [, p_sim ...]) for every row
+    of ``values`` (id, value) in the broadcast regime, in ONE flat
+    exchange: a local statistic whose observed value is a function of
+    the site's value and its spatial lag — ``observe(value, lag)``
+    (numpy arrays in) — gets the lag, the row moments and its
+    conditional-randomization p columns from the same pass over the
+    RAW ``edges``, weighted by ``transformation`` (R/B/O in-kernel, D/V
+    pre-transformed).  With ``permutations=0`` only the site columns."""
+    value_col = [c for c in values.columns if c != "id"][0]
+    return _flat_crand(
+        values, edges, values.select("id", F.col(value_col).alias("w")),
+        stat_func, permutations, seed, scaling, 0.0, alternative, keep,
+        moments, local=(value_col, transformation, obs_col, observe),
     )
 
 
@@ -264,19 +532,20 @@ def conditional_randomization(
     tiles: int = 64,
     gathered: DataFrame | None = None,
     n_sites: int | None = None,
-    base: DataFrame | None = None,
-    max_card: int | None = None,
 ) -> DataFrame:
     """Per-site pseudo p-values under conditional permutation.
 
-    values:   (id, z) or (id, zx, zy, ...) with dense ids 0..n-1
+    values:   (id, z) or (id, zx, zy, ...), one row per unique id; a
+              site draws from the values of the n-1 other rows
     edges:    transformed weight edges; self-loops become self-weights
     observed: (id, observed) — the statistic being tested
     moments:  also emit E_sim/V_sim/z_sim/p_z_sim per site (reference
               ``moran.py:1386-1399``; V is the ddof=0 variance of sims)
     mode:     "broadcast" (exact reference semantics: every site draws
               from the full n-1 other values; z vector + shared perm
-              table broadcast — caps at ~1e8-1e9 sites/executor heap)
+              table broadcast, neighborhoods streamed to the kernel as
+              flat focal-sorted edge rows — caps at ~1e8-1e9
+              sites/executor heap)
               or "tiled" (beyond-broadcast deviation: sites hash into
               ``tiles`` random tiles and draws come from the tile's
               value pool.  Tiles are uniform random samples of the
@@ -302,178 +571,72 @@ def conditional_randomization(
               the edge re-aggregation).
     n_sites:  row count of ``values`` if the caller already knows it —
               skips the count job mode="auto" otherwise runs per call.
-    base:     optional prebuilt site frame with AT LEAST
-              (id, observed, wlist, self_weight) — wlist the per-site
-              neighbor weights sorted by neighbor id, self_weight the
-              self-loop weight.  A local statistic that already
-              aggregates the edge table per focal (spatial lag, wi/wi2
-              moments) can emit the gathered neighborhood from the
-              SAME groupBy and hand it here: the broadcast path then
-              runs the kernel directly on it — no second edge
-              aggregation, no output join (every non-wlist column is
-              passed through next to the p columns).  Ignored by the
-              tiled path (which owns its one-exchange assembly).
-    Returns (id, p_sim [, moment cols] [, sims array<double>]), or the
-    passthrough columns + p columns when ``base`` is used.
+    Returns (id, p_sim [, moment cols] [, sims array<double>]).
     """
     if mode == "auto":
         if n_sites is None:
             n_sites = values.count()
         mode = ("tiled" if n_sites >= gate.LIMITS["crand_tiled_sites"]
                 else "broadcast")
+    args = (stat_func, permutations, seed, scaling, island_weight,
+            alternative, keep, moments)
     if mode == "tiled":
-        return _crand_tiled(
-            values, edges, observed, stat_func, permutations, seed,
-            scaling, island_weight, alternative, keep, moments, tiles,
-            gathered=gathered,
-        )
-    kernel = KERNELS[stat_func]
-    spark = values.sparkSession
-    sc = spark.sparkContext
+        return _crand_tiled(values, edges, observed, *args, tiles,
+                            gathered=gathered)
+    if gathered is None:
+        marks = observed.select("id", F.col("observed").alias("w"))
+        return _flat_crand(values, edges, marks, *args)
+    return _crand_gathered(values, observed, gathered, *args)
 
-    zcols = [c for c in values.columns if c != "id"]
-    pdf = values.toPandas()  # unsorted collect; sort driver-side (cheap)
-    n = len(pdf)
-    ids_np = pdf["id"].to_numpy(np.int64)
-    order_np = np.argsort(ids_np, kind="stable")
-    if not (ids_np[order_np] == np.arange(n)).all():
-        raise ValueError("conditional_randomization requires dense ids 0..n-1")
-    z_np = pdf[zcols].to_numpy(dtype=np.float64)[order_np]
-    if z_np.shape[1] == 1:
-        z_np = z_np[:, 0]
 
-    if scaling is None:
-        if z_np.ndim == 1:
-            scaling = (n - 1) / float((z_np * z_np).sum())
-        else:
-            scaling = (n - 1) / float((z_np[:, 0] ** 2).sum())
-
-    parallelism = max(sc.defaultParallelism, 8)
-    passthrough = None
-    if base is not None:
-        # prebuilt site frame: the caller's focal-keyed aggregate
-        # already holds (observed, wlist, self_weight) — the kernel
-        # runs directly on it (LAZY: the base assembly streams into
-        # the kernel inside ONE job, the shape the round-5 scaling
-        # evidence was built on) with every non-wlist column passed
-        # through (no output join).  ``max_card`` comes from the
-        # caller (one cheap aggregate over the raw edges, overlapped
-        # with the caller's own value aggregate).
-        passthrough = [f for f in base.schema.fields if f.name != "wlist"]
-        if max_card is None:
-            max_card = base.agg(
-                F.max(F.size("wlist"))
-            ).collect()[0][0] or 1
-    elif gathered is None:
-        max_card = (
-            edges.where(F.col("focal") != F.col("neighbor"))
-            .groupBy("focal").count()
-            .agg(F.max("count")).collect()[0][0] or 1
-        )
-        # join-free base (same shape as the tiled path): edges and
-        # observed union into one long-form table; ONE explicit
-        # repartition both gathers and spreads the CPU-bound kernel
-        # (REPARTITION_BY_NUM also pins the partition count against
-        # AQE coalescing, which would otherwise shrink a small gather
-        # to a handful of kernel tasks) — the former shape paid the
-        # gather exchange AND a second full repartition of the wlist
-        dnull = F.lit(None).cast("double")
-        edge_rows = edges.select(
-            F.col("focal").alias("id"),
-            F.when(F.col("focal") != F.col("neighbor"), F.col("neighbor"))
-            .alias("neighbor"),
-            F.col("weight"),
-            dnull.alias("observed"),
-            F.when(F.col("focal") == F.col("neighbor"), F.col("weight"))
-            .alias("self_weight"),
-        )
-        obs_rows = observed.select(
-            "id", F.lit(None).cast("long").alias("neighbor"),
-            dnull.alias("weight"), F.col("observed"),
-            dnull.alias("self_weight"),
-        )
-        base = (
-            edge_rows.unionByName(obs_rows)
-            .repartition(parallelism, "id")
-            .groupBy("id")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(CASE WHEN neighbor"
-                    " IS NOT NULL THEN struct(neighbor, weight) END)),"
-                    " s -> s.weight)"
-                ).alias("wlist"),
-                F.max("observed").alias("observed"),
-                F.coalesce(F.max("self_weight"), F.lit(0.0))
-                .alias("self_weight"),
-            )
-            .where(F.col("observed").isNotNull())
-            .select("id", "observed", "wlist", "self_weight")
-        )
-    else:
-        # precomputed (and typically checkpointed) gather: derive the
-        # cardinality bound from it instead of re-scanning the edges
-        max_card = (
-            gathered.agg(F.max(F.size("wlist"))).collect()[0][0] or 1
-        )
-        base = (
-            observed.join(gathered, "id", "left")
-            .select(
-                "id", "observed",
-                F.coalesce("wlist", F.array()).alias("wlist"),
-                F.coalesce("self_weight", F.lit(0.0)).alias("self_weight"),
-            )
-            .repartition(parallelism)  # spread the CPU-bound kernel
-        )
-    perm_table = vec_permutations(int(max_card), n, permutations, seed)
-
-    z_bc = sc.broadcast(z_np)
-    perm_bc = sc.broadcast(perm_table)
-
-    if passthrough is not None:
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in passthrough
-        )
-    else:
-        out_schema = "id long"
-    out_schema += ", p_sim double"
-    if moments:
-        out_schema += (", E_sim double, V_sim double, z_sim double,"
-                       " p_z_sim double")
-    if keep:
-        out_schema += ", sims array<double>"
+def _crand_gathered(
+    values: DataFrame,
+    observed: DataFrame,
+    gathered: DataFrame,
+    stat_func: str,
+    permutations: int,
+    seed: int,
+    scaling: float | None,
+    island_weight: float,
+    alternative: str,
+    keep: bool,
+    moments: bool,
+) -> DataFrame:
+    """Broadcast regime over a precomputed (typically persisted)
+    :func:`gather_neighborhoods` frame: the table width comes from it
+    instead of a re-scan of the edges, and each site's wlist joins to
+    its observed value."""
+    n, ids_bc, z_bc, perm_bc, scaling = _broadcast_setup(
+        values, permutations, seed, scaling,
+        lambda: gathered.agg(F.max(F.size("wlist"))).collect()[0][0] or 1)
     kw = dict(
-        scaling=float(scaling), island_weight=float(island_weight),
+        scaling=scaling, island_weight=float(island_weight),
         alternative=alternative, keep=keep, permutations=permutations,
         stat_func=stat_func,
     )
-    pass_names = [f.name for f in passthrough] if passthrough else None
+    sc = values.sparkSession.sparkContext
+    base = (
+        observed.join(gathered, "id", "left")
+        .select(
+            "id", "observed",
+            F.coalesce("wlist", F.array()).alias("wlist"),
+            F.coalesce("self_weight", F.lit(0.0)).alias("self_weight"),
+        )
+        .repartition(max(sc.defaultParallelism, 8))  # spread the kernel
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        z = z_bc.value
-        P_full = perm_bc.value
-        for pdf_b in batches:
-            m_all = len(pdf_b)
-            if m_all == 0:
-                continue
-            ids = pdf_b["id"].to_numpy(np.int64)
-            obs = pdf_b["observed"].to_numpy(np.float64)
-            selfws = pdf_b["self_weight"].to_numpy(np.float64)
-            wl = pdf_b["wlist"].tolist()
-            p_out, sims_out, e_sim, v_sim = crand_partition(
-                ids, obs, selfws, wl, z, P_full, **kw
+        for pdf in batches:
+            ids = pdf["id"].to_numpy(np.int64)
+            yield _p_frame(
+                {"id": ids}, _rank(ids_bc.value, n, ids),
+                pdf["observed"].to_numpy(np.float64),
+                pdf["self_weight"].to_numpy(np.float64),
+                *_flatten(pdf["wlist"]), z_bc.value, perm_bc.value, kw,
+                moments,
             )
-            if pass_names is not None:
-                res = {c: pdf_b[c] for c in pass_names}
-            else:
-                res = {"id": ids}
-            res["p_sim"] = p_out
-            if moments:
-                _moment_cols(res, obs, e_sim, v_sim)
-            if kw["keep"]:
-                res["sims"] = sims_out
-            yield pd.DataFrame(res)
 
-    return base.mapInPandas(run, schema=out_schema)
+    return base.mapInPandas(run, schema="id long" + _p_schema(moments, keep))
 
 
 def _crand_tiled(
@@ -621,39 +784,36 @@ def _crand_tiled(
             ))
         )
 
-    out_schema = "id long, p_sim double"
-    if moments:
-        out_schema += (", E_sim double, V_sim double, z_sim double,"
-                       " p_z_sim double")
-    if keep:
-        out_schema += ", sims array<double>"
+    out_schema = "id long" + _p_schema(moments, keep)
     kw = dict(
         scaling=float(scaling), island_weight=float(island_weight),
         alternative=alternative, keep=keep, permutations=permutations,
         stat_func=stat_func,
     )
 
-    def run_tile(key, base_pdf, pool_pdf):
-        tile = int(key[0])
-        if len(base_pdf) and len(pool_pdf) == 0:
-            # loud, like the lids check below: silently dropping the
-            # tile's sites would be an empty-output correctness hole
+    def sweep(tile, vals, site_ids, obs, selfws, wl):
+        """crand over one tile: draws come from the tile's value pool
+        ``vals``; tile-local dense index = rank of id within the pool
+        (one sort of the tile's ids, no window and no extra shuffle)."""
+        if len(site_ids) and not len(vals):
+            # loud: silently dropping the tile's sites would be an
+            # empty-output correctness hole
             raise ValueError(
-                f"tile {tile} has {len(base_pdf)} observed sites but an "
+                f"tile {tile} has {len(site_ids)} observed sites but an "
                 "empty value pool; values must cover every site's tile"
             )
-        if len(base_pdf) == 0 or len(pool_pdf) == 0:
+        if not len(site_ids):
             return pd.DataFrame(
                 {c.split(" ")[0]: [] for c in out_schema.split(", ")}
             )
-        pool_sorted = pool_pdf.sort_values("pid")
-        pool_ids = pool_sorted["pid"].to_numpy(np.int64)
-        z = pool_sorted[zcols].to_numpy(np.float64)
+        vals = vals.sort_values("pid")
+        pool_ids = vals["pid"].to_numpy(np.int64)
+        z = vals[zcols].to_numpy(np.float64)
         if z.shape[1] == 1:
             z = z[:, 0]
-        n_t = len(pool_sorted)
-        wl = base_pdf["wlist"].tolist()
-        max_card = max((len(w) for w in wl), default=1) or 1
+        n_t = len(pool_ids)
+        cards, flat_w = _flatten(wl)
+        max_card = int(cards.max(initial=0)) or 1
         if max_card >= n_t - 1:
             raise ValueError(
                 f"tile {tile} has {n_t} sites but a site with {max_card} "
@@ -664,96 +824,40 @@ def _crand_tiled(
             max_card, n_t, kw["permutations"],
             seed ^ (0x9E3779B9 * (tile + 1) & 0x7FFFFFFF),
         )
-        # tile-local dense index = rank of id within the tile pool
-        # (formerly a window over the values table; in-kernel it costs
-        # one sort of the tile's ids and no extra shuffle)
-        base_ids = base_pdf["id"].to_numpy(np.int64)
-        lids = np.searchsorted(pool_ids, base_ids)
-        if (lids >= n_t).any() or not (pool_ids[lids] == base_ids).all():
+        lids = _rank(pool_ids, n_t, site_ids)
+        if (lids < 0).any():
             raise ValueError(
-                f"tile {tile}: observed contains ids absent from values"
+                f"tile {tile}: observed contains ids absent from values "
+                "(a gathered input's tiles/seed must match this call's)"
             )
-        obs = base_pdf["observed"].to_numpy(np.float64)
-        selfws = base_pdf["self_weight"].to_numpy(np.float64)
-        p_out, sims_out, e_sim, v_sim = crand_partition(
-            lids, obs, selfws, wl, z, P_full, **kw
+        return _p_frame({"id": site_ids}, lids, obs, selfws, cards, flat_w,
+                        z, P_full, kw, moments)
+
+    def run_tile(key, base_pdf, pool_pdf):
+        return sweep(
+            int(key[0]), pool_pdf, base_pdf["id"].to_numpy(np.int64),
+            base_pdf["observed"].to_numpy(np.float64),
+            base_pdf["self_weight"].to_numpy(np.float64), base_pdf["wlist"],
         )
-        res = {"id": base_pdf["id"].to_numpy(np.int64), "p_sim": p_out}
-        if moments:
-            _moment_cols(res, obs, e_sim, v_sim)
-        if kw["keep"]:
-            res["sims"] = sims_out
-        return pd.DataFrame(res)
 
     def run_tile_gathered(key, base_pdf, pool_pdf):
-        tile = int(key[0])
-        empty = pd.DataFrame(
-            {c.split(" ")[0]: [] for c in out_schema.split(", ")}
-        )
         kind = pool_pdf["_kind"].to_numpy()
         obs_pdf = pool_pdf[kind == 1]
-        val_pdf = pool_pdf[kind == 0]
-        if len(obs_pdf) and len(val_pdf) == 0:
-            raise ValueError(
-                f"tile {tile} has {len(obs_pdf)} observed sites but an "
-                "empty value pool; values must cover every site's tile"
-            )
-        if len(obs_pdf) == 0 or len(val_pdf) == 0:
-            return empty
-        pool_sorted = val_pdf.sort_values("pid")
-        pool_ids = pool_sorted["pid"].to_numpy(np.int64)
-        z = pool_sorted[zcols].to_numpy(np.float64)
-        if z.shape[1] == 1:
-            z = z[:, 0]
-        n_t = len(pool_sorted)
         site_ids = obs_pdf["pid"].to_numpy(np.int64)
-        obs = obs_pdf["_obs"].to_numpy(np.float64)
         # neighborhood lookup: a site absent from the gather is an
         # island (empty wlist) — same semantics as the union path
         bids = base_pdf["id"].to_numpy(np.int64)
         border = np.argsort(bids, kind="stable")
-        bsort = bids[border]
-        if len(bsort):
-            pos = np.minimum(
-                np.searchsorted(bsort, site_ids), len(bsort) - 1
-            )
-            has = bsort[pos] == site_ids
-            sw_all = base_pdf["self_weight"].to_numpy(np.float64)
-            selfws = np.where(has, sw_all[border[pos]], 0.0)
-            wl_all = base_pdf["wlist"].to_numpy()
-            wl = [
-                wl_all[border[p]] if ok else []
-                for p, ok in zip(pos, has)
-            ]
-        else:
-            selfws = np.zeros(len(site_ids))
-            wl = [[] for _ in site_ids]
-        max_card = max((len(w) for w in wl), default=1) or 1
-        if max_card >= n_t - 1:
-            raise ValueError(
-                f"tile {tile} has {n_t} sites but a site with {max_card} "
-                "neighbors; use fewer tiles so each tile's pool exceeds "
-                "the max cardinality"
-            )
-        P_full = vec_permutations(
-            max_card, n_t, kw["permutations"],
-            seed ^ (0x9E3779B9 * (tile + 1) & 0x7FFFFFFF),
-        )
-        lids = np.searchsorted(pool_ids, site_ids)
-        if (lids >= n_t).any() or not (pool_ids[lids] == site_ids).all():
-            raise ValueError(
-                f"tile {tile}: observed contains ids absent from values "
-                "(gathered tiles/seed must match this call's)"
-            )
-        p_out, sims_out, e_sim, v_sim = crand_partition(
-            lids, obs, selfws, wl, z, P_full, **kw
-        )
-        res = {"id": site_ids, "p_sim": p_out}
-        if moments:
-            _moment_cols(res, obs, e_sim, v_sim)
-        if kw["keep"]:
-            res["sims"] = sims_out
-        return pd.DataFrame(res)
+        pos = _rank(bids[border], len(bids), site_ids)
+        has = np.flatnonzero(pos >= 0)
+        row = border[pos[has]]
+        selfws = np.zeros(len(site_ids))
+        selfws[has] = base_pdf["self_weight"].to_numpy(np.float64)[row]
+        wl, wl_all = [[]] * len(site_ids), base_pdf["wlist"].to_numpy()
+        for i, r in zip(has, row):
+            wl[i] = wl_all[r]
+        return sweep(int(key[0]), pool_pdf[kind == 0], site_ids,
+                     obs_pdf["_obs"].to_numpy(np.float64), selfws, wl)
 
     kernel_fn = run_tile if gathered is None else run_tile_gathered
     return (
@@ -767,7 +871,8 @@ def crand_partition(
     ids: np.ndarray,
     obs: np.ndarray,
     selfws: np.ndarray,
-    wl: list,
+    cards: np.ndarray,
+    flat_w: np.ndarray,
     z: np.ndarray,
     P_full: np.ndarray,
     stat_func: str,
@@ -779,6 +884,8 @@ def crand_partition(
 ):
     """One partition's conditional-randomization compute (pure numpy).
 
+    ``ids`` are the sites' rows in ``z``; site i's neighbor weights,
+    sorted by neighbor id, are ``flat_w[sum(cards[:i]):][:cards[i]]``.
     Module-level so the Spark closure and the bench's kernel-scaling
     harness drive the identical code path.
     """
@@ -826,14 +933,7 @@ def crand_partition(
             yield blk, [wpad[blk] @ S for S in states]
             pos = lo
 
-    cards = np.fromiter((len(wi) for wi in wl), dtype=np.int64, count=m_all)
-    # flat ragged buffer + offsets: one concatenate instead of per-row
-    # conversions (the Arrow batch is list-typed)
-    flat_w = (
-        np.concatenate([np.asarray(wi, dtype=np.float64)
-                        for wi in wl if len(wi)])
-        if cards.sum() else np.empty(0)
-    )
+    cards = np.asarray(cards, dtype=np.int64)
     starts = np.zeros(m_all + 1, dtype=np.int64)
     np.cumsum(cards, out=starts[1:])
     # islands: single fake neighbor at island_weight (crand.py:333-339)

@@ -212,6 +212,12 @@ def moran(
     z2ss, z4ss = _centered_moments(points, value_col, agg)
     s0, s1, s2 = s["s0"], s["s1"], s["s2"]
     inum = float(er.pyy) - mu * float(er.py) + mu * mu * s0
+    if not abs(inum) > 1e-10 * abs(float(er.pyy)):
+        # |mu| >> spread cancels the raw identity: centered second pass
+        yc = [F.col(c) - F.lit(mu) for c in ("yf", "yn")]
+        inum = float(_edge_pair_agg(
+            w, points, value_col, F.sum(wc * yc[0] * yc[1])
+        )[0])
     I = n / s0 * float(inum) / z2ss  # noqa: E741
 
     EI = -1.0 / (n - 1)

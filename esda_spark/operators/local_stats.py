@@ -3,7 +3,11 @@
 Each statistic: observed values via spatial lag / edge-wise join
 (pure DataFrame ops, whole-stage codegen), analytic moments via
 grouped aggregates over the edge table, conditional-permutation
-inference via :mod:`esda_spark.operators.crand`.
+inference via :mod:`esda_spark.operators.crand`.  Local Moran and
+Getis-Ord G_i take one flat pass instead (``_site_stats``): the crand
+kernel forms each site's lag, row moments and observed statistic from
+the focal-sorted edge rows it already reads, and the analytic columns
+are narrow projections on its output.
 
 Reference formula sources are cited per function.
 """
@@ -18,162 +22,59 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from esda_spark.functions.mathx import chi2_sf, norm_sf
-from esda_spark.operators.crand import conditional_randomization
+from esda_spark.operators.crand import conditional_randomization, local_crand
 from esda_spark.operators.lag import spatial_lag
 from esda_spark.operators.weights import add_self_edges, transform_weights
 from esda_spark.plans import gate
 
 
-def _fused_site_frame(edges: DataFrame, values: DataFrame,
-                      value_col: str, transformation: str) -> DataFrame:
-    """ONE exchange producing everything a crand-backed local
-    statistic needs per site: the value column, the spatial lag, the
-    wi/wi2 row moments AND the conditional-randomization neighborhood
-    (neighbor weights sorted by neighbor id + the self-loop weight).
-
-    Round-6 shape (guide §2.4): neighbor values attach to the RAW edge
-    table by a broadcast join (map-side), value rows ride the same
-    keyed exchange as marker rows, and one groupBy(id) — reusing the
-    pinned repartition's partitioning — aggregates it all.  For
-    R/B/O transforms the weight transform happens INSIDE the
-    aggregate (R: aggregate raw sums, divide by the row sum after —
-    each wlist element is the identical single division w/rowsum the
-    windowed transform produced, so kernel inputs stay bit-identical);
-    the former shape paid a window (exchange + sort) for the
-    transform plus three separate focal aggregates and a join.
-    D/V transforms pre-transform and aggregate as 'O'."""
-    style = transformation.upper()
-    if style not in ("R", "B", "O"):
-        edges = transform_weights(edges, style)
-        style = "O"
-    spark = values.sparkSession
-    parallelism = max(spark.sparkContext.defaultParallelism, 8)
-    wcol = F.lit(1.0) if style == "B" else F.col("weight").cast("double")
-    vn = values.select(
-        F.col("id").alias("neighbor"), F.col(value_col).alias("_vn")
-    )
-    dnull = F.lit(None).cast("double")
-    edge_rows = edges.join(F.broadcast(vn), "neighbor").select(
-        F.col("focal").alias("id"), F.col("neighbor"),
-        wcol.alias("w"), F.col("_vn"), dnull.alias("_z"),
-    )
-    val_rows = values.select(
-        "id", F.lit(None).cast("long").alias("neighbor"),
-        dnull.alias("w"), dnull.alias("_vn"),
-        F.col(value_col).alias("_z"),
-    )
-    g = (
-        edge_rows.unionByName(val_rows)
-        .repartition(parallelism, "id")
-        .groupBy("id")
-        .agg(
-            F.max("_z").alias(value_col),
-            F.coalesce(F.sum(F.col("w") * F.col("_vn")), F.lit(0.0))
-            .alias("_lag"),
-            F.coalesce(F.sum("w"), F.lit(0.0)).alias("_wi"),
-            F.coalesce(F.sum(F.col("w") * F.col("w")), F.lit(0.0))
-            .alias("_wi2"),
-            F.expr(
-                "transform(array_sort(collect_list(CASE WHEN neighbor"
-                " IS NOT NULL AND neighbor != id THEN struct(neighbor,"
-                " w) END)), s -> s.w)"
-            ).alias("_wl"),
-            F.coalesce(
-                F.max(F.when(F.col("neighbor") == F.col("id"),
-                             F.col("w"))),
-                F.lit(0.0),
-            ).alias("_sw"),
-        )
-        .where(F.col(value_col).isNotNull())
-    )
-    if style == "R":
-        rs = F.col("_wi")
-        safe = F.when(rs != 0.0, rs).otherwise(F.lit(1.0))
-        g = g.select(
-            "id", value_col,
-            (F.col("_lag") / safe).alias("lag"),
-            (F.col("_wi") / safe).alias("wi"),
-            (F.col("_wi2") / (safe * safe)).alias("wi2"),
-            F.expr("transform(_wl, x -> x / (CASE WHEN _wi <> 0.0 THEN"
-                   " _wi ELSE 1.0 END))").alias("wlist"),
-            (F.col("_sw") / safe).alias("self_weight"),
-        )
-    else:
-        g = g.select(
-            "id", value_col,
-            F.col("_lag").alias("lag"), F.col("_wi").alias("wi"),
-            F.col("_wi2").alias("wi2"), F.col("_wl").alias("wlist"),
-            F.col("_sw").alias("self_weight"),
-        )
-    return g
-
-
-def _crand_on_base(
-    base: DataFrame,
+def _site_stats(
     values: DataFrame,
-    w: DataFrame,
+    edges: DataFrame,
+    transformation: str,
     obs_col: str,
+    observe,
     stat_func: str,
-    permutations: int,
-    seed: int,
-    scaling: float,
-    alternative: str,
-    keep: bool,
-    moments: bool,
     n: int,
-    out_cols: list[str],
-    max_card: int | None = None,
+    permutations: int,
+    **crand_kw,
 ) -> DataFrame:
-    """Run conditional randomization on a fused site frame.
+    """(id, value, lag, wi, wi2, obs_col [, p_sim ...]) per row of
+    ``values`` (id, value): the spatial lag and row moments of the
+    ``transformation``-weighted edges, the observed statistic
+    ``observe(value, lag)`` and, with ``permutations``, its
+    conditional-randomization p columns.
 
-    Broadcast regime: the LAZY base (with its wlist) streams straight
-    into the kernel — exchange, aggregate and permutation kernel run
-    as ONE job (the round-5 scaling shape; an eager checkpoint barrier
-    here measured 11 s at 1M sites and broke 8->32 scaling) — and
-    every output column rides along, no output join.  The fused
-    frame's pinned REPARTITION_BY_NUM keeps AQE from coalescing the
-    kernel's parallelism away.  ``max_card`` is the caller-supplied
-    cardinality bound (one aggregate over the raw edges).  Tiled
-    regime (beyond the broadcast gate): classic path — crand assembles
-    its own one-exchange tile base; the p columns join back by id."""
+    Broadcast regime: one flat pass, :func:`crand.local_crand`.  Beyond
+    the ``crand_tiled_sites`` gate nothing n-sized may reach the driver,
+    so a Spark aggregate forms the lag and moments (``observe`` then
+    builds a Column) and the tiled crand's p columns join back by id."""
     if n < gate.LIMITS["crand_tiled_sites"]:
-        bk = base.select(
-            *out_cols, F.col(obs_col).alias("observed"),
-            "wlist", "self_weight",
-        )
-        res = conditional_randomization(
-            values, w, None, stat_func, permutations=permutations,
-            seed=seed, scaling=scaling, alternative=alternative,
-            keep=keep, moments=moments, n_sites=n, mode="broadcast",
-            base=bk, max_card=max_card,
-        )
-        return res.drop("observed", "self_weight")
-    p = conditional_randomization(
-        values, w, base.select("id", F.col(obs_col).alias("observed")),
-        stat_func, permutations=permutations, seed=seed, scaling=scaling,
-        alternative=alternative, keep=keep, moments=moments, n_sites=n,
+        return local_crand(values, edges, transformation, observe, obs_col,
+                           stat_func, permutations, **crand_kw)
+    value_col = [c for c in values.columns if c != "id"][0]
+    w = transform_weights(edges, transformation)
+    wc = F.col("weight")
+    sums = (
+        w.join(values.select(F.col("id").alias("neighbor"),
+                             F.col(value_col).alias("_vn")), "neighbor")
+        .groupBy(F.col("focal").alias("id"))
+        .agg(F.sum(wc * F.col("_vn")).alias("lag"), F.sum(wc).alias("wi"),
+             F.sum(wc * wc).alias("wi2"))
     )
-    return base.select(*out_cols).join(p, "id", "left")
-
-
-def _max_card_future(edges: DataFrame):
-    """Start the neighbor-cardinality bound aggregate on a worker
-    thread so it overlaps the caller's value aggregate (guide §2.6).
-    Cardinality is transform-independent, so the RAW edges suffice."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-
-    def _mc() -> int:
-        return int(
-            edges.where(F.col("focal") != F.col("neighbor"))
-            .groupBy("focal").count()
-            .agg(F.max("count")).collect()[0][0] or 1
-        )
-
-    fut = pool.submit(_mc)
-    pool.shutdown(wait=False)
-    return fut
+    site = values.join(sums, "id", "left").select(
+        "id", value_col,
+        *[F.coalesce(c, F.lit(0.0)).alias(c) for c in ("lag", "wi", "wi2")],
+    )
+    site = site.withColumn(obs_col, observe(F.col(value_col), F.col("lag")))
+    if not permutations:
+        return site
+    p = conditional_randomization(
+        values, w, site.select("id", F.col(obs_col).alias("observed")),
+        stat_func, permutations=permutations, mode="tiled", n_sites=n,
+        **crand_kw,
+    )
+    return site.join(p, "id", "left")
 
 
 def _norm_sf_col(df: DataFrame, z_col: str, out: str) -> DataFrame:
@@ -210,7 +111,6 @@ def moran_local(
     moments per Sokal 1998 A3/A4/A7/A8 (``moran.py:1424-1468``).
     """
     y = F.col(value_col)
-    mc_fut = _max_card_future(edges) if permutations else None
     agg = points.agg(
         F.count("*").alias("n"), F.avg(value_col).alias("mu"),
         F.stddev_pop(value_col).alias("sd"),
@@ -232,12 +132,14 @@ def moran_local(
         z2c = F.col("z") * F.col("z")
         c4 = float(zvals.agg(F.sum(z2c * z2c)).collect()[0][0]) * sd**4
     z4ss = c4 / sd**4
-    w = transform_weights(edges, transformation)
-    base = _fused_site_frame(edges, zvals, "z", transformation)
+    site = _site_stats(
+        zvals, edges, transformation, "Is",
+        lambda z, lag: (n - 1) * z * lag / den, "moran_local", n,
+        permutations, seed=seed, scaling=(n - 1) / den,
+        alternative=alternative, keep=keep_simulations, moments=moments,
+    )
     q1, q2, q3, q4 = (1, 3, 2, 4) if geoda_quads else (1, 2, 3, 4)
-    base = base.withColumn(
-        "Is", F.lit(n - 1) * F.col("z") * F.col("lag") / F.lit(den)
-    ).withColumn(
+    base = site.withColumn(
         "q",
         F.when((F.col("z") > 0) & (F.col("lag") > 0), q1)
         .when((F.col("z") <= 0) & (F.col("lag") > 0), q2)
@@ -265,17 +167,9 @@ def moran_local(
         + (F.col("wi") * F.col("wi") - F.col("wi2")) * F.lit((2 * b2 - n) / ((n - 1.0) * (n - 2.0)))
         - (F.col("wi") / F.lit(n - 1.0)) * (F.col("wi") / F.lit(n - 1.0)),
     )
-    if permutations:
-        return _crand_on_base(
-            base, zvals, w, "Is", "moran_local",
-            permutations=permutations, seed=seed, scaling=(n - 1) / den,
-            alternative=alternative, keep=keep_simulations,
-            moments=moments, n=n,
-            out_cols=["id", "z", "lag", "Is", "q", "EIc", "VIc",
-                      "EI", "VI"],
-            max_card=mc_fut.result(),
-        )
-    return base.drop("wi", "wi2", "wlist", "self_weight")
+    crand_cols = site.columns[site.columns.index("Is") + 1:]
+    return base.select("id", "z", "lag", "Is", "q", "EIc", "VIc", "EI",
+                       "VI", *crand_cols)
 
 
 def moran_local_bv(
@@ -419,8 +313,6 @@ def g_local(
     """
     if star:
         edges = add_self_edges(edges, points, 1.0)
-    mc_fut = _max_card_future(edges) if permutations else None
-    w = transform_weights(edges, transform)
     yv = points.select("id", F.col(value_col).alias("y"))
     agg = yv.agg(
         F.count("*").alias("n"), F.sum("y").alias("sy"),
@@ -429,38 +321,34 @@ def g_local(
     n, y_sum, y2_sum = int(agg.n), float(agg.sy), float(agg.sy2)
     remove_self = 0 if star else 1
     N = n - remove_self
-    base = _fused_site_frame(edges, yv, "y", transform)
-    base = base.withColumn(
-        "Gs", F.col("lag") / (F.lit(y_sum) - F.col("y") * F.lit(remove_self))
+    site = _site_stats(
+        yv, edges, transform, "Gs",
+        lambda y, lag: lag / (y_sum - y * remove_self),
+        "g_local_star" if star else "g_local", n, permutations, seed=seed,
+        scaling=y_sum, alternative=alternative, moments=moments,
     )
     emp_mean = (F.lit(y_sum) - F.col("y") * F.lit(remove_self)) / F.lit(N)
     mean_sq = (F.lit(y2_sum) - F.col("y") * F.col("y") * F.lit(remove_self)) / F.lit(N)
     emp_var = mean_sq - emp_mean * emp_mean
     base = (
-        base.withColumn("EGs", F.col("wi") / F.lit(N))
+        site.withColumn("EGs", F.col("wi") / F.lit(N))
         .withColumn(
             "VGs",
             F.col("wi") * (F.lit(N) - F.col("wi")) / F.lit(N - 1.0)
             / F.lit(float(N) ** 2) * (emp_var / (emp_mean * emp_mean)),
         )
-        .withColumn("Zs", (F.col("Gs") - F.col("EGs")) / F.sqrt("VGs"))
+        # an island has VGs = 0: Zs is null there, not a divide error
+        .withColumn("Zs", F.try_divide(F.col("Gs") - F.col("EGs"),
+                                       F.sqrt("VGs")))
     )
-    if permutations:
-        res = _crand_on_base(
-            base, yv.select("id", F.col("y").alias("z")), w, "Gs",
-            "g_local_star" if star else "g_local",
-            permutations=permutations, seed=seed, scaling=y_sum,
-            alternative=alternative, keep=False, moments=moments, n=n,
-            out_cols=["id", "y", "lag", "Gs", "EGs", "VGs", "Zs"],
-            max_card=mc_fut.result(),
-        )
-        # p_norm from the passed-through Zs AFTER the kernel — the
-        # former pre-kernel pandas_udf inserted a second Python eval
-        # pass over the whole base inside the kernel job (same values:
-        # identical norm_sf on identical Zs)
-        return _norm_sf_col(res, "Zs", "p_norm")
-    base = _norm_sf_col(base, "Zs", "p_norm")
-    return base.drop("wi", "wi2", "wlist", "self_weight")
+    crand_cols = site.columns[site.columns.index("Gs") + 1:]
+    # p_norm from Zs AFTER the kernel, so no second Python eval pass
+    # runs inside the kernel job
+    return _norm_sf_col(
+        base.select("id", "y", "lag", "Gs", "EGs", "VGs", "Zs",
+                    *crand_cols),
+        "Zs", "p_norm",
+    )
 
 
 # ---------------------------------------------------------------------------

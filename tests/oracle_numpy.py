@@ -23,6 +23,27 @@ def row_standardize(edges: np.ndarray, weights: np.ndarray) -> np.ndarray:
     return np.array([wi / sums[f] for (f, _), wi in zip(edges, w)])
 
 
+def transform(edges: np.ndarray, weights: np.ndarray, style: str) -> np.ndarray:
+    """libpysal-style weight transforms: R (row sums 1), B (binary),
+    O (as given), D (all weights sum to 1), V (variance stabilizing:
+    rows scaled to unit L2 norm, then to an average row sum of 1)."""
+    w = np.asarray(weights, dtype=float)
+    f = np.asarray(edges)[:, 0]
+    style = style.upper()
+    if style == "O":
+        return w.copy()
+    if style == "B":
+        return np.ones_like(w)
+    if style == "R":
+        return row_standardize(edges, w)
+    if style == "D":
+        return w / w.sum()
+    if style == "V":
+        wq = w / np.sqrt(np.bincount(f, weights=w * w))[f]
+        return wq * len(np.unique(f)) / wq.sum()
+    raise ValueError(style)
+
+
 def lag(n: int, edges: np.ndarray, weights: np.ndarray, z: np.ndarray) -> np.ndarray:
     out = np.zeros(n)
     for (f, nb), wi in zip(edges, weights):
@@ -156,6 +177,35 @@ def moran_local(y, edges, weights):
     return {"Is": Is, "q": q, "zl": zl, "z": z}
 
 
+def crand_counts(z, edges, weights, observed, P, stat):
+    """Directed conditional-randomization counts (reference
+    crand.py:246-351, significance.py): site i's neighbor weights,
+    sorted by neighbor id, meet the draw ``z_no_i[P] = z[P + (P >= i)]``
+    of the shared permutation table ``P``; a self-loop weight stays
+    apart; an island gets one neighbor of weight 0.  ``stat(i, lag,
+    self_w)`` maps the (k,) permuted lags to simulated statistics.
+    Returns (larger, ties): p_sim = (larger + 1) / (k + 1), and ties
+    counts draws within 1e-9 relative of ``observed`` — exact ties in
+    exact arithmetic, which rounding may count on either side."""
+    z = np.asarray(z, dtype=float)
+    n, k = len(z), P.shape[0]
+    larger = np.zeros(n, dtype=int)
+    ties = np.zeros(n, dtype=int)
+    for i in range(n):
+        mine = edges[:, 0] == i
+        nbr, w = edges[mine, 1], np.asarray(weights, dtype=float)[mine]
+        self_w = w[nbr == i].max() if (nbr == i).any() else 0.0
+        w = w[nbr != i][np.argsort(nbr[nbr != i], kind="stable")]
+        if len(w) == 0:
+            w = np.zeros(1)
+        draw = P[:, :len(w)]
+        sims = stat(i, z[draw + (draw >= i)] @ w, self_w)
+        ge = int((sims >= observed[i]).sum())
+        larger[i] = min(ge, k - ge)
+        ties[i] = int(np.isclose(sims, observed[i], rtol=1e-9, atol=0).sum())
+    return larger, ties
+
+
 def geary_local(y, edges, weights):
     """Local Geary (reference geary_local.py:182-211)."""
     y = np.asarray(y, dtype=float)
@@ -172,8 +222,7 @@ def g_local(y, edges, weights, star=False):
     y = np.asarray(y, dtype=float)
     n = len(y)
     W = np.zeros((n, n))
-    for (f, nb), wi in zip(edges, weights):
-        W[f, nb] = wi
+    np.add.at(W, (edges[:, 0], edges[:, 1]), weights)
     remove_self = not star
     N = n - remove_self
     Gs = (W @ y) / (y.sum() - y * remove_self)

@@ -131,6 +131,20 @@ def test_moran_rate_runs(fixture):
     assert res["I"] == pytest.approx(want["I"], rel=1e-12)
 
 
+def test_moran_large_mean(fixture):
+    # |mean| >> spread: the raw-sum numerator identity cancels to noise
+    spark = fixture["pts"].sparkSession
+    y = 1e9 + np.random.default_rng(3).normal(0, 1, fixture["n"])
+    pts = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(y)], "id long, y_cont double"
+    )
+    res = gs.moran(pts, fixture["edges"], "y_cont", "r")
+    w = onp.row_standardize(fixture["edges_np"], np.ones(len(fixture["edges_np"])))
+    want = onp.moran(y, fixture["edges_np"], w)
+    for k in ("I", "VI_rand"):
+        assert res[k] == pytest.approx(want[k], rel=1e-6), k
+
+
 def test_permutation_pvalues_sane(fixture):
     # strongly autocorrelated surface -> tiny p
     spark = fixture["pts"].sparkSession

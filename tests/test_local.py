@@ -3,6 +3,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from esda_spark.operators import local_stats as ls
+from esda_spark.operators.crand import vec_permutations
 from esda_spark.operators.weights import lattice_edges
 from tests import oracle_numpy as onp
 
@@ -78,6 +79,35 @@ def test_moran_local_deterministic(fx):
     np.testing.assert_array_equal(
         _collect_by_id(a, "p_sim"), _collect_by_id(b, "p_sim")
     )
+
+
+def test_moran_local_rate(spark, fx):
+    rng = np.random.default_rng(17)
+    n = fx["n"]
+    e = rng.integers(1, 50, n).astype(float)
+    b = rng.integers(50, 500, n).astype(float)
+    pts = spark.createDataFrame(
+        [(i, float(e[i]), float(b[i])) for i in range(n)],
+        "id long, e double, b double",
+    )
+    res = ls.moran_local_rate(pts, fx["edges"], "e", "b", permutations=99,
+                              seed=4).toPandas().sort_values("id")
+    # Assuncao-Reis EB-standardized rates (reference smoothing.py:529-578)
+    r, ebi_b = e / b, e.sum() / b.sum()
+    ebi_a = (b * (r - ebi_b) ** 2).sum() / b.sum() - ebi_b / (b.sum() / n)
+    v = ebi_a + ebi_b / b
+    ar = (r - ebi_b) / np.sqrt(np.where(v < 0, ebi_b / b, v))
+    en = fx["edges_np"]
+    w = onp.row_standardize(en, np.ones(len(en)))
+    want = onp.moran_local(ar, en, w)
+    np.testing.assert_allclose(res["Is"], want["Is"], rtol=1e-10)
+    np.testing.assert_array_equal(res["q"], want["q"])
+    z, scale = want["z"], (n - 1) / (want["z"] ** 2).sum()
+    P = vec_permutations(int(np.bincount(en[:, 0]).max()), n, 99, 4)
+    larger, ties = onp.crand_counts(
+        z, en, w, want["Is"], P, lambda i, lag, sw: z[i] * lag * scale)
+    got = np.rint(res["p_sim"].to_numpy() * 100).astype(int) - 1
+    assert (np.abs(got - larger) <= ties).all()
 
 
 def test_geary_local_observed(fx):
@@ -373,3 +403,262 @@ def test_crand_tiled_gathered_exact_parity(spark):
             np.testing.assert_array_equal(
                 got[col].to_numpy(), plain[col].to_numpy(), err_msg=col
             )
+
+
+# ---------------------------------------------------------------------------
+# flat-kernel parity matrix: moran_local, g_local (star and non-star) and
+# the generic conditional_randomization broadcast path, over R/B/O/D/V and
+# degenerate inputs, against tests/oracle_numpy.py and recorded p_sim
+# ---------------------------------------------------------------------------
+
+_ISLAND = 9
+_SELF_LOOPS = (0, 10, 20, 30, 40, 50, 60)
+_OPS = ("moran_local", "g_local", "g_local_star", "crand")
+_CASES = [(op, s, "mixed") for op in _OPS for s in "RBODV"] + [
+    (op, "R", v) for op in _OPS for v in ("perm0", "keep", "straddle")
+    if not (v == "perm0" and op == "crand")
+    and not (v == "keep" and op.startswith("g_local"))
+]
+_CRAND_COLS = ["p_sim", "E_sim", "V_sim", "z_sim", "p_z_sim"]
+
+
+@pytest.fixture(scope="module")
+def mixed(spark, fx):
+    """The 8x8 rook lattice with an island (site 9 loses every edge),
+    self-loop edges at weight 0.5 and tied non-unit weights 1/2/3."""
+    e = [(int(f), int(nb)) for f, nb in fx["edges_np"]
+         if _ISLAND not in (f, nb)]
+    e = np.array(sorted(e + [(i, i) for i in _SELF_LOOPS]))
+    w = np.where(e[:, 0] == e[:, 1], 0.5, 1.0 + (e[:, 0] + e[:, 1]) % 3)
+    edges = spark.createDataFrame(
+        [(int(f), int(nb), float(x)) for (f, nb), x in zip(e, w)],
+        "focal long, neighbor long, weight double",
+    )
+    return {"e": e, "w": w, "edges": edges}
+
+
+def _run_case(spark, fx, mixed, op, style, variant):
+    from esda_spark.operators.crand import conditional_randomization
+    from esda_spark.operators.weights import transform_weights
+
+    perms = 0 if variant == "perm0" else 99
+    keep = variant == "keep"
+    if op == "moran_local":
+        return ls.moran_local(fx["pts"], mixed["edges"], "y_cont",
+                              transformation=style, permutations=perms,
+                              seed=3, keep_simulations=keep)
+    if op.startswith("g_local"):
+        return ls.g_local(fx["pts"], mixed["edges"], "y_cont",
+                          star=op == "g_local_star", transform=style,
+                          permutations=perms, seed=3)
+    y = fx["y"]
+    z = (y - y.mean()) / y.std()
+    obs = onp.moran_local(
+        y, mixed["e"], onp.transform(mixed["e"], mixed["w"], style))["Is"]
+    vals = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(z)], "id long, z double")
+    observed = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(obs)],
+        "id long, observed double")
+    return conditional_randomization(
+        vals, transform_weights(mixed["edges"], style), observed,
+        "moran_local", permutations=perms, seed=3, keep=keep, moments=True)
+
+
+def _schema(op, variant):
+    crand = [] if variant == "perm0" else _CRAND_COLS
+    sims = ["sims"] if variant == "keep" else []
+    if op == "moran_local":
+        return (["id", "z", "lag", "Is", "q", "EIc", "VIc", "EI", "VI"]
+                + crand + sims)
+    if op.startswith("g_local"):
+        return ["id", "y", "lag", "Gs", "EGs", "VGs", "Zs"] + crand + ["p_norm"]
+    return ["id"] + crand + sims
+
+
+# Per-site directed counts (p_sim = (count + 1) / 100), two digits a
+# site in id order, recorded from the earlier collect_list site-frame
+# implementation of the same statistics.
+_RECORDED_COUNTS = {
+    "moran_local-R-mixed":
+        "4846323921423217350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "moran_local-B-mixed":
+        "4547364117252517180016351241370541030405370533411008300222472528"
+        "4832012312323142323004314100240805111222122405393100101841132616",
+    "moran_local-O-mixed":
+        "4846323921423217350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "moran_local-D-mixed":
+        "4846323921423218350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "moran_local-V-mixed":
+        "4846323921423218350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "g_local-R-mixed":
+        "3646323921423218350024321249270844010102430521341315080131233220"
+        "3741013514223644433305142900151805174922231905313100084844142418",
+    "g_local-B-mixed":
+        "0247364117252518180013351241370541030405490533411008300222473928"
+        "4832012312323142133004314100240805110122122405393100101807132616",
+    "g_local-O-mixed":
+        "3646323921423218350024321249270844010102430521341315080131233220"
+        "3741013514223644433305142900151805174922231905313100084844142418",
+    "g_local-D-mixed":
+        "3646323921423218350024321249270844010102430521341315080131233220"
+        "3741013514223644433305142900151805174922231905313100084844142418",
+    "g_local-V-mixed":
+        "3646323921423218350024321249270844010102430521341315080131233220"
+        "3741013514223644433305142900151805174922231905313100084844142418",
+    "g_local_star-R-mixed":
+        "3646323921423218350024321249270844010102430521341315080131233220"
+        "3741013514223644433305142900151805174922231905313100084844142418",
+    "g_local_star-B-mixed":
+        "0247364117252518180013351241370541030405490533411008300222473928"
+        "4832012312323142133004314100240805110122122405393100101807132616",
+    "g_local_star-O-mixed":
+        "3646323921423218350024321249270844010102430521341315080131233220"
+        "3741013514223644433305142900151805174922231905313100084844142418",
+    "g_local_star-D-mixed":
+        "3646323921423218350024321249270844010102430521341315080131233220"
+        "3741013514223644433305142900151805174922231905313100084844142418",
+    "g_local_star-V-mixed":
+        "3646323921423218350024321249270844010102430521341315080131233220"
+        "3741013514223644433305142900151805174922231905313100084844142418",
+    "crand-R-mixed":
+        "4846323921423217350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "crand-B-mixed":
+        "4547364117252517180016351241370541030405370533411008300222472528"
+        "4832012312323142323004314100240805111222122405393100101841132616",
+    "crand-O-mixed":
+        "4846323921423217350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "crand-D-mixed":
+        "4846323921423218350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "crand-V-mixed":
+        "4846323921423218350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "moran_local-R-keep":
+        "4846323921423217350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "moran_local-R-straddle":
+        "4846323921423217350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "g_local-R-straddle":
+        "3646323921423218350024321249270844010102430521341315080131233220"
+        "3741013514223644433305142900151805174922231905313100084844142418",
+    "g_local_star-R-straddle":
+        "3646323921423218350024321249270844010102430521341315080131233220"
+        "3741013514223644433305142900151805174922231905313100084844142418",
+    "crand-R-keep":
+        "4846323921423217350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+    "crand-R-straddle":
+        "4846323921423217350007321249270844010102470521341315080131232820"
+        "3741013514223644303305142900151805173522231905313100084836142418",
+}
+
+
+def _check_oracle(fx, mixed, op, style, pdf):
+    """Site columns against oracle_numpy; returns the oracle's directed
+    counts and near-tie draws for the p_sim check."""
+    n, y = fx["n"], fx["y"]
+    e, w = mixed["e"], mixed["w"]
+    if op == "g_local_star":
+        e = np.vstack([e, np.stack([np.arange(n)] * 2, axis=1)])
+        w = np.concatenate([w, np.ones(n)])
+    ow = onp.transform(e, w, style)
+    if op.startswith("g_local"):
+        want = onp.g_local(y, e, ow, star=op == "g_local_star")
+        for c in ("Gs", "EGs", "VGs", "Zs"):
+            np.testing.assert_allclose(pdf[c], want[c], rtol=1e-10,
+                                       atol=1e-14, err_msg=c)
+        zv, obs, ys = y, want["Gs"], y.sum()
+        if op == "g_local_star":
+            def stat(i, lag, sw):
+                return (lag + sw * y[i]) / ys
+        else:
+            def stat(i, lag, sw):
+                return lag / (ys - y[i])
+    else:
+        want = onp.moran_local(y, e, ow)
+        zv, obs = want["z"], want["Is"]
+        scale = (n - 1) / (zv * zv).sum()
+
+        def stat(i, lag, sw):
+            return zv[i] * (lag + sw * zv[i]) * scale
+        if op == "moran_local":
+            wi = np.bincount(e[:, 0], weights=ow, minlength=n)
+            m2 = (zv * zv).sum() / n
+            np.testing.assert_allclose(pdf["z"], zv, rtol=1e-12)
+            np.testing.assert_allclose(pdf["lag"], want["zl"], rtol=1e-10,
+                                       atol=1e-14)
+            np.testing.assert_allclose(pdf["Is"], obs, rtol=1e-10,
+                                       atol=1e-14)
+            np.testing.assert_array_equal(pdf["q"], want["q"])
+            np.testing.assert_allclose(pdf["EI"], -wi / (n - 1), rtol=1e-10)
+            np.testing.assert_allclose(
+                pdf["EIc"], -(zv * zv * wi) / ((n - 1) * m2), rtol=1e-10)
+    card = np.bincount(e[e[:, 0] != e[:, 1], 0]).max()
+    P = vec_permutations(int(card), n, 99, 3)
+    return onp.crand_counts(zv, e, ow, obs, P, stat)
+
+
+@pytest.mark.parametrize(
+    "op,style,variant", _CASES, ids=[f"{o}-{s}-{v}" for o, s, v in _CASES])
+def test_flat_kernel_parity(spark, fx, mixed, op, style, variant):
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    if variant == "straddle":
+        # 5-row Arrow batches: every site's edge rows + marker row
+        # straddle a batch boundary somewhere in the partition
+        spark.conf.set(conf, "5")
+    try:
+        df = _run_case(spark, fx, mixed, op, style, variant)
+        pdf = df.toPandas().sort_values("id").reset_index(drop=True)
+    finally:
+        spark.conf.set(conf, before)
+    assert df.columns == _schema(op, variant)
+    for name, dtype in df.dtypes:
+        assert dtype == {"id": "bigint", "q": "int",
+                         "sims": "array<double>"}.get(name, "double"), name
+    assert len(pdf) == fx["n"]
+    np.testing.assert_array_equal(pdf["id"], np.arange(fx["n"]))
+    larger, ties = _check_oracle(fx, mixed, op, style, pdf)
+    if variant == "perm0":
+        return
+    if variant == "keep":
+        for r in pdf.itertuples():
+            assert len(r.sims) == 99
+            assert r.E_sim == pytest.approx(np.mean(r.sims), rel=1e-9)
+    got = np.rint(pdf["p_sim"].to_numpy() * 100).astype(int) - 1
+    rec = _RECORDED_COUNTS[f"{op}-{style}-{variant}"]
+    recorded = np.array([int(rec[i:i + 2]) for i in range(0, len(rec), 2)])
+    # equal counts at every site, except that a draw tying the observed
+    # value in exact arithmetic may land on either side of it
+    for want in (larger, recorded):
+        off = np.abs(got - want) > ties
+        assert not off.any(), (np.flatnonzero(off), got[off], want[off])
+
+
+@pytest.mark.parametrize("op", ["moran_local", "g_local_star"])
+def test_local_stats_tiled_regime(spark, fx, mixed, monkeypatch, op):
+    # beyond the crand_tiled_sites gate a Spark aggregate forms the site
+    # columns and the tiled crand's p columns join back by id
+    from functools import partial
+
+    from esda_spark.operators import crand
+    from esda_spark.plans import gate
+
+    monkeypatch.setitem(gate.LIMITS, "crand_tiled_sites", 0)
+    monkeypatch.setattr(ls, "conditional_randomization",
+                        partial(crand.conditional_randomization, tiles=2))
+    df = _run_case(spark, fx, mixed, op, "R", "mixed")
+    pdf = df.toPandas().sort_values("id").reset_index(drop=True)
+    assert df.columns == _schema(op, "mixed")
+    assert len(pdf) == fx["n"]
+    _check_oracle(fx, mixed, op, "R", pdf)
+    p = pdf["p_sim"].to_numpy()
+    assert ((p > 0) & (p <= 1)).all()

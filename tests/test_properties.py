@@ -114,17 +114,20 @@ def test_crand_partition_split_invariance(seed):
     z = rng.normal(size=n)
     P = vec_permutations(card, n, k, 12345)
     ids = np.sort(rng.choice(n, m, replace=False))
-    wl = [rng.random(card) for _ in range(m)]
+    cards = np.full(m, card)
+    flat_w = rng.random(m * card)
     obs = rng.normal(size=m)
     selfw = np.zeros(m)
     kw = dict(stat_func="moran_local", scaling=1.0, island_weight=0.0,
               alternative="directed", keep=False, permutations=k)
     p_all, _, e_all, v_all = crand_partition(
-        ids, obs, selfw, wl, z, P, **kw)
-    half = m // 2
+        ids, obs, selfw, cards, flat_w, z, P, **kw)
+    half, cut = m // 2, m // 2 * card
     p_a, _, e_a, _ = crand_partition(
-        ids[:half], obs[:half], selfw[:half], wl[:half], z, P, **kw)
+        ids[:half], obs[:half], selfw[:half], cards[:half], flat_w[:cut],
+        z, P, **kw)
     p_b, _, e_b, _ = crand_partition(
-        ids[half:], obs[half:], selfw[half:], wl[half:], z, P, **kw)
+        ids[half:], obs[half:], selfw[half:], cards[half:], flat_w[cut:],
+        z, P, **kw)
     np.testing.assert_allclose(p_all, np.concatenate([p_a, p_b]), rtol=1e-12)
     np.testing.assert_allclose(e_all, np.concatenate([e_a, e_b]), rtol=1e-9)

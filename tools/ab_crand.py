@@ -8,12 +8,16 @@ per-mode samples, min and median.  This is the measurement behind the
 (documented in PLANS.md / crand.py).
 
 Usage: python tools/ab_crand.py [n] [perms] [reps] [tiles]
+
+Runs on local[SPARK_GRAFT_CPUS] (default: every core of the machine).
 """
 import json
+import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
@@ -27,7 +31,7 @@ N = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 PERMS = int(sys.argv[2]) if len(sys.argv) > 2 else 9_999
 REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 TILES = int(sys.argv[4]) if len(sys.argv) > 4 else 64
-CPUS = 32
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 spark = get_spark("ab-crand", parallelism=CPUS,
                   shuffle_partitions=max(2 * CPUS, 16))
