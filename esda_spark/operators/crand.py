@@ -299,10 +299,9 @@ def _broadcast_setup(values: DataFrame, permutations: int, seed: int,
                      scaling: float | None, max_card):
     """Driver side of the broadcast regime: collect the value table
     (the permutation-table width job ``max_card()`` runs concurrently),
-    then broadcast it with the shared permutation table.  Returns
-    (n, ids, z, table, scaling) — ``ids`` broadcasts the sorted value
-    ids, or None when they are dense 0..n-1 (a site's row in z is then
-    its id); otherwise sites index z by rank."""
+    then broadcast its sorted ids, the value vector z in id order and
+    the shared permutation table.  A site's row in z is the rank of its
+    id (:func:`_rank`).  Returns (ids, z, table, scaling)."""
     from concurrent.futures import ThreadPoolExecutor
 
     sc = values.sparkSession.sparkContext
@@ -317,23 +316,21 @@ def _broadcast_setup(values: DataFrame, permutations: int, seed: int,
         raise ValueError("conditional_randomization requires unique value ids")
     z = pdf[[c for c in values.columns if c != "id"]].to_numpy(np.float64)
     z = z[order] if z.shape[1] > 1 else z[order, 0]
-    n = len(z)
     if scaling is None:
         z0 = z if z.ndim == 1 else z[:, 0]
-        scaling = (n - 1) / float((z0 * z0).sum())
-    dense = bool((ids == np.arange(n)).all())
-    table = vec_permutations(width, n, permutations, seed) if width else None
-    return (n, sc.broadcast(None if dense else ids), sc.broadcast(z),
-            sc.broadcast(table), float(scaling))
+        scaling = (len(z) - 1) / float((z0 * z0).sum())
+    table = (vec_permutations(width, len(z), permutations, seed)
+             if width else None)
+    return (sc.broadcast(ids), sc.broadcast(z), sc.broadcast(table),
+            float(scaling))
 
 
-def _rank(ids: np.ndarray | None, n: int, q: np.ndarray) -> np.ndarray:
-    """Row of each id of ``q`` in the sorted value ids (``None``: dense
-    0..n-1), -1 where absent."""
-    if ids is None:
-        return np.where((q >= 0) & (q < n), q, -1)
-    pos = np.minimum(np.searchsorted(ids, q), max(n - 1, 0))
-    return np.where(ids[pos] == q, pos, -1) if n else np.full(len(q), -1)
+def _rank(ids: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Row of each id of ``q`` in the sorted ``ids``, -1 where absent."""
+    if not len(ids):
+        return np.full(len(q), -1)
+    pos = np.minimum(np.searchsorted(ids, q), len(ids) - 1)
+    return np.where(ids[pos] == q, pos, -1)
 
 
 # Marker rows carry this in the neighbor slot: it sorts before every
@@ -342,7 +339,7 @@ _MARK = -(1 << 63)
 
 
 def _site_runs(batches: Iterator[pd.DataFrame], min_sites: int):
-    """Yield (id, neighbor, w) arrays holding whole sites, more than
+    """Yield (id, neighbor, w) arrays holding whole sites, at least
     ``min_sites`` marker rows each except the last: the rows of the
     partition's last site so far may continue in the next Arrow batch,
     so they carry over."""
@@ -382,34 +379,38 @@ def _sites(ids: np.ndarray, nb: np.ndarray, w: np.ndarray):
     return ids[new], w[new], seg, nb[edge], w[edge]
 
 
-def _flat_crand(
+def flat_crand(
     values: DataFrame,
     edges: DataFrame,
     marks: DataFrame,
     stat_func: str,
-    permutations: int,
-    seed: int,
-    scaling: float | None,
-    island_weight: float,
-    alternative: str,
-    keep: bool,
-    moments: bool,
+    permutations: int = 999,
+    seed: int = 12345,
+    scaling: float | None = None,
+    island_weight: float = 0.0,
+    alternative: str = "directed",
+    keep: bool = False,
+    moments: bool = False,
     local: tuple | None = None,
 ) -> DataFrame:
-    """Broadcast-regime crand on flat, focal-sorted edge rows.
+    """Broadcast-regime crand on flat, focal-sorted edge rows, in ONE
+    exchange.
 
     ``marks`` holds one (id, w) row per site: the observed statistic,
     or with ``local`` = (value_col, style, obs_col, observe) the site's
-    value.  In the latter case the kernel also forms, from the
-    broadcast value vector, the site's spatial lag and row moments wi /
-    wi2 under the weight ``style`` (R: sums of raw weights divided by
-    the row sum afterwards, each neighbor weight the single division
-    ``w / rowsum`` a windowed row-standardization makes; B: unit
-    weights; O: weights as given) and the observed value
-    ``observe(value, lag)``.  Edges to ids absent from ``values``
-    drop out of the lag, as in a join.  Returns (id, p columns) or,
-    with ``local``, (id, value_col, lag, wi, wi2, obs_col [, p cols])."""
-    n, ids_bc, z_bc, perm_bc, scaling = _broadcast_setup(
+    value.  In the latter case ``edges`` are RAW and the kernel also
+    forms, from the broadcast value vector, the site's spatial lag and
+    row moments wi / wi2 under the weight ``style`` (R: sums of raw
+    weights divided by the row sum afterwards, each neighbor weight the
+    single division ``w / rowsum`` a windowed row-standardization
+    makes; B: unit weights; O: weights as given; D/V: pre-transformed)
+    and the observed value ``observe(value, lag)`` (numpy arrays in) —
+    the path of a local statistic whose observed value is a function
+    of the site's value and its lag.  Edges to ids absent from
+    ``values`` drop out of the lag, as in a join.  Returns (id, p
+    columns) or, with ``local``, (id, value_col, lag, wi, wi2, obs_col
+    [, p columns]); with ``permutations=0`` no p columns."""
+    ids_bc, z_bc, perm_bc, scaling = _broadcast_setup(
         values, permutations, seed, scaling, lambda: _max_card(edges))
     kw = dict(
         scaling=scaling, island_weight=float(island_weight),
@@ -429,15 +430,16 @@ def _flat_crand(
                        f" wi2 double, {obs_col} double")
     if permutations:
         out_schema += _p_schema(moments, keep)
+    site_chunk = _SITE_CHUNK  # read on the driver; ships in the closure
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         z, vids = z_bc.value, ids_bc.value
-        for run in _site_runs(batches, _SITE_CHUNK):
+        for run in _site_runs(batches, site_chunk):
             sid, mark, seg, nb, w = _sites(*run)
             m = len(sid)
             res, obs = {"id": sid}, mark
             if local is not None:
-                pos = _rank(vids, n, nb)
+                pos = _rank(vids, nb)
                 ok = pos >= 0
                 if not ok.all():
                     seg, nb, w, pos = seg[ok], nb[ok], w[ok], pos[ok]
@@ -462,7 +464,7 @@ def _flat_crand(
                 yield pd.DataFrame(res)
                 continue
             yield _p_frame(
-                res, _rank(vids, n, sid), obs, selfw,
+                res, _rank(vids, sid), obs, selfw,
                 np.bincount(seg[~is_self], minlength=m), w[~is_self],
                 z, perm_bc.value, kw, moments,
             )
@@ -483,36 +485,6 @@ def _flat_crand(
         .repartition(sc.defaultParallelism, "id")
         .sortWithinPartitions("id", "neighbor", "w")
         .mapInPandas(kernel, schema=out_schema)
-    )
-
-
-def local_crand(
-    values: DataFrame,
-    edges: DataFrame,
-    transformation: str,
-    observe,
-    obs_col: str,
-    stat_func: str,
-    permutations: int = 999,
-    seed: int = 12345,
-    scaling: float | None = None,
-    alternative: str = "directed",
-    keep: bool = False,
-    moments: bool = False,
-) -> DataFrame:
-    """(id, value, lag, wi, wi2, obs_col [, p_sim ...]) for every row
-    of ``values`` (id, value) in the broadcast regime, in ONE flat
-    exchange: a local statistic whose observed value is a function of
-    the site's value and its spatial lag — ``observe(value, lag)``
-    (numpy arrays in) — gets the lag, the row moments and its
-    conditional-randomization p columns from the same pass over the
-    RAW ``edges``, weighted by ``transformation`` (R/B/O in-kernel, D/V
-    pre-transformed).  With ``permutations=0`` only the site columns."""
-    value_col = [c for c in values.columns if c != "id"][0]
-    return _flat_crand(
-        values, edges, values.select("id", F.col(value_col).alias("w")),
-        stat_func, permutations, seed, scaling, 0.0, alternative, keep,
-        moments, local=(value_col, transformation, obs_col, observe),
     )
 
 
@@ -585,7 +557,7 @@ def conditional_randomization(
                             gathered=gathered)
     if gathered is None:
         marks = observed.select("id", F.col("observed").alias("w"))
-        return _flat_crand(values, edges, marks, *args)
+        return flat_crand(values, edges, marks, *args)
     return _crand_gathered(values, observed, gathered, *args)
 
 
@@ -606,7 +578,7 @@ def _crand_gathered(
     :func:`gather_neighborhoods` frame: the table width comes from it
     instead of a re-scan of the edges, and each site's wlist joins to
     its observed value."""
-    n, ids_bc, z_bc, perm_bc, scaling = _broadcast_setup(
+    ids_bc, z_bc, perm_bc, scaling = _broadcast_setup(
         values, permutations, seed, scaling,
         lambda: gathered.agg(F.max(F.size("wlist"))).collect()[0][0] or 1)
     kw = dict(
@@ -629,7 +601,7 @@ def _crand_gathered(
         for pdf in batches:
             ids = pdf["id"].to_numpy(np.int64)
             yield _p_frame(
-                {"id": ids}, _rank(ids_bc.value, n, ids),
+                {"id": ids}, _rank(ids_bc.value, ids),
                 pdf["observed"].to_numpy(np.float64),
                 pdf["self_weight"].to_numpy(np.float64),
                 *_flatten(pdf["wlist"]), z_bc.value, perm_bc.value, kw,
@@ -824,7 +796,7 @@ def _crand_tiled(
             max_card, n_t, kw["permutations"],
             seed ^ (0x9E3779B9 * (tile + 1) & 0x7FFFFFFF),
         )
-        lids = _rank(pool_ids, n_t, site_ids)
+        lids = _rank(pool_ids, site_ids)
         if (lids < 0).any():
             raise ValueError(
                 f"tile {tile}: observed contains ids absent from values "
@@ -848,7 +820,7 @@ def _crand_tiled(
         # island (empty wlist) — same semantics as the union path
         bids = base_pdf["id"].to_numpy(np.int64)
         border = np.argsort(bids, kind="stable")
-        pos = _rank(bids[border], len(bids), site_ids)
+        pos = _rank(bids[border], site_ids)
         has = np.flatnonzero(pos >= 0)
         row = border[pos[has]]
         selfws = np.zeros(len(site_ids))

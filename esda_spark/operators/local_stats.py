@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from esda_spark.functions.mathx import chi2_sf, norm_sf
-from esda_spark.operators.crand import conditional_randomization, local_crand
+from esda_spark.operators.crand import conditional_randomization, flat_crand
 from esda_spark.operators.lag import spatial_lag
 from esda_spark.operators.weights import add_self_edges, transform_weights
 from esda_spark.plans import gate
@@ -45,14 +45,17 @@ def _site_stats(
     ``observe(value, lag)`` and, with ``permutations``, its
     conditional-randomization p columns.
 
-    Broadcast regime: one flat pass, :func:`crand.local_crand`.  Beyond
-    the ``crand_tiled_sites`` gate nothing n-sized may reach the driver,
-    so a Spark aggregate forms the lag and moments (``observe`` then
-    builds a Column) and the tiled crand's p columns join back by id."""
-    if n < gate.LIMITS["crand_tiled_sites"]:
-        return local_crand(values, edges, transformation, observe, obs_col,
-                           stat_func, permutations, **crand_kw)
+    Broadcast regime: one flat pass, :func:`crand.flat_crand` with the
+    site values as marker rows.  Beyond the ``crand_tiled_sites`` gate
+    nothing n-sized may reach the driver, so a Spark aggregate forms
+    the lag and moments (``observe`` then builds a Column) and the
+    tiled crand's p columns join back by id."""
     value_col = [c for c in values.columns if c != "id"][0]
+    if n < gate.LIMITS["crand_tiled_sites"]:
+        marks = values.select("id", F.col(value_col).alias("w"))
+        return flat_crand(
+            values, edges, marks, stat_func, permutations,
+            local=(value_col, transformation, obs_col, observe), **crand_kw)
     w = transform_weights(edges, transformation)
     wc = F.col("weight")
     sums = (

@@ -561,6 +561,44 @@ _RECORDED_COUNTS = {
 }
 
 
+@pytest.mark.parametrize("min_sites", [0, 1, 3])
+@pytest.mark.parametrize("batch", [1, 2, 3, 7, 50])
+def test_site_runs_carry(min_sites, batch):
+    # a site's rows may cross any number of Arrow batches; every site
+    # must come out of exactly one run, whole and in order
+    import pandas as pd
+
+    from esda_spark.operators.crand import _MARK, _site_runs
+
+    rng = np.random.default_rng(batch)
+    rows = []
+    for sid in (2, 3, 5, 8, 9, 13, 14, 20, 21, 22):
+        rows.append((sid, _MARK, float(sid)))
+        rows += [(sid, int(nb), 0.5) for nb in
+                 np.sort(rng.choice(30, int(rng.integers(0, 9)), False))]
+    rows.append((25, 1, 1.0))  # edges of an unscored focal, no marker
+    data = np.array(rows, dtype=object)
+    batches = [
+        pd.DataFrame({"id": data[i:i + batch, 0].astype(np.int64),
+                      "neighbor": data[i:i + batch, 1].astype(np.int64),
+                      "w": data[i:i + batch, 2].astype(np.float64)})
+        for i in range(0, len(data), batch)
+    ]
+    batches.insert(1, batches[0].iloc[:0])  # an empty batch
+    runs = list(_site_runs(iter(batches), min_sites))
+    for ids, nb, w in runs:
+        assert len(ids) and len(ids) == len(nb) == len(w)
+    got = np.concatenate([np.stack([r[0], r[1]], axis=1) for r in runs])
+    np.testing.assert_array_equal(got, data[:, :2].astype(np.int64))
+    np.testing.assert_array_equal(np.concatenate([r[2] for r in runs]),
+                                  data[:, 2].astype(np.float64))
+    site_runs = [np.unique(r[0]) for r in runs]
+    all_sites = np.concatenate(site_runs)
+    assert len(all_sites) == len(np.unique(all_sites))  # none split
+    for r in runs[:-1]:
+        assert (r[1] == _MARK).sum() >= min_sites
+
+
 def _check_oracle(fx, mixed, op, style, pdf):
     """Site columns against oracle_numpy; returns the oracle's directed
     counts and near-tie draws for the p_sim check."""
@@ -608,13 +646,18 @@ def _check_oracle(fx, mixed, op, style, pdf):
 
 @pytest.mark.parametrize(
     "op,style,variant", _CASES, ids=[f"{o}-{s}-{v}" for o, s, v in _CASES])
-def test_flat_kernel_parity(spark, fx, mixed, op, style, variant):
+def test_flat_kernel_parity(spark, fx, mixed, monkeypatch, op, style,
+                            variant):
+    from esda_spark.operators import crand
+
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(conf)
     if variant == "straddle":
         # 5-row Arrow batches: every site's edge rows + marker row
-        # straddle a batch boundary somewhere in the partition
+        # straddle a batch boundary somewhere in the partition, and
+        # 2-site kernel chunks make the kernel cut and carry at each
         spark.conf.set(conf, "5")
+        monkeypatch.setattr(crand, "_SITE_CHUNK", 2)
     try:
         df = _run_case(spark, fx, mixed, op, style, variant)
         pdf = df.toPandas().sort_values("id").reset_index(drop=True)
@@ -662,3 +705,62 @@ def test_local_stats_tiled_regime(spark, fx, mixed, monkeypatch, op):
     _check_oracle(fx, mixed, op, "R", pdf)
     p = pdf["p_sim"].to_numpy()
     assert ((p > 0) & (p <= 1)).all()
+
+
+def _sparse(df, *cols):
+    # the same rows with ids 1000 + 7*id: not dense, order kept
+    return df.select(*[(F.col(c) * 7 + 1000).alias(c) if c in cols
+                       else F.col(c) for c in df.columns])
+
+
+def test_flat_crand_sparse_ids(spark, fx, mixed):
+    # the broadcast regime ranks value ids, so any unique ids give the
+    # dense run's statistics site for site
+    from esda_spark.operators.crand import (
+        conditional_randomization, gather_neighborhoods)
+    from esda_spark.operators.weights import transform_weights
+
+    pts, edges = fx["pts"], mixed["edges"]
+    dense = ls.moran_local(pts, edges, permutations=99, seed=3).toPandas()
+    sparse = ls.moran_local(
+        _sparse(pts, "id"), _sparse(edges, "focal", "neighbor"),
+        permutations=99, seed=3).toPandas()
+    dense, sparse = (d.sort_values("id").reset_index(drop=True)
+                     for d in (dense, sparse))
+    np.testing.assert_array_equal(sparse["id"], dense["id"] * 7 + 1000)
+    for c in ("z", "lag", "Is", "q", "EIc", "VIc", "p_sim", "E_sim"):
+        np.testing.assert_allclose(sparse[c], dense[c], rtol=1e-12,
+                                   atol=1e-15, err_msg=c)
+    vals = dense[["id", "z"]]
+    obs = dense[["id", "Is"]].rename(columns={"Is": "observed"})
+    w = transform_weights(edges, "R")
+    for gathered in (False, True):
+        p = []
+        for ids in (lambda i: i, lambda i: i * 7 + 1000):
+            e = w.select(*[(ids(F.col(c)) if c != "weight" else F.col(c))
+                           .alias(c) for c in w.columns])
+            got = conditional_randomization(
+                spark.createDataFrame(vals.assign(id=ids(vals["id"]))),
+                e, spark.createDataFrame(obs.assign(id=ids(obs["id"]))),
+                "moran_local", permutations=99, seed=3,
+                gathered=gather_neighborhoods(e) if gathered else None,
+            ).toPandas().sort_values("id")
+            p.append(got["p_sim"].to_numpy())
+        np.testing.assert_array_equal(p[1], p[0])
+
+
+def test_flat_crand_bad_ids(spark, fx, mixed):
+    from esda_spark.operators.crand import conditional_randomization
+
+    z = spark.createDataFrame([(i % 63, float(i)) for i in range(64)],
+                              "id long, z double")
+    obs = spark.createDataFrame([(i, 1.0) for i in range(64)],
+                                "id long, observed double")
+    with pytest.raises(ValueError, match="unique value ids"):
+        conditional_randomization(z, mixed["edges"], obs, "moran_local",
+                                  permutations=9, mode="broadcast")
+    z = spark.createDataFrame([(i, float(i)) for i in range(63)],
+                              "id long, z double")
+    with pytest.raises(Exception, match="absent from values"):
+        conditional_randomization(z, mixed["edges"], obs, "moran_local",
+                                  permutations=9, mode="broadcast").collect()
