@@ -2,9 +2,11 @@
 
 Every statistic is expressed as: weight transform -> spatial lag or
 edge-wise expression (join + aggregate) -> a handful of global
-aggregates -> closed-form moments on the driver.  Analytic inference
-(normal approximation under normality / randomization nulls) uses the
-exact formulas of the reference:
+aggregates -> closed-form moments on the driver.  Moran, Geary and
+Getis G form those aggregates in numpy instead when the edges and
+values fit the ``stat_rows`` gate (``plans/gate.py``).  Analytic
+inference (normal approximation under normality / randomization
+nulls) uses the exact formulas of the reference:
 
 - Moran's I:   ``moran.py:230-271``
 - Geary's C:   ``geary.py:162-188``
@@ -24,14 +26,22 @@ replicates, no collect of the value vector.
 from __future__ import annotations
 
 import math
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from esda_spark.functions.mathx import chi2_sf, norm_cdf, norm_sf
+from esda_spark.operators.crand import _rank
 from esda_spark.operators.lag import spatial_lag
-from esda_spark.operators.weights import transform_weights, weights_summary
+from esda_spark.operators.weights import (
+    EDGE_COLS,
+    summary_arrays,
+    summary_for,
+    transform_weights,
+)
+from esda_spark.plans import gate
 
 
 # ---------------------------------------------------------------------------
@@ -163,16 +173,72 @@ def _centered_moments(points: DataFrame, value_col: str, agg) -> tuple:
 
 def _edge_pair_agg(w: DataFrame, points: DataFrame, value_col: str,
                    *aggs) -> "object":
-    """Edge-wise aggregate with the raw values broadcast onto both
-    endpoints (yf/yn) — no shuffle beyond what the transform needs."""
+    """Edge-wise aggregate with the raw values joined onto both
+    endpoints (yf/yn); AQE broadcasts the value side when its runtime
+    size is under the join threshold."""
     y = F.col(value_col)
     yf = points.select(F.col("id").alias("focal"), y.alias("yf"))
     yn = points.select(F.col("id").alias("neighbor"), y.alias("yn"))
-    return (
-        w.join(F.broadcast(yf), "focal").join(F.broadcast(yn), "neighbor")
-        .agg(*aggs)
-        .collect()[0]
-    )
+    return w.join(yf, "focal").join(yn, "neighbor").agg(*aggs).collect()[0]
+
+
+def _wave(points: DataFrame, edges: DataFrame, w: DataFrame,
+          value_col: str, style: str, values_job, *edge_aggs) -> tuple:
+    """The distributed plan: the value moments (``values_job()``), the
+    edge-pair aggregate and the memoized W summary are mutually
+    independent jobs — they run concurrently (guide §2.6)."""
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        jobs = (pool.submit(values_job),
+                pool.submit(_edge_pair_agg, w, points, value_col,
+                            *edge_aggs),
+                pool.submit(summary_for, edges, style))
+        return tuple(f.result() for f in jobs)
+
+
+def _incore_arrays(points: DataFrame, edges: DataFrame, w: DataFrame,
+                   value_col: str, style: str):
+    """The ``stat_rows`` gate of the global statistics: TWO concurrent
+    probes, the edges and the values, as numpy arrays — or None (take
+    the distributed wave).
+
+    Returns (y, yf, yn, wv, summary): the values; the endpoint values
+    and transformed weight of every edge whose ends are both in
+    ``points`` (the others drop out, as in the join); and s0 / s1 / s2
+    over ALL edges, as :func:`weights.summary_for` has them.  R and B
+    transform in numpy (R: the single division ``w / rowsum`` the
+    windowed transform makes); D and V are probed as ``w``, the
+    transform's output."""
+    style = style.upper()
+    src = edges if style in ("R", "B", "O") else w
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_e = pool.submit(gate.collect_if_fits, src.select(*EDGE_COLS),
+                          "stat_rows")
+        f_p = pool.submit(gate.collect_if_fits,
+                          points.select("id", value_col), "stat_rows")
+        e, p = f_e.result(), f_p.result()
+    if e is None or p is None:
+        return None
+    focal = e["focal"].to_numpy(np.int64)
+    nb = e["neighbor"].to_numpy(np.int64)
+    wv = e["weight"].to_numpy(np.float64)
+    if style == "B":
+        wv = np.ones(len(wv))
+    elif style == "R":
+        _, row = np.unique(focal, return_inverse=True)
+        wv = wv / np.bincount(row, weights=wv)[row]
+    ids = p["id"].to_numpy(np.int64)
+    order = np.argsort(ids)
+    ids, y = ids[order], p[value_col].to_numpy(np.float64)[order]
+    pf, pn = _rank(ids, focal), _rank(ids, nb)
+    ok = (pf >= 0) & (pn >= 0)
+    return y, y[pf[ok]], y[pn[ok]], wv[ok], summary_arrays(focal, nb, wv)
+
+
+def _array_moments(y: np.ndarray) -> tuple:
+    """(n, mu, z2ss, z4ss) of a value array, centered directly."""
+    mu = float(y.mean())
+    z2 = (y - mu) ** 2
+    return len(y), mu, float(z2.sum()), float(z2 @ z2)
 
 
 def moran(
@@ -184,41 +250,50 @@ def moran(
     two_tailed: bool = True,
     seed: int = 12345,
 ) -> dict:
-    """Round-6 job plan: the value moments, the edge numerator and the
-    W summary are mutually independent jobs — they run concurrently
-    (guide §2.6) and the numerator uses raw values with the driver-side
-    mu correction  sum w (yf-mu)(yn-mu) = sum w yf yn
-    - mu sum w (yf+yn) + mu^2 s0,  so nothing waits on the mean.  The
-    W summary is memoized per (edges, style) — see
-    ``weights.summary_for``."""
-    from concurrent.futures import ThreadPoolExecutor
+    """Job plan, by the ``stat_rows`` gate (``plans/gate.py``):
 
-    from esda_spark.operators.weights import summary_for
+    - Edges and values within it: two concurrent probes collect them
+      (two jobs) and numpy forms n, mu, the centered z2ss / z4ss, the
+      numerator sum w (yf-mu)(yn-mu) and s0 / s1 / s2
+      (:func:`_incore_arrays`).
+    - Above it (the round-6 plan, :func:`_wave`): the value moments,
+      the edge numerator and the W summary run as one concurrent wave
+      of independent jobs.  The numerator uses raw values with the
+      driver-side mu correction  sum w (yf-mu)(yn-mu) = sum w yf yn
+      - mu sum w (yf+yn) + mu^2 sum w,  so nothing waits on the mean;
+      a relative guard takes a centered second pass where
+      |mu| >> spread cancels it.  The W summary is memoized per
+      (edges, style) — see ``weights.summary_for``.
 
+    Both regimes feed the one closed form below; permutation
+    inference is distributed in both."""
     w = transform_weights(edges, transformation)
-    wc = F.col("weight")
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_vals = pool.submit(_value_moments, points, value_col)
-        f_edge = pool.submit(
-            _edge_pair_agg, w, points, value_col,
+    got = _incore_arrays(points, edges, w, value_col, transformation)
+    if got is not None:
+        y, yf, yn, wv, s = got
+        n, mu, z2ss, z4ss = _array_moments(y)
+        inum = float(wv @ ((yf - mu) * (yn - mu)))
+    else:
+        wc = F.col("weight")
+        agg, er, s = _wave(
+            points, edges, w, value_col, transformation,
+            lambda: _value_moments(points, value_col),
             F.sum(wc * F.col("yf") * F.col("yn")).alias("pyy"),
             F.sum(wc * (F.col("yf") + F.col("yn"))).alias("py"),
+            F.sum(wc).alias("pw"),
         )
-        f_sum = pool.submit(summary_for, edges, transformation)
-        agg = f_vals.result()
-        er = f_edge.result()
-        s = f_sum.result()
-    n, mu = int(agg.n), float(agg.mu)
-    z2ss, z4ss = _centered_moments(points, value_col, agg)
+        n, mu = int(agg.n), float(agg.mu)
+        z2ss, z4ss = _centered_moments(points, value_col, agg)
+        # pw, not s0: edges to ids without a value drop out of the join
+        inum = float(er.pyy) - mu * float(er.py) + mu * mu * float(er.pw)
+        if not abs(inum) > 1e-10 * abs(float(er.pyy)):
+            # |mu| >> spread cancels the raw identity: centered pass
+            yc = [F.col(c) - F.lit(mu) for c in ("yf", "yn")]
+            inum = float(_edge_pair_agg(
+                w, points, value_col, F.sum(wc * yc[0] * yc[1])
+            )[0])
     s0, s1, s2 = s["s0"], s["s1"], s["s2"]
-    inum = float(er.pyy) - mu * float(er.py) + mu * mu * s0
-    if not abs(inum) > 1e-10 * abs(float(er.pyy)):
-        # |mu| >> spread cancels the raw identity: centered second pass
-        yc = [F.col(c) - F.lit(mu) for c in ("yf", "yn")]
-        inum = float(_edge_pair_agg(
-            w, points, value_col, F.sum(wc * yc[0] * yc[1])
-        )[0])
-    I = n / s0 * float(inum) / z2ss  # noqa: E741
+    I = n / s0 * inum / z2ss  # noqa: E741
 
     EI = -1.0 / (n - 1)
     n2 = n * n
@@ -299,7 +374,7 @@ def moran_bv(
             edges.join(
                 perm.select("rep", F.col("id").alias("neighbor"), "zp"), "neighbor"
             )
-            .join(F.broadcast(zx_f), "focal")
+            .join(zx_f, "focal")
             .groupBy("rep")
             .agg(F.sum(F.col("weight") * F.col("zx") * F.col("zp")).alias("num"))
         )
@@ -320,29 +395,25 @@ def geary(
     permutations: int = 0,
     seed: int = 12345,
 ) -> dict:
-    from concurrent.futures import ThreadPoolExecutor
-
-    from esda_spark.operators.weights import summary_for
-
     w = transform_weights(edges, transformation)
-    d = F.col("yf") - F.col("yn")
-    # value moments, edge numerator (raw y — the difference cancels
-    # the mean) and W summary are independent: one concurrent wave
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_vals = pool.submit(_value_moments, points, value_col)
-        f_edge = pool.submit(
-            _edge_pair_agg, w, points, value_col,
+    got = _incore_arrays(points, edges, w, value_col, transformation)
+    if got is not None:
+        y, yf, yn, wv, s = got
+        n, _, yss, y4ss = _array_moments(y)
+        num = float(wv @ ((yf - yn) ** 2))
+    else:
+        d = F.col("yf") - F.col("yn")
+        # the edge numerator takes raw y: the difference cancels the mean
+        agg, er, s = _wave(
+            points, edges, w, value_col, transformation,
+            lambda: _value_moments(points, value_col),
             F.sum(F.col("weight") * d * d).alias("num"),
         )
-        f_sum = pool.submit(summary_for, edges, transformation)
-        agg = f_vals.result()
-        num = float(f_edge.result().num)
-        s = f_sum.result()
-    n, mu = int(agg.n), float(agg.mu)
-    yss, y4ss = _centered_moments(points, value_col, agg)
+        n, num = int(agg.n), float(er.num)
+        yss, y4ss = _centered_moments(points, value_col, agg)
     s0, s1, s2 = s["s0"], s["s1"], s["s2"]
     den = yss * s0 * 2.0
-    C = (n - 1) * float(num) / den
+    C = (n - 1) * num / den
 
     n2 = n * n
     s02 = s0 * s0
@@ -389,36 +460,34 @@ def getis_g(
     permutations: int = 0,
     seed: int = 12345,
 ) -> dict:
-    from concurrent.futures import ThreadPoolExecutor
-
-    from esda_spark.operators.weights import summary_for
-
     w = transform_weights(edges, "B")
     yv = points.select("id", F.col(value_col).alias("y"))
-    yc = F.col("y")
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_vals = pool.submit(
+    got = _incore_arrays(points, edges, w, value_col, "B")
+    if got is not None:
+        y, yf, yn, wv, s = got
+        y2 = y * y
+        n = len(y)
+        sy, sy2, sy3, sy4 = (float(y.sum()), float(y2.sum()),
+                             float(y2 @ y), float(y2 @ y2))
+        num = float(wv @ (yf * yn))
+    else:
+        yc = F.col("y")
+        agg, er, s = _wave(
+            points, edges, w, value_col, "B",
             lambda: yv.agg(
                 F.count("*").alias("n"),
                 F.sum("y").alias("sy"),
                 F.sum(yc * yc).alias("sy2"),
                 F.sum(yc * yc * yc).alias("sy3"),
                 F.sum(yc * yc * yc * yc).alias("sy4"),
-            ).collect()[0]
-        )
-        f_edge = pool.submit(
-            _edge_pair_agg, w, points, value_col,
+            ).collect()[0],
             F.sum(F.col("weight") * F.col("yf") * F.col("yn")).alias("num"),
         )
-        f_sum = pool.submit(summary_for, edges, "B")
-        agg = f_vals.result()
-        num = float(f_edge.result().num)
-        s = f_sum.result()
-    n = int(agg.n)
-    sy, sy2, sy3, sy4 = map(float, (agg.sy, agg.sy2, agg.sy3, agg.sy4))
+        n, num = int(agg.n), float(er.num)
+        sy, sy2, sy3, sy4 = map(float, (agg.sy, agg.sy2, agg.sy3, agg.sy4))
     s0, s1, s2 = s["s0"], s["s1"], s["s2"]
     den_sum = sy * sy - sy2
-    G = float(num) / den_sum
+    G = num / den_sum
 
     n2 = n * n
     s02 = s0 * s0
@@ -489,7 +558,7 @@ def gamma(
     yf = yv.select(F.col("id").alias("focal"), F.col("y").alias("yf"))
     yn = yv.select(F.col("id").alias("neighbor"), F.col("y").alias("yn"))
     g = (
-        edges.join(F.broadcast(yf), "focal").join(F.broadcast(yn), "neighbor")
+        edges.join(yf, "focal").join(yn, "neighbor")
         .agg(F.sum(F.col("weight") * op_expr(F.col("yf"), F.col("yn"))))
         .collect()[0][0]
     )
@@ -550,7 +619,7 @@ def join_counts(
     yv = points.select("id", F.col(value_col).cast("double").alias("y"))
     yf = yv.select(F.col("id").alias("focal"), F.col("y").alias("yf"))
     yn = yv.select(F.col("id").alias("neighbor"), F.col("y").alias("yn"))
-    pairs = w.join(F.broadcast(yf), "focal").join(F.broadcast(yn), "neighbor")
+    pairs = w.join(yf, "focal").join(yn, "neighbor")
 
     same = (F.col("yf") == F.col("yn")).cast("double")
     agg = pairs.agg(

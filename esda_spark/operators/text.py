@@ -74,12 +74,14 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text",
 
 
 def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct n-gram (word-shingle) strings."""
+    """Distinct n-gram (word-shingle) strings; none for a document of
+    fewer than ``n`` tokens."""
     toks = tokens_col(text)
+    count = F.size(toks) - (n - 1)
+    starts = F.when(count > 0, F.sequence(F.lit(1), count)).otherwise(
+        F.array().cast("array<int>"))
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
+        starts, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
     return F.array_distinct(grams)
 
 
@@ -152,7 +154,8 @@ def ngram_jaccard_pairs(
     pair row.  The former shape exploded + distinct-shuffled the whole
     corpus' shingle strings and re-aggregated per pair — several
     corpus-sized exchanges for a candidates-sized question.  Same
-    exact string-set intersection, same jaccard.
+    exact string-set intersection, same jaccard; pairs sharing no
+    shingle drop out, as in the oracle's join.
     """
     ids_a = pairs.select(F.col("doc_a").alias("doc_id"))
     ids_b = pairs.select(F.col("doc_b").alias("doc_id"))
@@ -169,9 +172,11 @@ def ngram_jaccard_pairs(
                     F.col("shs").alias("sha"))
     b = sets.select(F.col("doc_id").alias("doc_b"),
                     F.col("shs").alias("shb"))
-    inter = F.size(F.array_intersect("sha", "shb"))
+    inter = F.col("inter")
     return (
         pairs.join(a, "doc_a").join(b, "doc_b")
+        .withColumn("inter", F.size(F.array_intersect("sha", "shb")))
+        .where(inter > 0)
         .select(
             "doc_a", "doc_b",
             (inter / (F.size("sha") + F.size("shb") - inter))

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -669,6 +670,24 @@ def weights_summary(edges: DataFrame) -> dict[str, float]:
         s0, s1 = f01.result()
         s2 = f2.result()
     return {"s0": s0, "s1": s1, "s2": s2}
+
+
+def summary_arrays(focal: np.ndarray, neighbor: np.ndarray,
+                   weight: np.ndarray) -> dict[str, float]:
+    """:func:`weights_summary` of edge arrays, in numpy: the same
+    unordered-pair group sums for s0 / s1 (doubled on self-loops) and
+    the same row + column node sums for s2."""
+    nodes, inv = np.unique(np.concatenate([focal, neighbor]),
+                           return_inverse=True)
+    k, f, nb = len(nodes), inv[:len(focal)], inv[len(focal):]
+    pair, grp = np.unique(np.minimum(f, nb) * k + np.maximum(f, nb),
+                          return_inverse=True)
+    ws2 = np.bincount(grp, weights=weight) ** 2
+    ws2[pair // k == pair % k] *= 2.0
+    t = (np.bincount(f, weights=weight, minlength=k)
+         + np.bincount(nb, weights=weight, minlength=k))
+    return {"s0": float(weight.sum()), "s1": float(ws2.sum()),
+            "s2": float(t @ t)}
 
 
 # Per-(edges DataFrame, transform style) memo of the W summary scalars

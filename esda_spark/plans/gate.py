@@ -1,6 +1,6 @@
 """The in-core / distributed split: one table of limits, one probe.
 
-Eight operators carry a driver-side (in-core) path beside their
+Eleven operators carry a driver-side (in-core) path beside their
 distributed plan; which one runs is decided from the observed size of
 the side the in-core path would collect.  Every such decision reads
 its limit from :data:`LIMITS` and, where the in-core path needs the
@@ -36,6 +36,10 @@ LIMITS: dict[str, int] = {
     # connected components: distinct edges run as a driver union-find
     # (~32 MB at 2M; star contraction pays O(log n) rounds of jobs)
     "cc_edges": 2_000_000,
+    # global Moran / Geary / Getis G: edge rows (and value rows) whose
+    # scalars numpy forms on the driver (~48 MB of focal, neighbor,
+    # weight at 2M)
+    "stat_rows": 2_000_000,
     # crand mode="auto": sites at or above this take the tiled path —
     # where the broadcast path's O(n) driver collect becomes the wall
     # (~160 MB of doubles); no collect of its own

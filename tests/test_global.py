@@ -156,3 +156,26 @@ def test_permutation_pvalues_sane(fixture):
     res = gs.moran(pts, fixture["edges"], "y_cont", "r", permutations=99, seed=11)
     assert res["I"] > 0.5
     assert res["p_sim"] == pytest.approx(1.0 / 100.0)
+
+
+def test_global_without_broadcast_joins(fixture, monkeypatch):
+    # the distributed plans carry no broadcast hint on n-sized value
+    # frames: with broadcast joins off they give the default values
+    from esda_spark.plans import gate
+
+    pts, edges = fixture["pts"], fixture["edges"]
+    spark = pts.sparkSession
+    keys = ("bb", "ww", "bw", "J", "chi2", "chi2_p")
+    want_m = gs.moran(pts, edges, "y_cont", "r")
+    want_j = gs.join_counts(pts, edges, "y_bin")
+    monkeypatch.setitem(gate.LIMITS, "stat_rows", 0)
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        got_m = gs.moran(pts, edges, "y_cont", "r")
+        got_j = gs.join_counts(pts, edges, "y_bin")
+    finally:
+        spark.conf.set(conf, old)
+    assert got_m == pytest.approx(want_m, rel=1e-12)
+    assert {k: got_j[k] for k in keys} == {k: want_j[k] for k in keys}

@@ -5,13 +5,15 @@ The oracle only ever sees whichever side of the gate the driver data
 lands on, so the cross-gate parity lives here, as ONE matrix: every
 gated operator, times a shared set of degenerate inputs, run with the
 operator's gate in :mod:`esda_spark.plans.gate` at infinity and at 0.
-Each case either agrees bit-for-bit or — where the two paths cannot
-agree — has both sides raise."""
+Each case either agrees bit-for-bit (a global statistic's scalars: to
+1e-12 relative) or — where the two paths cannot agree — has both sides
+raise."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from esda_spark.operators import global_stats as gs
 from esda_spark.operators import weights as W
 from esda_spark.plans import gate
 from tests import oracle_numpy as onp
@@ -209,6 +211,41 @@ def _minhash_dedup_groups(spark, fixture):
     return minhash_dedup_groups(_docs(spark, fixture), threshold=0.8)
 
 
+STAT_FIXTURES = ("island", "absent", "large_mean", "constant")
+
+
+def _stat_inputs(spark, fixture):
+    """(points, edges) of a global statistic: a 6 x 6 rook lattice
+    with symmetric weights 1..3, a self-loop at 0 and an island (id 36,
+    no edges); ``absent`` adds edges to and from id 99, which has no
+    value row."""
+    rng = np.random.default_rng(5)
+    edges = [(0, 0, 2.0)]
+    for i in range(36):
+        r, c = divmod(i, 6)
+        for j in (i - 6 if r else -1, i + 6 if r < 5 else -1,
+                  i - 1 if c else -1, i + 1 if c < 5 else -1):
+            if j >= 0:
+                edges.append((i, j, 1.0 + (i + j) % 3))
+    if fixture == "absent":
+        edges += [(3, 99, 1.0), (99, 3, 2.0)]
+    y = rng.normal(10, 3, 37)
+    if fixture == "large_mean":
+        y = 1e9 + rng.normal(0, 1, 37)
+    if fixture == "constant":
+        y = np.full(37, 2.0)
+    pts = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(y)], "id long, y_cont double")
+    return pts, spark.createDataFrame(
+        edges, "focal long, neighbor long, weight double")
+
+
+def _stat(name, *args):
+    """A global statistic's call: its result dict on the fixture."""
+    return lambda spark, fixture: getattr(gs, name)(
+        *_stat_inputs(spark, fixture), "y_cont", *args)
+
+
 # operator -> (its gate, the call)
 OPERATORS = {
     "knn_edges": ("knn_targets", _knn_edges),
@@ -222,20 +259,39 @@ OPERATORS = {
     "minhash_dedup_groups": ("dedup_pairs", _minhash_dedup_groups),
 }
 CASES = [(op, fx) for op in OPERATORS for fx in FIXTURES]
-# variants on one fixture each: the k=1 same-group kNN join, and the
-# non-binary kNN weight 1/sqrt(d2) over a coincident pair — where the
-# two paths cannot agree, so both must raise
+# the global statistics (scalars, not rows) on their own fixtures
+STATS = {"moran": _stat("moran", "r"), "geary": _stat("geary", "r"),
+         "getis_g": _stat("getis_g")}
+OPERATORS.update({op: ("stat_rows", call) for op, call in STATS.items()})
+CASES += [(op, fx) for op in STATS for fx in STAT_FIXTURES]
+# variants on one fixture each: the k=1 same-group kNN join, the
+# D/V-transformed probe of Moran, and the non-binary kNN weight
+# 1/sqrt(d2) over a coincident pair — where the two paths cannot
+# agree, so both must raise (as the global statistics must at
+# constant y): case -> (in-core message, distributed message)
 OPERATORS.update(knn_join_grouped=("knn_targets", _knn_join_grouped),
-                 knn_idw=("knn_targets", _knn_idw))
-BOTH_RAISE = {("knn_idw", "coincident")}
-CASES += [("knn_join_grouped", "duplicates"), *BOTH_RAISE]
+                 knn_idw=("knn_targets", _knn_idw),
+                 moran_v=("stat_rows", _stat("moran", "v")))
+BOTH_RAISE = {("knn_idw", "coincident"): ("coincident", "DIVIDE_BY_ZERO")}
+BOTH_RAISE.update({(op, "constant"): ("division by zero",) * 2
+                   for op in ("moran", "geary")})
+# G is uncentered by definition: at constant y, and at |mean| >> spread
+# where its raw-moment variance cancels below double precision, VG
+# comes out negative on both sides
+BOTH_RAISE.update({("getis_g", fx): ("math domain error",) * 2
+                   for fx in ("constant", "large_mean")})
+CASES += [("knn_join_grouped", "duplicates"), ("moran_v", "island"),
+          ("knn_idw", "coincident")]
 
 
 def _run(spark, monkeypatch, op, fixture, limit):
     name, call = OPERATORS[op]
     monkeypatch.setitem(gate.LIMITS, name, limit)
     try:
-        return sorted(tuple(r) for r in call(spark, fixture).collect())
+        out = call(spark, fixture)
+        if isinstance(out, dict):
+            return out
+        return sorted(tuple(r) for r in out.collect())
     except Exception as exc:  # noqa: BLE001 — compared across the gate
         return exc
 
@@ -245,14 +301,20 @@ def test_gate_parity(spark, monkeypatch, op, fixture):
     incore = _run(spark, monkeypatch, op, fixture, 10**9)
     dist = _run(spark, monkeypatch, op, fixture, 0)
     if (op, fixture) in BOTH_RAISE:
-        assert isinstance(incore, Exception), incore
-        assert "coincident" in str(incore)
-        assert isinstance(dist, Exception), dist
-        assert "DIVIDE_BY_ZERO" in str(dist)
+        for side, msg in zip((incore, dist), BOTH_RAISE[op, fixture]):
+            assert isinstance(side, Exception), side
+            assert msg in str(side)
         return
     for side in (incore, dist):
         if isinstance(side, Exception):
             raise side
+    if isinstance(incore, dict):
+        # at 1e9 the two sides' means (any two summation orders) differ
+        # by an ulp, 1.2e-7, which moves I and the kurtosis by ~1e-7
+        # relative; a cancelling raw-moment numerator is off by O(1)
+        rel = 1e-6 if fixture == "large_mean" else 1e-12
+        assert incore == pytest.approx(dist, rel=rel)
+        return
     assert incore == dist
     if op == "knn_edges":
         want = {tuple(e) for e in onp.brute_knn_edges(_xy(fixture), 8)}

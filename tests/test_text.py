@@ -91,6 +91,34 @@ def test_minhash_dedup_groups(spark):
     assert got[2] == (0, 0)
 
 
+def test_short_documents(spark, monkeypatch):
+    # fewer than 3 tokens (empty text included): no shingles, no
+    # signature, and a singleton group on both sides of the gate
+    from esda_spark.plans import gate
+
+    words = " ".join(f"w{i}" for i in range(12))
+    rows = [(0, ""), (1, "hi there"), (2, words), (3, words),
+            (4, "alpha beta gamma delta"), (5, "yo")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sig = tx.minhash_signatures(df, num_hashes=8).collect()
+    assert {r.doc_id for r in sig} == {2, 3, 4}
+    for limit in (0, 10**9):
+        monkeypatch.setitem(gate.LIMITS, "dedup_pairs", limit)
+        got = {r.doc_id: (r.group_id, r.is_canonical)
+               for r in tx.minhash_dedup_groups(df).collect()}
+        assert got == {0: (0, 1), 1: (1, 1), 2: (2, 1), 3: (2, 0),
+                       4: (4, 1), 5: (5, 1)}, limit
+
+
+def test_ngram_jaccard_drops_disjoint_pairs(spark):
+    rows = [(2, "a b c d e"), (3, "f g h i j"), (4, "a b c d f")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = spark.createDataFrame([(2, 3), (2, 4)], "doc_a long, doc_b long")
+    got = [tuple(r) for r in tx.ngram_jaccard_pairs(df, pairs).collect()]
+    # {abc, bcd, cde} vs {abc, bcd, cdf}: 2 shared of 4
+    assert got == [(2, 4, 0.5)]
+
+
 def test_simhash_near_dup_property(spark):
     rows = [
         (0, " ".join(f"tok{i}" for i in range(50))),

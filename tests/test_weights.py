@@ -6,6 +6,7 @@ from esda_spark.operators.weights import (
     distance_band_edges,
     knn_edges,
     lattice_edges,
+    summary_arrays,
     transform_weights,
     weights_summary,
 )
@@ -71,6 +72,17 @@ def test_row_standardize_and_summary(spark):
     assert s["s0"] == pytest.approx(s0)
     assert s["s1"] == pytest.approx(s1)
     assert s["s2"] == pytest.approx(s2)
+
+
+def test_summary_arrays_matches_weights_summary(spark):
+    # asymmetric weights, one-way edges, a repeated edge and self-loops
+    rows = [(0, 1, 1.0), (1, 0, 3.0), (1, 2, 0.5), (2, 2, 2.0),
+            (3, 0, 1.5), (0, 0, 0.25), (2, 3, 4.0), (0, 1, 0.75)]
+    e = spark.createDataFrame(rows, "focal long, neighbor long, weight double")
+    a = np.array(rows)
+    got = summary_arrays(a[:, 0].astype(np.int64), a[:, 1].astype(np.int64),
+                         a[:, 2])
+    assert got == pytest.approx(weights_summary(e), rel=1e-12)
 
 
 def test_transform_styles(spark):

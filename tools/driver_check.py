@@ -1,11 +1,13 @@
 """Driver-style correctness sweep: Spark vs DuckDB, sorted-column
 value-hash compare (uint64 views for floats, -0.0 normalized)."""
 import json, sys
+from pathlib import Path
+
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as e
 from esda_spark.session import get_spark
 
