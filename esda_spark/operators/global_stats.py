@@ -503,6 +503,10 @@ def getis_g(
     )
     EG2 /= den_sum * den_sum * n * (n - 1) * (n - 2) * (n - 3)
     VG = EG2 - EG * EG
+    if not VG > 0:
+        # the raw moments cancel at constant y or |mean| >> spread
+        raise ValueError(f"getis_g: non-positive VG = {VG!r}; G's variance "
+                         "is undefined for constant or near-constant y")
     z_norm = (G - EG) / math.sqrt(VG)
     p_norm = float(1.0 - norm_cdf(abs(z_norm)))
     out = {

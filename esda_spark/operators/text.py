@@ -1,8 +1,8 @@
 """Text-analysis + deduplication operators over the documents table.
 
-Large-scale training-data pipeline operators, all expressed with
-built-in column functions (JVM-side, whole-stage codegen) so every one
-is verifiable against an ANSI-SQL oracle:
+Large-scale training-data pipeline operators, expressed with built-in
+column functions (JVM-side, whole-stage codegen) so every one is
+verifiable against an ANSI-SQL oracle:
 
 - exact dedup (content-hash groupBy)
 - MinHash signatures + LSH banding for near-dup candidate pairs
@@ -17,12 +17,29 @@ Portability primitive: ``h60(s)`` — a 60-bit hash derived from md5 so
 Spark (``conv`` over byte-reversed md5 hex) and DuckDB
 (``md5_number_lower >> 4``) agree bit-for-bit.  All dedup/similarity
 keys stay in exact int64 space — no floating-point comparisons.
+
+The one exception to "JVM-side" is the MinHash signature: 16 salted
+``h60`` chains per shingle cost far more as md5-hex/substring/``conv``
+string work than as hashing, so ``minhash_signatures`` runs one
+Arrow-batched ``mapInArrow`` kernel over the JVM-tokenized documents
+and calls ``hashlib.md5`` directly.  It stays bit-exact with ``h60``:
+the shingles are the same ``" "``-joined token windows (tokens are
+``[a-z0-9]+``, so pure ASCII and one UTF-8 encoding), and the value is
+bytes 8..15 of the same md5 digest read little-endian, shifted right
+by 4 — exactly ``md5_number_lower(sh || '#i') >> 4``.
 """
 
 from __future__ import annotations
 
+import hashlib
+from collections.abc import Iterator
+from functools import partial
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 # --- portable 60-bit hash ---------------------------------------------------
 
@@ -74,15 +91,76 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text",
 
 
 def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct n-gram (word-shingle) strings; none for a document of
-    fewer than ``n`` tokens."""
+    """Distinct n-gram (word-shingle) strings, in first-occurrence
+    order; ``[]`` for a null document or one of fewer than ``n`` tokens.
+
+    The shingles zip ``n`` shifted slices of the token array, so the
+    document is tokenized ``n`` times, not once per shingle (a lambda
+    over start positions that references the token expression re-runs
+    lower/split/filter for every shingle).
+    """
     toks = tokens_col(text)
-    count = F.size(toks) - (n - 1)
-    starts = F.when(count > 0, F.sequence(F.lit(1), count)).otherwise(
-        F.array().cast("array<int>"))
+    count = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    windows = F.arrays_zip(*[F.slice(toks, k + 1, count) for k in range(n)])
     grams = F.transform(
-        starts, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    return F.array_distinct(grams)
+        windows, lambda w: F.concat_ws(" ", *[w[str(k)] for k in range(n)]))
+    return F.coalesce(F.array_distinct(grams),
+                      F.array().cast("array<string>"))
+
+
+_MINHASH_CHUNK = 4096  # shingles per running-min step of ``minhash``
+
+
+def shingle_set(toks: list[str], n: int) -> set[str]:
+    """The distinct shingles of one token list, as ``shingles_col``
+    forms them: ``" "``-joined windows of ``n`` consecutive tokens."""
+    return {" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)}
+
+
+def minhash(shingles, salts: list[bytes]) -> np.ndarray:
+    """Per salt ``s``, the min over ``shingles`` of ``h60(sh || s)``.
+
+    The shingle is hashed once and the md5 state copied per salt; bytes
+    8..15 of each digest read as a little-endian uint64 and shifted
+    right by 4 are ``md5_number_lower(sh || s) >> 4``.  The min runs
+    over chunks of shingles, so a long document holds one chunk's
+    digests at a time.
+    """
+    shingles = list(shingles)
+    mins = np.full(len(salts), 1 << 60, dtype=np.int64)  # above any h60
+    for lo in range(0, len(shingles), _MINHASH_CHUNK):
+        digests = []
+        for sh in shingles[lo:lo + _MINHASH_CHUNK]:
+            base = hashlib.md5(sh.encode())
+            for salt in salts:
+                m = base.copy()
+                m.update(salt)
+                digests.append(m.digest())
+        lower = np.frombuffer(b"".join(digests), dtype="<u8")[1::2] >> 4
+        chunk = lower.reshape(-1, len(salts)).min(axis=0).astype(np.int64)
+        np.minimum(mins, chunk, out=mins)
+    return mins
+
+
+def _minhash_kernel(batches: Iterator, n: int, num_hashes: int) -> Iterator:
+    """(doc_id, toks) Arrow batches -> (doc_id, h0..h{H-1}) batches; no
+    row for a null or shorter-than-``n`` token list.  ``doc_id`` is the
+    input Arrow column taken at the kept rows, so its type and nulls
+    pass through unchanged."""
+    salts = [f"#{i}".encode() for i in range(num_hashes)]
+    names = ["doc_id"] + [f"h{i}" for i in range(num_hashes)]
+    for batch in batches:
+        keep, sigs = [], []
+        for row, toks in enumerate(batch.column(1).to_pylist()):
+            if toks is not None and len(toks) >= n:
+                keep.append(row)
+                sigs.append(minhash(shingle_set(toks, n), salts))
+        h = np.array(sigs, dtype=np.int64).reshape(-1, num_hashes)
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0).take(pa.array(keep, pa.int64()))]
+            + [pa.array(h[:, i]) for i in range(num_hashes)],
+            names=names,
+        )
 
 
 def minhash_signatures(
@@ -92,17 +170,24 @@ def minhash_signatures(
     """(doc_id, h0..h{H-1}): min over shingles of h60(shingle || '#i').
 
     Salted-hash permutations keep everything in exact integer space and
-    SQL-portable; one explode + groupBy, map-side partial min.
+    SQL-portable.  One map-only pass on the input's partitions: the JVM
+    tokenizes, and ``_minhash_kernel`` builds each document's shingle
+    set and its running per-salt min.  ``id_col`` is a key: a document
+    gets its own row (documents of one id are not merged).
     """
-    sh = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles_col(F.col(text_col), shingle_n)).alias("sh"),
+    id_field = docs.schema[id_col]
+    schema = StructType(
+        [StructField("doc_id", id_field.dataType, id_field.nullable)]
+        + [StructField(f"h{i}", LongType()) for i in range(num_hashes)]
     )
-    aggs = [
-        F.min(h60(F.concat(F.col("sh"), F.lit(f"#{i}")))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    toks = docs.select(
+        F.col(id_col).alias("doc_id"),
+        tokens_col(F.col(text_col)).alias("toks"),
+    )
+    return toks.mapInArrow(
+        partial(_minhash_kernel, n=shingle_n, num_hashes=num_hashes),
+        schema,
+    )
 
 
 def lsh_candidate_pairs(
@@ -385,7 +470,6 @@ def minhash_dedup_groups(
     edges — near-dup edge sets are sparse by construction since LSH
     thresholds candidate volume).
     """
-    import numpy as np
     import pandas as pd
 
     from esda_spark.operators.components import (
@@ -399,7 +483,7 @@ def minhash_dedup_groups(
     ids = docs.select(F.col(id_col).alias("doc_id"))
     # the banding self-join references the signature pipeline on BOTH
     # sides (different output aliases defeat exchange reuse), so the
-    # 16-way h60 signature pass would run twice — materialize it once
+    # signature kernel would run twice — materialize it once
     sig = minhash_signatures(
         docs, text_col, id_col, num_hashes, shingle_n
     ).localCheckpoint(eager=True)

@@ -277,8 +277,8 @@ BOTH_RAISE.update({(op, "constant"): ("division by zero",) * 2
                    for op in ("moran", "geary")})
 # G is uncentered by definition: at constant y, and at |mean| >> spread
 # where its raw-moment variance cancels below double precision, VG
-# comes out negative on both sides
-BOTH_RAISE.update({("getis_g", fx): ("math domain error",) * 2
+# comes out non-positive on both sides
+BOTH_RAISE.update({("getis_g", fx): ("getis_g: non-positive VG",) * 2
                    for fx in ("constant", "large_mean")})
 CASES += [("knn_join_grouped", "duplicates"), ("moran_v", "island"),
           ("knn_idw", "coincident")]

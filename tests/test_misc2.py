@@ -250,6 +250,29 @@ def test_indirect_age_standardization_ci(spark):
         np.exp(np.log(smr0) - z * sd) * s_r_all, rel=1e-9)
 
 
+def test_indirect_age_standardization(spark):
+    from esda_spark.operators.rates import (
+        indirect_age_standardization,
+        indirect_age_standardization_ci,
+    )
+
+    e = [30, 25, 25, 15, 33, 21, 30, 20]
+    b = [100, 100, 110, 90, 100, 90, 110, 90]
+    s_e = [100, 45, 120, 100, 50, 30, 200, 80]
+    s_b = [1000, 900, 1000, 900, 1000, 900, 1000, 900]
+    rows = [(i // 4, float(e[i]), float(b[i]), float(s_e[i]), float(s_b[i]))
+            for i in range(8)]
+    df = spark.createDataFrame(
+        rows, "id long, e double, b double, s_e double, s_b double")
+    got = {r.id: r.rate for r in indirect_age_standardization(df).collect()}
+    ci = {r.id: r.rate
+          for r in indirect_age_standardization_ci(df).collect()}
+    # reference doctest rates (smoothing.py:313-396)
+    assert got[0] == pytest.approx(0.23723821989528798, rel=1e-12)
+    assert got[1] == pytest.approx(0.2610803324099723, rel=1e-12)
+    assert got == pytest.approx(ci, rel=1e-12)
+
+
 def test_age_adjusted_smoother_vs_numpy(spark):
     from esda_spark.operators.rates import age_adjusted_smoother
 

@@ -49,6 +49,105 @@ def test_shingles_and_minhash(spark):
     assert (s0 == s1).sum() > (s0 == s2).sum()
 
 
+def _ref_shingles(text, n):
+    import re
+
+    if text is None:
+        return []
+    toks = [t for t in re.split(tx.TOKEN_SPLIT, text.lower()) if t]
+    grams = [" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)]
+    return list(dict.fromkeys(grams))
+
+
+def test_shingles_col_long_and_degenerate_docs(spark):
+    # 300-token docs with repeated windows: the distinct shingles in
+    # first-occurrence order; null, "" and 2-token docs give []
+    rng = np.random.default_rng(4)
+    rows = [(i, " ".join(f"w{v}" for v in rng.integers(0, 40, 300)))
+            for i in range(6)]
+    rows += [(6, None), (7, ""), (8, "two tokens"), (9, "Three TOKENS here")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for n in (1, 3, 5):
+        got = {r.doc_id: r.s for r in df.select(
+            "doc_id", tx.shingles_col(F.col("text"), n).alias("s")).collect()}
+        for did, text in rows:
+            assert got[did] == _ref_shingles(text, n), (n, did)
+        if n == 3:
+            assert [got[d] for d in (6, 7, 8, 9)] == [
+                [], [], [], ["three tokens here"]]
+
+
+SALTED = ["", "the cat sat", "a b  c", "ünïcode", "Straße İstanbul ǅ K",
+          "w1 w2 w3 w4 w5 w6 w7 w8"]
+
+
+def test_minhash_salted_hash_matches_h60_and_duckdb(spark, monkeypatch):
+    import duckdb
+
+    salts = [f"#{i}".encode() for i in range(16)]
+    df = spark.createDataFrame([(v,) for v in SALTED], "s string")
+    spark_h = {r.s: r.h for r in df.select("s", F.array(*[
+        tx.h60(F.concat(F.col("s"), F.lit(f"#{i}"))) for i in range(16)
+    ]).alias("h")).collect()}
+    con = duckdb.connect()
+    for sh in SALTED:
+        got = tx.minhash([sh], salts).tolist()
+        duck = [con.sql("select cast(md5_number_lower(? || ?) >> 4 as bigint)",
+                        params=[sh, f"#{i}"]).fetchone()[0] for i in range(16)]
+        assert got == spark_h[sh] == duck, sh
+    # a set of shingles takes the per-salt minimum, also across chunks
+    want = np.min([spark_h[sh] for sh in SALTED], 0).tolist()
+    assert tx.minhash(SALTED, salts).tolist() == want
+    monkeypatch.setattr(tx, "_MINHASH_CHUNK", 4)
+    assert tx.minhash(SALTED, salts).tolist() == want
+
+
+MINHASH_DOCS = [
+    (0, ""), (1, None), (2, "one"), (3, "one two"), (4, "a b c d e"),
+    (5, "a b c a b c a b c a b"), (6, "Straße İstanbul ǅ K gut"),
+    (7, "the cat sat on the mat"), (8, "x y z"), (9, "one two three four"),
+]
+
+
+@pytest.mark.parametrize("num_hashes", [1, 8, 16])
+@pytest.mark.parametrize("shingle_n", [1, 3, 5])
+def test_minhash_signatures_match_explode_reference(spark, num_hashes,
+                                                    shingle_n):
+    # the reference is the explode + min(h60) aggregate; two-row Arrow
+    # batches over one partition run the kernel on several batches
+    df = spark.createDataFrame(MINHASH_DOCS, "doc_id long, text string")
+    sh = df.select("doc_id", F.explode(
+        tx.shingles_col(F.col("text"), shingle_n)).alias("sh"))
+    ref = sh.groupBy("doc_id").agg(*[
+        F.min(tx.h60(F.concat(F.col("sh"), F.lit(f"#{i}")))).alias(f"h{i}")
+        for i in range(num_hashes)
+    ])
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = tx.minhash_signatures(df.coalesce(1), num_hashes=num_hashes,
+                                    shingle_n=shingle_n)
+        rows = sorted(tuple(r) for r in got.collect())
+    finally:
+        spark.conf.set(key, prev)
+    assert got.schema == ref.schema
+    assert rows == sorted(tuple(r) for r in ref.collect())
+    assert {r[0] for r in rows} == {
+        d for d, t in MINHASH_DOCS if len(_ref_shingles(t, shingle_n))}
+
+
+def test_minhash_signatures_keep_id_type(spark):
+    df = spark.createDataFrame(MINHASH_DOCS, "doc_id int, text string")
+    sig = tx.minhash_signatures(df, num_hashes=4)
+    assert sig.dtypes == [("doc_id", "int")] + [(f"h{i}", "bigint")
+                                                 for i in range(4)]
+    as_long = tx.minhash_signatures(
+        df.withColumn("doc_id", F.col("doc_id").cast("long")), num_hashes=4)
+    assert sorted(map(tuple, sig.collect())) == sorted(
+        map(tuple, as_long.collect()))
+
+
 def test_lsh_and_jaccard(spark):
     base = "word%d " * 30
     rows = [

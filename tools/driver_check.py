@@ -1,5 +1,9 @@
 """Driver-style correctness sweep: Spark vs DuckDB, sorted-column
-value-hash compare (uint64 views for floats, -0.0 normalized)."""
+value-hash compare (uint64 views for floats, -0.0 normalized).
+
+    python tools/driver_check.py [SF_DIR] [QUERY ...]
+
+Sweeps every query when no names follow the scale-factor directory."""
 import json, sys
 from pathlib import Path
 
@@ -39,13 +43,18 @@ def vhash(pdf):
         h ^= int(b) & ((1<<64)-1)
     return h
 
+q = e.queries(); s = e.oracle_sql()
+# the named queries, or every query; rows-only ones report NO_ORACLE below
+window = sys.argv[2:] or list(q)
+unknown = [k for k in window if k not in q]
+if unknown:
+    sys.exit(f"unknown queries: {unknown}")
+
 spark = get_spark("check", parallelism=8, shuffle_partitions=8)
 con = duckdb.connect()
 for t in TABLES:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
 
-q = e.queries(); s = e.oracle_sql()
-window = list(q)  # every query; rows-only ones report NO_ORACLE below
 fails = []
 for key in window:
     if key not in s:
