@@ -18,9 +18,9 @@ Spark (``conv`` over byte-reversed md5 hex) and DuckDB
 (``md5_number_lower >> 4``) agree bit-for-bit.  All dedup/similarity
 keys stay in exact int64 space — no floating-point comparisons.
 
-The one exception to "JVM-side" is the MinHash signature: 16 salted
-``h60`` chains per shingle cost far more as md5-hex/substring/``conv``
-string work than as hashing, so ``minhash_signatures`` runs one
+The one exception to "JVM-side" is the MinHash signature: its
+``num_hashes`` salted ``h60`` chains per shingle cost far more as
+md5-hex/substring/``conv`` string work than as hashing, so ``minhash_signatures`` runs one
 Arrow-batched ``mapInArrow`` kernel over the JVM-tokenized documents
 and calls ``hashlib.md5`` directly.  It stays bit-exact with ``h60``:
 the shingles are the same ``" "``-joined token windows (tokens are
