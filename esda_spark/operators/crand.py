@@ -14,16 +14,18 @@ Re-expression of the reference engine (``crand.py:59-243`` driver,
    deviation is tile-conditional permutation (permute within salted
    spatial tiles).  At 1e8 sites the broadcast is 800 MB — fine for
    cluster executors.
-3. The per-site neighborhood arrives as flat rows: one
-   ``(id=focal, neighbor, w)`` row per edge plus one marker row per
-   site carrying the observed statistic (or the site's value), hash
-   partitioned on ``id`` into one task per core and sorted by
-   ``(id, neighbor, w)`` inside each partition.  Only three primitive
-   columns cross the Arrow boundary (no ``list<double>`` column, no
-   aggregate); the kernel cuts the sorted stream into sites in numpy,
-   carrying a site whose rows straddle an Arrow batch into the next,
-   and the shuffle plays the role of the reference's joblib chunking
-   (``crand.py:360-459``).
+3. The per-site neighborhood arrives, in both regimes, as flat rows:
+   one ``(id=focal, neighbor, w)`` row per edge plus one marker row per
+   site carrying the observed statistic (or the site's value).  Only
+   three primitive columns cross the Arrow boundary (no
+   ``list<double>`` column, no aggregate).  The broadcast regime hash
+   partitions them on ``id`` into one task per core and sorts them by
+   ``(id, neighbor, w)`` inside each partition; the kernel cuts the
+   sorted stream into sites in numpy, carrying a site whose rows
+   straddle an Arrow batch into the next, and the shuffle plays the
+   role of the reference's joblib chunking (``crand.py:360-459``).
+   The tiled regime cogroups the same rows with each tile's value pool
+   and sorts a tile's rows in numpy before the same cut.
 4. A ``mapInPandas`` kernel evaluates all k simulations with NO
    (m, k, c) temporaries at all: the reference's masked draw
    ``z_no_i[P] = z[P + (P >= i)]`` (``_prepare_univariate``,
@@ -65,12 +67,10 @@ _REP_BLOCK = 2048
 _SITE_CHUNK = 8192
 
 # mode="auto" switchover (gate ``crand_tiled_sites``): below it the
-# broadcast path (driver collect + broadcast of the value vector)
-# measurably wins — interleaved A/B at 1M sites: broadcast 24.7 s vs
-# tiled 35-45 s at 9999 perms on local[8], a tie at 999 perms — so the
-# switch sits where the O(n) driver collect itself becomes the wall
-# (~160 MB of doubles at 2e7 sites), not where the tiled path merely
-# exists.  See PLANS.md.
+# broadcast path (driver collect + broadcast of the value vector) wins
+# or ties; the switch sits where the O(n) driver collect itself becomes
+# the wall, not where the tiled path merely exists.  Measurements in
+# PLANS.md (round 5).
 
 
 # --- stat kernels -----------------------------------------------------------
@@ -181,69 +181,6 @@ def vec_permutations(max_card: int, n: int, k: int, seed: int) -> np.ndarray:
     return out
 
 
-def gather_neighborhoods(
-    edges: DataFrame,
-    tiles: int | None = None,
-    seed: int = 12345,
-) -> DataFrame:
-    """(id, wlist, self_weight): per-site neighbor weights sorted by
-    neighbor id, plus the self-loop weight — the crand gather, exposed
-    so a fit issuing several crand calls over the SAME weights
-    (``moran_local_partial``: q+2 components) can pay the edge shuffle
-    once: ``gather_neighborhoods(w).persist()`` (materialize with a
-    ``count()``) then pass via ``conditional_randomization(gathered=...)``.
-
-    With ``tiles`` set the output carries the tiled path's ``tile``
-    column (``pmod(xxhash64(id, seed), tiles)``) and is
-    pre-partitioned on it.  ``tiles`` and ``seed`` MUST match the
-    crand call's: a mismatched gather lands wlists in the wrong tile
-    groups, which would silently treat most sites as islands — so the
-    gather stamps its (tiles, seed) on the returned DataFrame and
-    ``conditional_randomization`` validates the stamp and raises on a
-    mismatch (ADVICE r5).  Materialize with ``persist()`` (+ a
-    ``count()``), NOT localCheckpoint: the cached repartition keeps
-    its tile partitioning through the cogroup, so every tiled crand
-    call reuses the gather with zero per-call exchange, while a
-    checkpointed plan reports UnknownPartitioning in this Spark build
-    and re-exchanges (still skipping the edge re-aggregation)."""
-    others = edges.where(F.col("focal") != F.col("neighbor"))
-    selfw = (
-        edges.where(F.col("focal") == F.col("neighbor"))
-        .select(F.col("focal").alias("id"),
-                F.col("weight").alias("self_weight"))
-    )
-    g = (
-        others.groupBy("focal")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(neighbor, weight))),"
-                " s -> s.weight)"
-            ).alias("wlist")
-        )
-        .withColumnRenamed("focal", "id")
-    )
-    out = g.join(selfw, "id", "full").select(
-        "id",
-        F.coalesce("wlist", F.array()).alias("wlist"),
-        F.coalesce("self_weight", F.lit(0.0)).alias("self_weight"),
-    )
-    if tiles is not None:
-        spark = edges.sparkSession
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        out = (
-            out.select(
-                F.pmod(F.xxhash64(F.col("id"), F.lit(seed)), F.lit(tiles))
-                .alias("tile"),
-                "id", "wlist", "self_weight",
-            )
-            .repartition(nparts, "tile")
-        )
-        # consistency stamp validated by _crand_tiled (a mismatched
-        # tiles/seed would silently island-ify ~(1 - 1/tiles) of sites)
-        out._esda_gather_meta = (int(tiles), int(seed))
-    return out
-
-
 def _p_schema(moments: bool, keep: bool) -> str:
     """Schema of the p columns a crand kernel appends."""
     out = ", p_sim double"
@@ -273,16 +210,6 @@ def _p_frame(res: dict, rows, obs, selfws, cards, flat_w, z, P_full,
     if kw["keep"]:
         res["sims"] = sims_out
     return pd.DataFrame(res)
-
-
-def _flatten(wl) -> tuple[np.ndarray, np.ndarray]:
-    """Per-site neighbor weight lists -> (cards, flat_w) buffers."""
-    cards = np.fromiter((len(w) for w in wl), dtype=np.int64, count=len(wl))
-    flat_w = (
-        np.concatenate([np.asarray(w, dtype=np.float64) for w in wl if len(w)])
-        if cards.sum() else np.empty(0)
-    )
-    return cards, flat_w
 
 
 def _max_card(edges: DataFrame) -> int:
@@ -379,6 +306,33 @@ def _sites(ids: np.ndarray, nb: np.ndarray, w: np.ndarray):
     return ids[new], w[new], seg, nb[edge], w[edge]
 
 
+def _self_weights(sid, seg, nb, w):
+    """(is_self mask over the edge rows, per-site self-loop weight):
+    the largest weight of a site's self-loops, 0 without one."""
+    is_self = nb == sid[seg]
+    selfw = np.zeros(len(sid))
+    if is_self.any():
+        top = np.full(len(sid), -np.inf)
+        np.maximum.at(top, seg[is_self], w[is_self])
+        selfw = np.where(np.isneginf(top), 0.0, top)
+    return is_self, selfw
+
+
+def _site_rows(edges: DataFrame, marks: DataFrame, wcol) -> DataFrame:
+    """The flat (id, neighbor, w) rows both regimes read: one row per
+    edge (weight ``wcol``) plus one ``_MARK`` row per site of ``marks``
+    with a non-null value."""
+    edge_rows = edges.select(
+        F.col("focal").cast("long").alias("id"),
+        F.col("neighbor").cast("long"), wcol.cast("double").alias("w"),
+    )
+    mark_rows = marks.where(F.col("w").isNotNull()).select(
+        F.col("id").cast("long"), F.lit(_MARK).alias("neighbor"),
+        F.col("w").cast("double"),
+    )
+    return edge_rows.unionByName(mark_rows)
+
+
 def flat_crand(
     values: DataFrame,
     edges: DataFrame,
@@ -443,12 +397,7 @@ def flat_crand(
                 ok = pos >= 0
                 if not ok.all():
                     seg, nb, w, pos = seg[ok], nb[ok], w[ok], pos[ok]
-            is_self = nb == sid[seg]
-            selfw = np.zeros(m)
-            if is_self.any():
-                top = np.full(m, -np.inf)
-                np.maximum.at(top, seg[is_self], w[is_self])
-                selfw = np.where(np.isneginf(top), 0.0, top)
+            is_self, selfw = _self_weights(sid, seg, nb, w)
             if local is not None:
                 wi = np.bincount(seg, weights=w, minlength=m)
                 lag = np.bincount(seg, weights=w * z[pos], minlength=m)
@@ -469,19 +418,11 @@ def flat_crand(
                 z, perm_bc.value, kw, moments,
             )
 
-    edge_rows = edges.select(
-        F.col("focal").cast("long").alias("id"),
-        F.col("neighbor").cast("long"), wcol.cast("double").alias("w"),
-    )
-    mark_rows = marks.where(F.col("w").isNotNull()).select(
-        F.col("id").cast("long"), F.lit(_MARK).alias("neighbor"),
-        F.col("w").cast("double"),
-    )
     # one task per core (REPARTITION_BY_NUM: AQE keeps the count); a
     # site's rows land contiguous, marker first, neighbors ascending
     sc = values.sparkSession.sparkContext
     return (
-        edge_rows.unionByName(mark_rows)
+        _site_rows(edges, marks, wcol)
         .repartition(sc.defaultParallelism, "id")
         .sortWithinPartitions("id", "neighbor", "w")
         .mapInPandas(kernel, schema=out_schema)
@@ -502,7 +443,6 @@ def conditional_randomization(
     moments: bool = False,
     mode: str = "auto",
     tiles: int = 64,
-    gathered: DataFrame | None = None,
     n_sites: int | None = None,
 ) -> DataFrame:
     """Per-site pseudo p-values under conditional permutation.
@@ -531,90 +471,30 @@ def conditional_randomization(
               against the reference), tiled at or above it — the
               regime where the broadcast path's O(n) driver collect
               becomes the binding constraint.
-    gathered: optional precomputed :func:`gather_neighborhoods` output
-              (id, wlist, self_weight[, tile]) — lets a fit that issues
-              several crand calls over the same weights pay the edge
-              gather shuffle once (checkpoint it first).  Works in both
-              modes: broadcast joins it to ``observed``; tiled feeds it
-              straight into the tile cogroup (gather with
-              ``tiles=/seed=`` matching this call so the checkpointed
-              tile partitioning is reused verbatim — a tile-less gather
-              is re-tiled by one projection + exchange, still skipping
-              the edge re-aggregation).
     n_sites:  row count of ``values`` if the caller already knows it —
               skips the count job mode="auto" otherwise runs per call.
     Returns (id, p_sim [, moment cols] [, sims array<double>]).
     """
+    if mode not in ("auto", "broadcast", "tiled"):
+        raise ValueError(
+            f"mode must be 'auto', 'broadcast' or 'tiled', got {mode!r}")
     if mode == "auto":
         if n_sites is None:
             n_sites = values.count()
         mode = ("tiled" if n_sites >= gate.LIMITS["crand_tiled_sites"]
                 else "broadcast")
+    marks = observed.select("id", F.col("observed").alias("w"))
     args = (stat_func, permutations, seed, scaling, island_weight,
             alternative, keep, moments)
     if mode == "tiled":
-        return _crand_tiled(values, edges, observed, *args, tiles,
-                            gathered=gathered)
-    if gathered is None:
-        marks = observed.select("id", F.col("observed").alias("w"))
-        return flat_crand(values, edges, marks, *args)
-    return _crand_gathered(values, observed, gathered, *args)
-
-
-def _crand_gathered(
-    values: DataFrame,
-    observed: DataFrame,
-    gathered: DataFrame,
-    stat_func: str,
-    permutations: int,
-    seed: int,
-    scaling: float | None,
-    island_weight: float,
-    alternative: str,
-    keep: bool,
-    moments: bool,
-) -> DataFrame:
-    """Broadcast regime over a precomputed (typically persisted)
-    :func:`gather_neighborhoods` frame: the table width comes from it
-    instead of a re-scan of the edges, and each site's wlist joins to
-    its observed value."""
-    ids_bc, z_bc, perm_bc, scaling = _broadcast_setup(
-        values, permutations, seed, scaling,
-        lambda: gathered.agg(F.max(F.size("wlist"))).collect()[0][0] or 1)
-    kw = dict(
-        scaling=scaling, island_weight=float(island_weight),
-        alternative=alternative, keep=keep, permutations=permutations,
-        stat_func=stat_func,
-    )
-    sc = values.sparkSession.sparkContext
-    base = (
-        observed.join(gathered, "id", "left")
-        .select(
-            "id", "observed",
-            F.coalesce("wlist", F.array()).alias("wlist"),
-            F.coalesce("self_weight", F.lit(0.0)).alias("self_weight"),
-        )
-        .repartition(max(sc.defaultParallelism, 8))  # spread the kernel
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(np.int64)
-            yield _p_frame(
-                {"id": ids}, _rank(ids_bc.value, ids),
-                pdf["observed"].to_numpy(np.float64),
-                pdf["self_weight"].to_numpy(np.float64),
-                *_flatten(pdf["wlist"]), z_bc.value, perm_bc.value, kw,
-                moments,
-            )
-
-    return base.mapInPandas(run, schema="id long" + _p_schema(moments, keep))
+        return _crand_tiled(values, edges, marks, *args, tiles)
+    return flat_crand(values, edges, marks, *args)
 
 
 def _crand_tiled(
     values: DataFrame,
     edges: DataFrame,
-    observed: DataFrame,
+    marks: DataFrame,
     stat_func: str,
     permutations: int,
     seed: int,
@@ -624,7 +504,6 @@ def _crand_tiled(
     keep: bool,
     moments: bool,
     tiles: int,
-    gathered: DataFrame | None = None,
 ) -> DataFrame:
     """Tile-conditional permutation: the beyond-broadcast scale path.
 
@@ -636,126 +515,30 @@ def _crand_tiled(
     Global constants (the (n-1)/sum(z^2) scaling) stay GLOBAL so
     statistics remain comparable across tiles.
 
-    The tile id is a pure function of the site id, so the whole base
-    side is assembled WITHOUT joins and the neighborhood data pays
-    exactly ONE exchange: edges (tile computed from ``focal``),
-    observed values and self-weights union into one long-form table,
-    repartition by tile once, and a single (tile, focal) aggregate
-    produces (wlist, observed, self_weight) rows that flow into the
-    cogroup on the very same tile partitioning.  Tile-local dense
-    indices are assigned inside the kernel (searchsorted against the
-    tile pool's sorted ids) instead of a window, so the value table is
-    also shuffled exactly once — by the cogroup itself.  (The
-    round-3/4 shape gathered by focal and re-shuffled the full wlist
-    table for the cogroup — a doubled edge-sized shuffle, the dominant
-    cost at 1e9 sites.)
-
-    With ``gathered`` (a checkpointed :func:`gather_neighborhoods`
-    output, ideally built with matching ``tiles``/``seed`` so its tile
-    partitioning feeds the cogroup without any exchange) the
-    neighborhood side pays NOTHING per call: ``observed`` rides the
-    n-sized pool exchange as marker rows and the kernel splits them
-    back out — a fit issuing several crand calls over one W (partial
-    MV Moran: q+2 components) gathers the edge table exactly once,
-    matching the reference's one-gather-per-fit behavior
-    (``/root/reference/esda/crand.py:179-221``).
+    The tile id is a pure function of the site id, so the flat site
+    rows of :func:`_site_rows` (``marks`` = (id, w) observed values)
+    take their tile by projection and cogroup with the value pool: each
+    side pays exactly one exchange, the cogroup's.  The kernel sorts a
+    tile's rows by (id, neighbor, w) and cuts them into sites as the
+    broadcast regime does; tile-local dense indices are the ranks of
+    the site ids in the tile pool's sorted ids.
     """
-    spark = values.sparkSession
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if gathered is not None and "tile" in gathered.columns:
-        meta = getattr(gathered, "_esda_gather_meta", None)
-        if meta is not None and meta != (int(tiles), int(seed)):
-            raise ValueError(
-                f"gathered neighborhoods were tiled with tiles/seed="
-                f"{meta} but this crand call uses ({tiles}, {seed}) — "
-                "a mismatched gather silently islands most sites; "
-                "rebuild the gather with matching parameters"
-            )
-
     def tile_of(col):
         return F.pmod(F.xxhash64(col, F.lit(seed)), F.lit(tiles))
 
     zcols = [c for c in values.columns if c != "id"]
-    zfirst = zcols[0]
-    agg = values.agg(
-        F.count("*").alias("n"),
-        F.sum(F.col(zfirst) * F.col(zfirst)).alias("ss"),
-    ).collect()[0]
-    n = int(agg["n"])
     if scaling is None:
-        scaling = (n - 1) / float(agg["ss"])
-
-    dnull = F.lit(None).cast("double")
-    lnull = F.lit(None).cast("long")
-    if gathered is None:
-        edge_rows = edges.select(
-            tile_of(F.col("focal")).alias("tile"),
-            F.col("focal").alias("id"),
-            F.when(F.col("focal") != F.col("neighbor"), F.col("neighbor"))
-            .alias("neighbor"),
-            F.col("weight"),
-            dnull.alias("observed"),
-            # self-loop edges carry their weight in the self_weight slot
-            F.when(F.col("focal") == F.col("neighbor"), F.col("weight"))
-            .alias("self_weight"),
-        )
-        obs_rows = observed.select(
-            tile_of(F.col("id")).alias("tile"), F.col("id"),
-            lnull.alias("neighbor"), dnull.alias("weight"),
-            F.col("observed"), dnull.alias("self_weight"),
-        )
-        # THE single neighborhood exchange: the (tile, focal) gather runs
-        # inside the tile partitioning and the cogroup reuses it verbatim
-        base = (
-            edge_rows.unionByName(obs_rows)
-            .repartition(nparts, "tile")
-            .groupBy("tile", "id")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(CASE WHEN neighbor IS"
-                    " NOT NULL THEN struct(neighbor, weight) END)),"
-                    " s -> s.weight)"
-                ).alias("wlist"),
-                F.max("observed").alias("observed"),
-                F.coalesce(F.max("self_weight"), F.lit(0.0))
-                .alias("self_weight"),
-            )
-            # sites come from `observed` (edges whose focal was never
-            # scored drop out, islands with no edges stay in)
-            .where(F.col("observed").isNotNull())
-        )
-        pool = values.select(
-            tile_of(F.col("id")).alias("tile"), F.col("id").alias("pid"),
-            *zcols,
-        )
-    else:
-        # precomputed gather: the neighborhood side pays nothing per
-        # call (tile column present -> checkpointed tile partitioning
-        # flows into the cogroup; absent -> one projection + exchange,
-        # still no edge re-aggregation).  `observed` rides the n-sized
-        # pool exchange as _kind=1 marker rows; sites and islands come
-        # from it exactly as in the union path.
-        base = (
-            gathered if "tile" in gathered.columns
-            else gathered.select(
-                tile_of(F.col("id")).alias("tile"),
-                "id", "wlist", "self_weight",
-            )
-        ).select("tile", "id", "wlist", "self_weight")
-        pool = (
-            values.select(
-                tile_of(F.col("id")).alias("tile"),
-                F.col("id").alias("pid"), *zcols,
-                dnull.alias("_obs"), F.lit(0).alias("_kind"),
-            )
-            .unionByName(observed.select(
-                tile_of(F.col("id")).alias("tile"),
-                F.col("id").alias("pid"),
-                *[dnull.alias(c) for c in zcols],
-                F.col("observed").alias("_obs"), F.lit(1).alias("_kind"),
-            ))
-        )
-
+        zfirst = F.col(zcols[0])
+        agg = values.agg(F.count("*").alias("n"),
+                         F.sum(zfirst * zfirst).alias("ss")).collect()[0]
+        scaling = (int(agg["n"]) - 1) / float(agg["ss"])
+    rows = _site_rows(edges, marks, F.col("weight")).withColumn(
+        "tile", tile_of(F.col("id")))
+    pool = values.select(
+        # hashed as the long the site rows carry, so both sides agree
+        tile_of(F.col("id").cast("long")).alias("tile"),
+        F.col("id").alias("pid"), *zcols,
+    )
     out_schema = "id long" + _p_schema(moments, keep)
     kw = dict(
         scaling=float(scaling), island_weight=float(island_weight),
@@ -763,28 +546,35 @@ def _crand_tiled(
         stat_func=stat_func,
     )
 
-    def sweep(tile, vals, site_ids, obs, selfws, wl):
-        """crand over one tile: draws come from the tile's value pool
-        ``vals``; tile-local dense index = rank of id within the pool
-        (one sort of the tile's ids, no window and no extra shuffle)."""
-        if len(site_ids) and not len(vals):
-            # loud: silently dropping the tile's sites would be an
-            # empty-output correctness hole
-            raise ValueError(
-                f"tile {tile} has {len(site_ids)} observed sites but an "
-                "empty value pool; values must cover every site's tile"
-            )
-        if not len(site_ids):
+    def run_tile(key, rows_pdf, pool_pdf):
+        """crand over one tile: draws come from the tile's value pool."""
+        tile = int(key[0])
+        sid = np.empty(0, dtype=np.int64)
+        if len(rows_pdf):
+            ids = rows_pdf["id"].to_numpy(np.int64)
+            nb = rows_pdf["neighbor"].to_numpy(np.int64)
+            w = rows_pdf["w"].to_numpy(np.float64)
+            o = np.lexsort((w, nb, ids))
+            sid, obs, seg, nb, w = _sites(ids[o], nb[o], w[o])
+        if not len(sid):
             return pd.DataFrame(
                 {c.split(" ")[0]: [] for c in out_schema.split(", ")}
             )
-        vals = vals.sort_values("pid")
-        pool_ids = vals["pid"].to_numpy(np.int64)
-        z = vals[zcols].to_numpy(np.float64)
+        if not len(pool_pdf):
+            # loud: silently dropping the tile's sites would be an
+            # empty-output correctness hole
+            raise ValueError(
+                f"tile {tile} has {len(sid)} observed sites but an "
+                "empty value pool; values must cover every site's tile"
+            )
+        pool_pdf = pool_pdf.sort_values("pid")
+        pool_ids = pool_pdf["pid"].to_numpy(np.int64)
+        z = pool_pdf[zcols].to_numpy(np.float64)
         if z.shape[1] == 1:
             z = z[:, 0]
         n_t = len(pool_ids)
-        cards, flat_w = _flatten(wl)
+        is_self, selfw = _self_weights(sid, seg, nb, w)
+        cards = np.bincount(seg[~is_self], minlength=len(sid))
         max_card = int(cards.max(initial=0)) or 1
         if max_card >= n_t - 1:
             raise ValueError(
@@ -796,46 +586,13 @@ def _crand_tiled(
             max_card, n_t, kw["permutations"],
             seed ^ (0x9E3779B9 * (tile + 1) & 0x7FFFFFFF),
         )
-        lids = _rank(pool_ids, site_ids)
-        if (lids < 0).any():
-            raise ValueError(
-                f"tile {tile}: observed contains ids absent from values "
-                "(a gathered input's tiles/seed must match this call's)"
-            )
-        return _p_frame({"id": site_ids}, lids, obs, selfws, cards, flat_w,
-                        z, P_full, kw, moments)
+        return _p_frame({"id": sid}, _rank(pool_ids, sid), obs, selfw,
+                        cards, w[~is_self], z, P_full, kw, moments)
 
-    def run_tile(key, base_pdf, pool_pdf):
-        return sweep(
-            int(key[0]), pool_pdf, base_pdf["id"].to_numpy(np.int64),
-            base_pdf["observed"].to_numpy(np.float64),
-            base_pdf["self_weight"].to_numpy(np.float64), base_pdf["wlist"],
-        )
-
-    def run_tile_gathered(key, base_pdf, pool_pdf):
-        kind = pool_pdf["_kind"].to_numpy()
-        obs_pdf = pool_pdf[kind == 1]
-        site_ids = obs_pdf["pid"].to_numpy(np.int64)
-        # neighborhood lookup: a site absent from the gather is an
-        # island (empty wlist) — same semantics as the union path
-        bids = base_pdf["id"].to_numpy(np.int64)
-        border = np.argsort(bids, kind="stable")
-        pos = _rank(bids[border], site_ids)
-        has = np.flatnonzero(pos >= 0)
-        row = border[pos[has]]
-        selfws = np.zeros(len(site_ids))
-        selfws[has] = base_pdf["self_weight"].to_numpy(np.float64)[row]
-        wl, wl_all = [[]] * len(site_ids), base_pdf["wlist"].to_numpy()
-        for i, r in zip(has, row):
-            wl[i] = wl_all[r]
-        return sweep(int(key[0]), pool_pdf[kind == 0], site_ids,
-                     obs_pdf["_obs"].to_numpy(np.float64), selfws, wl)
-
-    kernel_fn = run_tile if gathered is None else run_tile_gathered
     return (
-        base.groupBy("tile")
+        rows.groupBy("tile")
         .cogroup(pool.groupBy("tile"))
-        .applyInPandas(kernel_fn, schema=out_schema)
+        .applyInPandas(run_tile, schema=out_schema)
     )
 
 

@@ -822,6 +822,9 @@ def moran_local_partial(
     DtDi = np.linalg.inv(G)
 
     w = transform_weights(edges, "R")
+    if permutations:
+        # the lag and all q crand calls read this one W
+        w = w.persist()
     wy = spatial_lag(w, zd.select("id", F.col("yc").alias("v")), "v", "wy")
     base = zd.join(wy, "id", "left").withColumn(
         "wy", F.coalesce("wy", F.lit(0.0))
@@ -836,25 +839,6 @@ def moran_local_partial(
             f"lmo_{j}", F.col(f"left_{j}") * F.col("wy") * F.lit(n - 1.0)
         )
     if permutations:
-        # one edge gather shared by all q+2 component calls (the same
-        # W backs every component; re-gathering per call multiplied the
-        # dominant shuffle by the component count).  The mode is decided
-        # ONCE from n so the tiled regime gathers tile-partitioned and
-        # every component call reuses the checkpointed partitioning.
-        from esda_spark.operators.crand import gather_neighborhoods
-
-        mode = ("tiled" if n >= gate.LIMITS["crand_tiled_sites"]
-                else "broadcast")
-        # persist, NOT localCheckpoint: a cached repartition keeps its
-        # tile partitioning through the cogroup (InMemoryTableScan
-        # reports the cached plan's outputPartitioning), so the tiled
-        # components reuse the gather with ZERO per-call exchange;
-        # checkpointed plans come back as UnknownPartitioning in this
-        # Spark build and would re-exchange every call.
-        gathered = gather_neighborhoods(
-            w, tiles=64 if mode == "tiled" else None, seed=seed
-        ).persist()
-        gathered.count()
         for j in range(q):
             vals = base.select(
                 "id", F.col(f"left_{j}").alias("zx"), F.col("yc").alias("zy")
@@ -865,7 +849,7 @@ def moran_local_partial(
             pj = conditional_randomization(
                 vals, w, obs, "left_times_lag",
                 permutations=permutations, seed=seed, scaling=1.0,
-                alternative=alternative, mode=mode, gathered=gathered,
+                alternative=alternative, n_sites=n,
             ).withColumnRenamed("p_sim", f"p_sim_{j}")
             base = base.join(pj, "id", "left")
     keep_cols = (
@@ -875,11 +859,11 @@ def moran_local_partial(
     )
     out = base.select(*keep_cols)
     if permutations:
-        # materialize before releasing the shared gather — the lazy
-        # result is its only remaining consumer, and without this the
-        # edge-sized cached table leaks for the session lifetime
+        # materialize before releasing the shared W — the lazy result is
+        # its only remaining consumer, and without this the edge-sized
+        # cached table leaks for the session lifetime
         out = out.localCheckpoint(eager=True)
-        gathered.unpersist()
+        w.unpersist()
     return out
 
 

@@ -344,25 +344,3 @@ def test_incore_knn_tiny_and_degenerate(spark):
     # every point gets the 3 others, ordered ties by id
     assert len(got) == 12
     assert (0, 1) in got and (0, 2) in got and (0, 3) in got
-
-
-def test_gather_tiles_seed_mismatch_raises(spark):
-    from esda_spark.operators.crand import (
-        conditional_randomization,
-        gather_neighborhoods,
-    )
-
-    n = 40
-    pts = spark.range(n).select(
-        F.col("id"), (F.rand(1) * 10).alias("z"))
-    edges = spark.createDataFrame(
-        [(i, (i + 1) % n, 1.0) for i in range(n)],
-        "focal long, neighbor long, weight double",
-    )
-    gathered = gather_neighborhoods(edges, tiles=4, seed=111)
-    obs = pts.select("id", F.col("z").alias("observed"))
-    with pytest.raises(ValueError, match="tiles/seed"):
-        conditional_randomization(
-            pts, edges, obs, "moran_local", permutations=9, seed=222,
-            mode="tiled", tiles=4, gathered=gathered,
-        )

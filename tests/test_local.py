@@ -352,14 +352,41 @@ def test_crand_tiled_moments_and_keep(spark):
         assert r.V_sim == pytest.approx(sims.var(), rel=1e-9, abs=1e-15)
         assert 0 < r.p_sim <= 1
 
-def test_crand_tiled_gathered_exact_parity(spark):
-    # the precomputed-gather tiled path must be BIT-identical to the
-    # in-call gather: same tiling + same per-tile permutation stream
-    # (this is what lets multi-call fits reuse one gather at scale)
-    from esda_spark.operators.crand import (
-        conditional_randomization,
-        gather_neighborhoods,
-    )
+
+# per-site directed counts of the tiled regime on the fixture of
+# test_crand_tiled_recorded_parity (seed 5, 99 perms), recorded when the
+# regime still read collect_list neighborhoods, in the format of
+# _RECORDED_COUNTS
+_TILED_COUNTS = {
+    3:
+        "0114101528384800153934324518284827112332281415284526161409480601"
+        "2340090300143943280830381648461518443824272427384415363438384611"
+        "2949274845434137000533173234263235184536043737244729393205202405"
+        "2518254227063323033529390801123920213217133220364501361121443604"
+        "3238232601344942283001262241333106000018261903224618082410042824"
+        "0011410627450046434444141630144600480048120609061504433407221829"
+        "1215112821150216094842481549422822402803203402113232091327363748"
+        "1446101945233526452443200216214426393305004239491303360129194111"
+        "1507121720033140052900124426404339350236491507473823124034194306"
+        "40074113000201304309",
+    5:
+        "0112142237392600173947482832494429044143221924194040021903190402"
+        "1949040901033449210442402544490708282618221026413007284707204901"
+        "4722214949343936010848153106182113123831124040403143351213170406"
+        "0817344110164641082745380402033911363711071436404505160934413900"
+        "4940121504263043413005212433303507010108202801063525131712032917"
+        "0019460036410134363933251322044600440047281116040303254501183045"
+        "1212222529060234103633481640491935314306362301233325160727252548"
+        "1446143139182630243132280309313423354711014749451907370233084304"
+        "2112321344024537112100103515264041460249334702414637054819243729"
+        "40164522000500444710",
+}
+
+
+def test_crand_tiled_recorded_parity(spark):
+    # the tiled regime's exact output, through an island, self-loops at
+    # 0.5, a null observed value (site 11) and an unscored focal (13)
+    from esda_spark.operators.crand import conditional_randomization
     from esda_spark.operators.weights import knn_edges, transform_weights
 
     rng = np.random.default_rng(23)
@@ -372,37 +399,27 @@ def test_crand_tiled_gathered_exact_parity(spark):
         "id long, x double, y double, y_cont double",
     )
     edges = knn_edges(pts, k=5, cell_size=20.0)
-    # drop one site's edges entirely -> island exercises the
-    # empty-wlist lookup in the gathered kernel
     island = 7
     edges = edges.where(
         (F.col("focal") != island) & (F.col("neighbor") != island)
     )
-    w = transform_weights(edges, "R")
+    w = transform_weights(edges, "R").unionByName(spark.createDataFrame(
+        [(i, i, 0.5) for i in range(0, n, 37)],
+        "focal long, neighbor long, weight double"))
     z = pts.select("id", (F.col("y_cont") / float(y.std())).alias("z"))
     obs = ls.moran_local(pts, edges, "y_cont", permutations=0).select(
-        "id", F.col("Is").alias("observed"))
-
-    def run(**kw):
-        res = conditional_randomization(
+        "id", F.when(F.col("id") == 11, None).otherwise(F.col("Is"))
+        .alias("observed")).where(F.col("id") != 13)
+    for tiles, rec in _TILED_COUNTS.items():
+        pdf = conditional_randomization(
             z, w, obs, "moran_local", permutations=99, seed=5,
-            mode="tiled", tiles=3, moments=True, **kw,
-        ).orderBy("id").toPandas()
-        return res
-
-    plain = run()
-    # persist = the recommended reuse pattern (keeps tile partitioning);
-    # the tile-less localCheckpoint covers the re-tile projection path
-    tiled_gather = gather_neighborhoods(w, tiles=3, seed=5).persist()
-    tiled_gather.count()
-    flat_gather = gather_neighborhoods(w).localCheckpoint(eager=True)
-    for g in (tiled_gather, flat_gather):
-        got = run(gathered=g)
-        assert list(got["id"]) == list(plain["id"])
-        for col in ("p_sim", "E_sim", "V_sim"):
-            np.testing.assert_array_equal(
-                got[col].to_numpy(), plain[col].to_numpy(), err_msg=col
-            )
+            mode="tiled", tiles=tiles, moments=True,
+        ).toPandas().sort_values("id")
+        np.testing.assert_array_equal(
+            pdf["id"], [i for i in range(n) if i not in (11, 13)])
+        got = np.rint(pdf["p_sim"].to_numpy() * 100).astype(int) - 1
+        want = [int(rec[i:i + 2]) for i in range(0, len(rec), 2)]
+        np.testing.assert_array_equal(got, want, err_msg=f"tiles={tiles}")
 
 
 # ---------------------------------------------------------------------------
@@ -716,8 +733,7 @@ def _sparse(df, *cols):
 def test_flat_crand_sparse_ids(spark, fx, mixed):
     # the broadcast regime ranks value ids, so any unique ids give the
     # dense run's statistics site for site
-    from esda_spark.operators.crand import (
-        conditional_randomization, gather_neighborhoods)
+    from esda_spark.operators.crand import conditional_randomization
     from esda_spark.operators.weights import transform_weights
 
     pts, edges = fx["pts"], mixed["edges"]
@@ -734,19 +750,17 @@ def test_flat_crand_sparse_ids(spark, fx, mixed):
     vals = dense[["id", "z"]]
     obs = dense[["id", "Is"]].rename(columns={"Is": "observed"})
     w = transform_weights(edges, "R")
-    for gathered in (False, True):
-        p = []
-        for ids in (lambda i: i, lambda i: i * 7 + 1000):
-            e = w.select(*[(ids(F.col(c)) if c != "weight" else F.col(c))
-                           .alias(c) for c in w.columns])
-            got = conditional_randomization(
-                spark.createDataFrame(vals.assign(id=ids(vals["id"]))),
-                e, spark.createDataFrame(obs.assign(id=ids(obs["id"]))),
-                "moran_local", permutations=99, seed=3,
-                gathered=gather_neighborhoods(e) if gathered else None,
-            ).toPandas().sort_values("id")
-            p.append(got["p_sim"].to_numpy())
-        np.testing.assert_array_equal(p[1], p[0])
+    p = []
+    for ids in (lambda i: i, lambda i: i * 7 + 1000):
+        e = w.select(*[(ids(F.col(c)) if c != "weight" else F.col(c))
+                       .alias(c) for c in w.columns])
+        got = conditional_randomization(
+            spark.createDataFrame(vals.assign(id=ids(vals["id"]))),
+            e, spark.createDataFrame(obs.assign(id=ids(obs["id"]))),
+            "moran_local", permutations=99, seed=3,
+        ).toPandas().sort_values("id")
+        p.append(got["p_sim"].to_numpy())
+    np.testing.assert_array_equal(p[1], p[0])
 
 
 def test_flat_crand_bad_ids(spark, fx, mixed):
@@ -764,3 +778,6 @@ def test_flat_crand_bad_ids(spark, fx, mixed):
     with pytest.raises(Exception, match="absent from values"):
         conditional_randomization(z, mixed["edges"], obs, "moran_local",
                                   permutations=9, mode="broadcast").collect()
+    with pytest.raises(ValueError, match="'auto', 'broadcast' or 'tiled'"):
+        conditional_randomization(z, mixed["edges"], obs, "moran_local",
+                                  permutations=9, mode="tile")

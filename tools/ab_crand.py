@@ -5,7 +5,10 @@ conditional_randomization(mode="broadcast") / (mode="tiled") for REPS
 rounds each (interleaving cancels the shared VM's drift), reporting
 per-mode samples, min and median.  This is the measurement behind the
 ``crand_tiled_sites`` crossover in ``esda_spark/plans/gate.py::LIMITS``
-(documented in PLANS.md / crand.py).
+(documented in PLANS.md / crand.py).  Each round also times
+``moran_local_partial`` on the same points and weights (covariate
+``e``, 99 permutations) as the ``partial`` sample set; running the
+script alternately from two checkouts compares them.
 
 Usage: python tools/ab_crand.py [n] [perms] [reps] [tiles]
 
@@ -22,7 +25,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import functions as F
 
 from esda_spark.operators.crand import conditional_randomization
-from esda_spark.operators.local_stats import moran_local
+from esda_spark.operators.local_stats import moran_local, moran_local_partial
 from esda_spark.operators.weights import knn_edges, transform_weights
 from esda_spark.session import get_spark
 from esda_spark.sources.points import synthetic_points
@@ -61,8 +64,11 @@ for mode in ("broadcast", "tiled"):
         obs.where(F.col("id") < n_warm), "moran_local",
         permutations=99, seed=1, scaling=1.0, mode=mode, tiles=TILES,
     ).agg(F.sum("p_sim")).collect()
+moran_local_partial(pts.where(F.col("id") < n_warm),
+                    edges.where(F.col("focal") < n_warm), "y_cont", ["e"],
+                    permutations=99, seed=1)
 
-samples = {"broadcast": [], "tiled": []}
+samples = {"broadcast": [], "tiled": [], "partial": []}
 for r in range(REPS):
     for mode in ("broadcast", "tiled"):
         t0 = time.perf_counter()
@@ -71,6 +77,11 @@ for r in range(REPS):
             seed=12345, scaling=1.0, mode=mode, tiles=TILES,
         ).agg(F.sum("p_sim")).collect()
         samples[mode].append(round(time.perf_counter() - t0, 2))
+    t0 = time.perf_counter()
+    # returns an eagerly checkpointed frame: the fit is done on return
+    moran_local_partial(pts, edges, "y_cont", ["e"], permutations=99,
+                        seed=12345)
+    samples["partial"].append(round(time.perf_counter() - t0, 2))
 
 out = {"metric": "crand broadcast vs tiled interleaved A/B",
        "n": n, "permutations": PERMS, "tiles": TILES, "cpus": CPUS}
