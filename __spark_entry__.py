@@ -48,7 +48,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     key = ("edges", id(spark), sf_dir)
     if key not in _CACHE:
-        df = knn_edges(_points(spark, sf_dir), k=K, cell_size=8.0).cache()
+        df = knn_edges(_points(spark, sf_dir), k=K).cache()
         df.count()
         _CACHE[key] = df
     return _CACHE[key]
@@ -386,7 +386,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         left = _points(spark, sf)
         right = _points(spark, sf, "supplier")
-        return knn_join(left, right, k=3, cell_size=15.0).select(
+        return knn_join(left, right, k=3).select(
             F.col("left_id"), F.col("right_id"), F.col("rank")
         )
 
@@ -683,7 +683,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from esda_spark.operators.adbscan import cluster_boundaries, dbscan
 
         pts = _points(spark, sf)
-        labels = dbscan(pts, eps=2.0, min_samples=4, cell_size=2.0)
+        labels = dbscan(pts, eps=2.0, min_samples=4)
         return cluster_boundaries(pts, labels)
 
     def prominence_q(spark, sf):
@@ -737,8 +737,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def dbscan_q(spark, sf):
         from esda_spark.operators.adbscan import dbscan
 
-        return dbscan(_points(spark, sf), eps=2.0, min_samples=4,
-                      cell_size=2.0)
+        return dbscan(_points(spark, sf), eps=2.0, min_samples=4)
 
     def adbscan_q(spark, sf):
         from esda_spark.operators.adbscan import adbscan

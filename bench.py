@@ -407,8 +407,9 @@ def scale_smoke(n: int) -> None:
     """Flagship path at an arbitrary synthetic size (beyond the driver
     testdata): n geocoded points with 10% in 3 hot spots -> exact kNN(8)
     -> LISA with 99 permutations.  Evidence that the partitioning and
-    quadtree skew handling hold as n grows (e.g. at n=1e6 each hot spot
-    holds ~33k points in a 0.2-degree disc)."""
+    the kNN kernel's hot-cell grid hold as n grows (e.g. at n=1e6 each
+    hot spot holds ~33k points in a 0.2-degree disc; above the
+    ``knn_targets`` gate the build runs in grid tiles)."""
     from pyspark.sql import functions as F
 
     from esda_spark.operators.local_stats import moran_local

@@ -6,7 +6,6 @@ explain("formatted") capture for plans/r06/).
 
 Usage:
   python bench_extra.py plans [out_suffix]   # capture plans/r06/*_{suffix}.txt
-  python bench_extra.py profile-knn [table]  # phase timing of knn_edges
   python bench_extra.py profile-global       # job timing of moran/geary/getis
   python bench_extra.py profile-dedup        # minhash_dedup_groups stages
   python bench_extra.py profile-lisa         # lisa_crand / g_local phases
@@ -59,39 +58,6 @@ def _timed(label, fn, n=3):
         out.append(round(time.perf_counter() - t0, 3))
     print(json.dumps({"label": label, "samples": out,
                       "median": sorted(out)[len(out) // 2]}), flush=True)
-
-
-def profile_knn(table: str) -> None:
-    from esda_spark.operators import weights as W
-    from esda_spark.sources.points import points_from_table
-
-    spark = _spark()
-    pts = points_from_table(spark, SF_DIR, table).repartition(CPUS).cache()
-    pts.count()
-    k = 8
-    sc = spark.sparkContext
-    for rep in range(3):
-        pids0 = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        t0 = time.perf_counter()
-        base = pts.select("id", "x", "y")
-        cell = W._estimate_cell_size(pts, k)
-        t1 = time.perf_counter()
-        levels = W._density_levels(base, base, cell, max(4 * k, 32), 12)
-        t2 = time.perf_counter()
-        edges = W._knn_rounds_multi(levels, base, k, cell, True, 12, pids0)
-        n = edges.count()
-        t3 = time.perf_counter()
-        print(json.dumps({
-            "rep": rep, "estimate_s": round(t1 - t0, 3),
-            "levels_s": round(t2 - t1, 3), "n_levels": len(levels),
-            "rounds_s": round(t3 - t2, 3), "edges": n,
-            "total_s": round(t3 - t0, 3),
-        }), flush=True)
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in set(jmap.keySet().toArray()) - pids0:
-            jr = jmap.get(rid)
-            if jr is not None:
-                jr.unpersist()
 
 
 def profile_global() -> None:
@@ -338,8 +304,6 @@ def main() -> None:
     cmd = sys.argv[1] if len(sys.argv) > 1 else "noop"
     if cmd == "plans":
         capture_plans(sys.argv[2] if len(sys.argv) > 2 else "before")
-    elif cmd == "profile-knn":
-        profile_knn(sys.argv[2] if len(sys.argv) > 2 else "orders")
     elif cmd == "profile-global":
         profile_global()
     elif cmd == "profile-lisa":

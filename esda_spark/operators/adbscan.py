@@ -7,7 +7,8 @@ classifier, re-maps labels by centroid proximity and majority-votes.
 Here every step is a distributed dataflow:
 
 1. draw r samples `pct_exact` of points by seeded hash;
-2. DBSCAN on the sample is expressed as: distance-band edges at eps
+2. DBSCAN on the sample is expressed as: an eps/2 grid whose dense
+   cells contract to one node each, eps neighbors of the sparse points
    (cell-candidate join) -> core points (>= min_samples-1 neighbors)
    -> connected components over core-core edges by large-star /
    small-star contraction (O(log n) rounds; components.py) -> border
@@ -29,7 +30,6 @@ from pyspark.sql import functions as F
 
 from esda_spark.operators.components import connected_components
 from esda_spark.operators.spatial_join import knn_join
-from esda_spark.operators.weights import distance_band_edges
 
 NOISE = -1
 
@@ -38,47 +38,33 @@ def dbscan(
     points: DataFrame,
     eps: float,
     min_samples: int,
-    cell_size: float | None = None,
     max_iterations: int = 40,
-    dense_contraction: bool = True,
 ) -> DataFrame:
-    """(id, cluster): distributed DBSCAN; cluster = min point id in the
-    component, NOISE (-1) for noise points.
+    """(id, cluster): distributed exact DBSCAN; cluster = min point id
+    in the component, NOISE (-1) for noise points.
+
+    Semantics: neighbors at d <= eps; a point is core with >=
+    min_samples - 1 neighbors (the eps-ball holds the point itself);
+    core points connect into components labeled by their minimum id; a
+    border point takes the minimum label among its core neighbors.
 
     Core-core components run through large-star/small-star contraction
     (``components.connected_components``), which converges in O(log n)
     rounds instead of the O(component-diameter) min-label propagation
     used through round 3.
 
-    ``dense_contraction`` (default on; False runs `_dbscan_flat`)
-    selects the exact grid path (`_dbscan_grid`): the eps
-    neighborhood graph of a density hot spot is a near-clique whose
-    edge count grows QUADRATICALLY in local density — at 1M synthetic
-    points one 100k draw materializes 32M band edges, and every
-    downstream pass (degree, core semi-joins, components, border) pays
-    for them.  Gridding at eps/2 makes every cell with >= min_samples
-    points an all-core clique (cell diagonal = eps/sqrt(2) < eps) that
-    contracts to ONE component node, so dense-dense point pairs are
-    never enumerated: per-cell candidate COUNTS aggregate map-side,
-    and dense-dense connectivity is one early-exit existence kernel
-    per adjacent cell pair.  Published structure: Gunawan (2013) /
-    Gan & Tao SIGMOD 2015 exact grid DBSCAN, re-expressed as Spark
-    dataflow.  ``cell_size`` only affects the flat path (the grid is
-    eps/2 by construction)."""
-    if dense_contraction:
-        return _dbscan_grid(points, eps, min_samples, max_iterations)
-    return _dbscan_flat(points, eps, min_samples, cell_size,
-                        max_iterations)
-
-
-def _dbscan_grid(
-    points: DataFrame,
-    eps: float,
-    min_samples: int,
-    max_iterations: int = 40,
-) -> DataFrame:
-    """Exact grid DBSCAN: identical output to `_dbscan_flat`, near-
-    linear in hot-spot density instead of quadratic (see `dbscan`)."""
+    The eps neighborhood graph of a density hot spot is a near-clique
+    whose edge count grows QUADRATICALLY in local density — at 1M
+    synthetic points one 100k draw would materialize 32M band edges,
+    and every downstream pass (degree, core semi-joins, components,
+    border) would pay for them.  Gridding at eps/2 makes every cell with
+    >= min_samples points an all-core clique (cell diagonal =
+    eps/sqrt(2) < eps) that contracts to ONE component node, so
+    dense-dense point pairs are never enumerated: per-cell candidate
+    COUNTS aggregate map-side, and dense-dense connectivity is one
+    early-exit existence kernel per adjacent cell pair.  Published
+    structure: Gunawan (2013) / Gan & Tao SIGMOD 2015 exact grid
+    DBSCAN, re-expressed as Spark dataflow."""
     from esda_spark.plans.cells import expand_ring, unpack_cell, with_cell
 
     g = float(eps) / 2.0
@@ -100,7 +86,7 @@ def _dbscan_grid(
     dense_pts = pts_f.where(F.col("_dense"))
     sparse_pts = pts_f.where(~F.col("_dense"))
     # supernode id per dense cell = min member id, so component minima
-    # stay point ids and labels match the flat path exactly
+    # stay point ids
     super_ = dense_pts.groupBy("cell").agg(F.min("id").alias("snode"))
 
     # ONE ring join gives everything point-level the algorithm needs.
@@ -247,8 +233,8 @@ def _dbscan_grid(
                 F.coalesce("component", F.col("id")).alias("cluster"))
     ).cache()
     # border points: non-core, labelled by the minimum cluster among
-    # their core neighbors (identical to the flat path's min-ncl rule;
-    # every dense-cell neighbor is core, sparse neighbors only if core)
+    # their core neighbors (every dense-cell neighbor is core, sparse
+    # neighbors only if core)
     border_sparse = (
         sparse_pairs.join(
             sparse_core_labels.withColumnRenamed("id", "neighbor")
@@ -278,63 +264,6 @@ def _dbscan_grid(
     for c in (pts_f, agg, sparse_core, comp, cell_cluster,
               sparse_core_labels, dense_cells):
         c.unpersist()
-    return out
-
-
-def _dbscan_flat(
-    points: DataFrame,
-    eps: float,
-    min_samples: int,
-    cell_size: float | None = None,
-    max_iterations: int = 40,
-) -> DataFrame:
-    """Band-edge materializing path (pre-round-5): exact, but edge
-    count grows quadratically inside density hot spots."""
-    edges = distance_band_edges(
-        points, threshold=eps, cell_size=cell_size or eps
-    ).cache()
-    degree = edges.groupBy("focal").count()
-    if min_samples <= 1:
-        # sklearn semantics: the eps-ball always holds the point itself,
-        # so min_samples=1 makes EVERY point core (edge-less isolated
-        # points included — they are absent from the degree table)
-        core = points.select("id").cache()
-    else:
-        core = degree.where(F.col("count") >= min_samples - 1).select(
-            F.col("focal").alias("id")
-        ).cache()
-    cc_edges = (
-        edges.join(core.withColumnRenamed("id", "focal"), "focal", "left_semi")
-        .join(core.withColumnRenamed("id", "neighbor"), "neighbor", "left_semi")
-        .select("focal", "neighbor")
-    )
-    comp = connected_components(cc_edges, "focal", "neighbor",
-                                max_iterations=max_iterations)
-    # isolated core points (no core neighbor) label themselves
-    labels = core.join(comp, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("cluster")
-    ).cache()
-    labels.count()
-    border = (
-        edges.join(labels.withColumnRenamed("id", "neighbor")
-                   .withColumnRenamed("cluster", "ncl"), "neighbor")
-        .groupBy("focal").agg(F.min("ncl").alias("cluster"))
-        .withColumnRenamed("focal", "id")
-        .join(labels.select("id"), "id", "left_anti")
-    )
-    assigned = labels.unionByName(border)
-    out = (
-        points.select("id")
-        .join(assigned, "id", "left")
-        .withColumn("cluster", F.coalesce("cluster", F.lit(NOISE)))
-        # settle the result, then free this build's cached inputs —
-        # repeated dbscan calls in one session otherwise accumulate
-        # edge/label blocks (the band edge set alone is ~50x the points)
-        .localCheckpoint(eager=True)
-    )
-    edges.unpersist()
-    core.unpersist()
-    labels.unpersist()
     return out
 
 
@@ -369,11 +298,11 @@ def adbscan(
     Cross-draw contamination is excluded structurally, not by gap
     sizing: the offset (> span + eps) keeps distance-band edges inside
     their own draw, and the 1-NN extension passes ``group_div=id_base``
-    to ``knn_join`` so BOTH its candidate paths (doubling rings and the
-    straggler brute force, either of which can reach arbitrarily far)
-    only ever match same-draw pairs — a sparse outlier whose own-draw
-    nearest sample is distant still gets that sample, never an
-    adjacent draw's translated copy.  One dbscan call then resolves
+    to ``knn_join``, whose kernel filters every candidate (ring search
+    and brute-force fallback alike, either of which can reach
+    arbitrarily far), so it only ever matches same-draw pairs — a
+    sparse outlier whose own-draw nearest sample is distant still gets
+    that sample, never an adjacent draw's translated copy.  One dbscan call then resolves
     every draw's components simultaneously, one knn_join extends every
     draw's labels, and the per-draw centroid collects collapse into
     one groupBy.  The encoding is exact: min-composite-id per
@@ -425,7 +354,7 @@ def adbscan(
            f"idb={id_base}")
     lab = _stage(
         "labels", f"{fp0}|dbscan",
-        lambda: dbscan(thin_all, eps, ms, cell_size=cell_size)
+        lambda: dbscan(thin_all, eps, ms)
         .withColumnRenamed("cluster", "lbl"),
     ).cache()
     labeled = thin_all.join(lab, "id").cache()
@@ -437,14 +366,8 @@ def adbscan(
     )
     ext = _stage(
         "ext", f"{fp0}|dbscan|knn1_ext",
-        # cell_size=None: the 1-NN targets are a pct_exact sample, so
-        # the right grid scale is the TARGET density (mean labeled
-        # spacing), not eps — eps-cells leave sparse-background focals
-        # doubling through many ring rounds before they ever see a
-        # labeled point (measured 419 -> 217 s cold / 193 -> 102 s warm
-        # at 1M x 8 draws, together with the k=1 min-struct aggregate)
         lambda: knn_join(all_rep, labeled.select("id", "x", "y"), k=1,
-                         cell_size=None, group_div=id_base)
+                         group_div=id_base)
         .select(F.col("left_id").alias("cid"),
                 F.col("right_id").alias("src"))
         .join(lab.withColumnRenamed("id", "src"), "src")
@@ -485,8 +408,8 @@ def adbscan(
     n_base, n_nonb = int(counts.nb or 0), int(counts.nn or 0)
     if n_base == 0 or n_nonb == 0:
         # nothing to match (reps=1, or draw 0 / the other draws produced
-        # no clusters): an empty knn_join would still burn its doubling
-        # rounds finding nothing — emit the empty matching directly
+        # no clusters): an empty knn_join would still run its jobs
+        # finding nothing — emit the empty matching directly
         matched = nonb_c.limit(0).select(
             F.col("lbl").alias("left_id"), F.col("lbl").alias("right_id")
         )
@@ -513,7 +436,7 @@ def adbscan(
         matched = knn_join(
             nonb_c.select(F.col("lbl").alias("id"), "x", "y"),
             base_c.select(F.col("lbl").alias("id"), "x", "y"),
-            k=1, cell_size=None,  # centroid density, not eps
+            k=1,
         )
     remap_df = (
         matched.select(F.col("left_id").alias("lbl"),

@@ -1,40 +1,40 @@
-"""Broadcast-kernel exact kNN — the small-target fast path.
+"""Exact kNN: one numpy kernel, two feeders.
 
-The distributed builder in :mod:`esda_spark.operators.weights` pays
-~10 fixed Spark jobs (density metadata, per-round candidate joins,
-window sorts, checkpoint counts) regardless of input size; at the
-150k-point scale those fixed costs dominate (BASELINE.md round 5:
-"at this size fixed job overhead dominates and 32 threads buy
-nothing").  This module is the gated fast path, following the same
-precedent as ``components._incore_components`` (round-4/5 accepted):
-when the TARGET side fits the ``knn_targets`` gate
-(:mod:`esda_spark.plans.gate`), the gate's probe collects it once, the
-grid index is broadcast, and every focal's exact top-k is computed
-inside ONE ``mapInPandas`` job:
+The kernel is :func:`build_target_index` (a grid index over a target
+set) and :func:`knn_batch` (every focal's exact top-k against it):
+candidate generation, the (d2 asc, neighbor asc) top-k, settlement
+guards and radius doubling all run vectorized in numpy, and stragglers
+brute-force against the whole indexed target set.  d2 is always
+``dx*dx + dy*dy`` in IEEE doubles and ties break on the neighbor id,
+so any feeder that hands a focal a target set containing its true
+top-k gets the same rows.
 
-- zero shuffles (the focal side streams through in place),
-- candidate generation, the (d2 asc, neighbor asc) top-k, settlement
-  guards and radius-doubling all happen vectorized in numpy,
-- stragglers brute-force against the full broadcast target array
-  in-kernel (no extra Spark rounds).
+The two feeders decide which targets a focal sees:
 
-Results are bit-identical to the distributed builder: d2 is computed
-with the same IEEE sequence (dx*dx + dy*dy), ties break on
-(d2, neighbor id) exactly as the window sort does, and the settlement
-guard is the same "k candidates strictly inside radius*cell_size"
-argument (any point outside the searched Chebyshev ring is farther
-than the guard, so a settled focal's top-k is globally exact).
+- broadcast (:func:`knn_edges_incore`): below the ``knn_targets`` gate
+  (:mod:`esda_spark.plans.gate`) the gate's probe collects the target
+  side once, its index is broadcast, and the focals stream through ONE
+  ``mapInPandas`` job with zero shuffles;
+- tiled (:func:`knn_edges_tiled`): above the gate a coarse grid cuts
+  the plane into rectangles of whole cells holding at most
+  :data:`TILE_TARGETS` targets each; one exchange ships every tile its
+  focals plus the targets of its rectangle widened by ``h`` cells, and
+  the kernel runs per tile.  A focal whose k-th neighbor lies inside
+  the halo width is final; the rest repeat with ``h`` doubled, and a
+  brute force over all targets is the last resort.
 
-Density skew uses a two-level grid: level 0 sized for ~k occupancy;
-targets in hot level-0 cells (> max(4k, 32) points) are additionally
-indexed at a fine size halved until the max fine-cell count fits the
-threshold.  Focals in hot cells search the fine grid from radius 4
-(their dense neighborhood guarantees quick settlement); everyone else
-searches level 0 from radius 1.  The guard pre-filter (drop candidates
-at d2 >= (rad*cell)^2 before the top-k) is exact: if k candidates
-survive the filter the top-k equals the unfiltered top-k (the guard
-bound proves no farther point can enter), and if fewer survive the
-focal goes to the next doubling round exactly as before.
+Both feeders turn kernel rows into edges with :func:`edge_frame`.
+
+The kernel handles density skew with a two-level grid: level 0 sized
+for ~k occupancy; targets in hot level-0 cells (> max(4k, 32) points)
+are additionally indexed at a fine size halved until the max fine-cell
+count fits the threshold.  Focals in hot cells search the fine grid
+from radius 4 (their dense neighborhood guarantees quick settlement);
+everyone else searches level 0 from radius 1.  A focal settles once k
+candidates lie strictly inside radius*cell_size: any point outside the
+searched Chebyshev ring is farther than that, so the top-k is exact.
+The guard pre-filter (drop candidates at d2 >= (rad*cell)^2 before the
+top-k) is exact for the same reason.
 """
 
 from __future__ import annotations
@@ -264,6 +264,52 @@ def knn_batch(fid, fx, fy, idx, k, exclude_self, group_div):
             np.concatenate(out_d))
 
 
+def edge_frame(f, n, d2, binary: bool, keep_d2: bool) -> pd.DataFrame:
+    """Kernel rows (focal, neighbor, d2) as edge rows (focal, neighbor,
+    weight[, d2]): weight 1 when ``binary``, else 1/sqrt(d2), which is
+    undefined for a coincident pair — that raises, naming the pair."""
+    if binary:
+        w = np.ones(len(f))
+    else:
+        zero = np.flatnonzero(d2 == 0.0)
+        if len(zero):
+            i = zero[0]
+            raise ValueError(
+                f"knn weight 1/sqrt(d2) is undefined: focal {f[i]} and "
+                f"neighbor {n[i]} are coincident (d2 = 0); use binary=True"
+            )
+        w = 1.0 / np.sqrt(d2)
+    res = {"focal": f, "neighbor": n, "weight": w}
+    if keep_d2:
+        res["d2"] = d2
+    return pd.DataFrame(res)
+
+
+def _edge_schema(keep_d2: bool) -> str:
+    return "focal long, neighbor long, weight double" + (
+        ", d2 double" if keep_d2 else "")
+
+
+def _arrays(pdf: pd.DataFrame):
+    return (pdf["id"].to_numpy(np.int64), pdf["x"].to_numpy(np.float64),
+            pdf["y"].to_numpy(np.float64))
+
+
+def knn_edges_gated(focals, targets, k: int, binary: bool = True,
+                    exclude_self: bool = True, keep_d2: bool = False,
+                    group_div: int | None = None):
+    """Exact kNN edges of ``focals`` (id, x, y) onto ``targets``
+    (id, x, y): the broadcast feeder when the targets fit the
+    ``knn_targets`` gate, the tiled feeder above it."""
+    from esda_spark.plans import gate
+
+    args = (k, binary, exclude_self, keep_d2, group_div)
+    pdf = gate.collect_if_fits(targets, "knn_targets")
+    if pdf is not None:
+        return knn_edges_incore(focals, pdf, *args)
+    return knn_edges_tiled(focals, targets, *args)
+
+
 def knn_edges_incore(
     focals,
     targets: pd.DataFrame,
@@ -273,65 +319,341 @@ def knn_edges_incore(
     keep_d2: bool = False,
     group_div: int | None = None,
 ):
-    """Broadcast-kernel exact kNN edge build (the fast path).
+    """The broadcast feeder.
 
     ``focals`` is a DataFrame with (id, x, y) that streams through a
     single ``mapInPandas`` job; ``targets`` is the target side already
     collected to the driver (the gate probe's frame), indexed and
-    broadcast.  Output matches the distributed builder bit-for-bit
-    (same d2 arithmetic, same (d2, neighbor) tie-break, same weight
-    column).  Where the two cannot agree they both raise: a
-    non-binary weight 1/sqrt(d2) over a coincident pair (d2 = 0) is a
-    DIVIDE_BY_ZERO in the distributed plan and a ValueError naming
-    the pair here.  The result is eagerly materialized
-    (localCheckpoint) exactly like the distributed builder, so "build
-    time" keeps meaning "materialized edges".
+    broadcast.  The result is eagerly materialized (localCheckpoint),
+    so "build time" means "materialized edges".
     """
     spark = focals.sparkSession
-    idx = build_target_index(
-        targets["id"].to_numpy(np.int64),
-        targets["x"].to_numpy(np.float64),
-        targets["y"].to_numpy(np.float64),
-        k,
-    )
-    bc = spark.sparkContext.broadcast(idx)
+    bc = spark.sparkContext.broadcast(
+        build_target_index(*_arrays(targets), k))
     kk = int(k)
     excl = bool(exclude_self)
     gdiv = int(group_div) if group_div else None
     want_d2 = bool(keep_d2)
     is_binary = bool(binary)
 
-    schema = "focal long, neighbor long, weight double"
-    if want_d2:
-        schema += ", d2 double"
-
     def run(batches):
         idx_ = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            f, n, d2 = knn_batch(
-                pdf["id"].to_numpy(np.int64),
-                pdf["x"].to_numpy(np.float64),
-                pdf["y"].to_numpy(np.float64),
-                idx_, kk, excl, gdiv,
-            )
-            if is_binary:
-                w = np.ones(len(f))
-            else:
-                zero = np.flatnonzero(d2 == 0.0)
-                if len(zero):
-                    i = zero[0]
-                    raise ValueError(
-                        f"knn weight 1/sqrt(d2) is undefined: focal "
-                        f"{f[i]} and neighbor {n[i]} are coincident "
-                        f"(d2 = 0); use binary=True"
-                    )
-                w = 1.0 / np.sqrt(d2)
-            res = {"focal": f, "neighbor": n, "weight": w}
-            if want_d2:
-                res["d2"] = d2
-            yield pd.DataFrame(res)
+            f, n, d2 = knn_batch(*_arrays(pdf), idx_, kk, excl, gdiv)
+            yield edge_frame(f, n, d2, is_binary, want_d2)
 
-    out = focals.select("id", "x", "y").mapInPandas(run, schema=schema)
+    out = focals.select("id", "x", "y").mapInPandas(
+        run, schema=_edge_schema(want_d2))
     return out.localCheckpoint(eager=True)
+
+
+# --- the tiled feeder ------------------------------------------------------
+
+# In-core target budget of one tile: the kd split of the coarse grid
+# stops once every tile's own rectangle holds at most this many targets
+# (a single hot cell cannot be cut and may hold more).
+TILE_TARGETS = 250_000
+# A halo round past the first never ships one tile more targets than
+# this; the remaining focals take the brute-force pass instead.
+HALO_TARGETS = 4 * TILE_TARGETS
+# Halo widths tried, in cells: 1, 2, 4.
+HALO_ROUNDS = 3
+# Focals per kernel call inside a tile, and estimated first-ring
+# candidates per call (the kernel holds ~80 B per candidate at peak).
+_CHUNK = 65_536
+_CANDIDATES = 10_000_000
+# Rectangle bounds of the outer tiles (the tiling covers the plane).
+_BIG = 1 << 40
+# (cell -> tile) routing tables
+_CELLS = "cx long, cy long, tile int"
+
+
+def _tile_rects(cx, cy, nt, nf, min_tiles: int, budget: int):
+    """Cut the plane into rectangles of whole cells.
+
+    ``cx``, ``cy`` are the occupied cells, ``nt`` / ``nf`` their target
+    and focal counts.  Starting from the whole plane, split a
+    rectangle over ``budget`` targets, else the heaviest one (targets +
+    focals), at its weighted median cell along its wider occupied span,
+    until there are ``min_tiles`` rectangles and none is over budget,
+    or nothing left can be split.  Returns the (T, 4) inclusive bounds
+    (x0, x1, y0, y1) and each occupied cell's tile."""
+    import heapq
+
+    wt = nt + nf
+
+    def key(members):
+        return (-int(nt[members].sum() > budget), -int(wt[members].sum()))
+
+    heap = [(key(np.arange(len(cx))), 0, (-_BIG, _BIG, -_BIG, _BIG),
+             np.arange(len(cx)))]
+    done = []
+    seq = 1
+    while heap:
+        over_budget = heap[0][0][0]
+        if not over_budget and len(heap) + len(done) >= min_tiles:
+            break
+        _, _, rect, m = heapq.heappop(heap)
+        cut = _split(rect, m, cx, cy, wt)
+        if cut is None:
+            done.append((rect, m))
+            continue
+        for part in cut:
+            heapq.heappush(heap, (key(part[1]), seq, *part))
+            seq += 1
+    tiles = done + [(rect, m) for _, _, rect, m in heap]
+    rects = np.array([rect for rect, _ in tiles], dtype=np.int64)
+    home = np.empty(len(cx), dtype=np.int32)
+    for t, (_, m) in enumerate(tiles):
+        home[m] = t
+    return rects, home
+
+
+def _split(rect, m, cx, cy, wt):
+    """Two halves of ``rect`` at the weighted median of its member
+    cells along the wider occupied axis, or None for a single cell."""
+    x0, x1, y0, y1 = rect
+    spans = [c[m].max() - c[m].min() for c in (cx, cy)]
+    axis = int(spans[1] > spans[0])
+    if spans[axis] == 0:
+        return None
+    c = (cx, cy)[axis]
+    vals, inv = np.unique(c[m], return_inverse=True)
+    cum = np.cumsum(np.bincount(inv, weights=wt[m]))
+    # the cut sits after the median value, but never after the last
+    cut = vals[min(int(np.searchsorted(cum, cum[-1] / 2.0)), len(vals) - 2)]
+    lo = c[m] <= cut
+    if axis == 0:
+        return ((x0, cut, y0, y1), m[lo]), ((cut + 1, x1, y0, y1), m[~lo])
+    return ((x0, x1, y0, cut), m[lo]), ((x0, x1, cut + 1, y1), m[~lo])
+
+
+def knn_edges_tiled(
+    focals,
+    targets,
+    k: int,
+    binary: bool = True,
+    exclude_self: bool = True,
+    keep_d2: bool = False,
+    group_div: int | None = None,
+):
+    """The tiled feeder: the kernel per tile of a coarse grid.
+
+    One aggregate over the targets gives their count and the 10-90%
+    quantiles of x and y, which size the coarse cells (~max(4k, 64)
+    targets per cell at the density of that central box); a second
+    counts targets (and focals, when they are a different frame) per
+    occupied cell, which also gives the target extent in cells.  Those
+    counts are collected and cut into at least ``defaultParallelism``
+    rectangles of whole cells (:func:`_tile_rects`).  In round ``h`` (1, 2, 4 cells) every tile
+    with unsettled focals receives them plus every target whose cell
+    lies within ``h`` cells of the tile, in one cogroup exchange, and
+    runs :func:`knn_batch`.  A focal is final when it has k rows with
+    max d2 < (h*s)^2 (a target that was not shipped lies more than h*s
+    away) or when the widened tile covers every target cell (fewer
+    than k rows are then all there is).  Focals left after the last
+    round, or when a wider halo would ship one tile more than
+    :data:`HALO_TARGETS` targets, go to one brute-force pass against
+    all targets.  Every round's rows are materialized (localCheckpoint)
+    and the result is their union.
+    """
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from esda_spark.plans.cells import cell_xy
+
+    spark = focals.sparkSession
+    same = focals is targets
+    kk = int(k)
+    excl = bool(exclude_self)
+    gdiv = int(group_div) if group_div else None
+    is_binary = bool(binary)
+    cols = ["focal", "neighbor", "weight"] + (["d2"] if keep_d2 else [])
+
+    # cells hold ~occ targets at the density of the central 80% x 80%
+    # box (~64% of the targets): a far outlier must not coarsen the grid
+    q = targets.agg(
+        F.count("*").alias("n"),
+        F.percentile_approx("x", [0.1, 0.9], 1000).alias("qx"),
+        F.percentile_approx("y", [0.1, 0.9], 1000).alias("qy"),
+    ).collect()[0]
+    if not q.n:
+        return spark.createDataFrame([], _edge_schema(keep_d2))
+    occ = max(4 * kk, 64)
+    qw, qh = q.qx[1] - q.qx[0], q.qy[1] - q.qy[0]
+    # the second term keeps cells wide on (near-)collinear targets
+    s = max(math.sqrt(occ * qw * qh / (0.64 * q.n)),
+            occ * max(qw, qh) / (0.8 * q.n), 1e-9)
+
+    def keyed(df):
+        cx, cy = cell_xy(F.col("x"), F.col("y"), s)
+        return df.select("id", "x", "y", cx.alias("cx"), cy.alias("cy"))
+
+    tgt = keyed(targets)
+    foc = tgt if same else keyed(focals)
+    if same:
+        counts = tgt.groupBy("cx", "cy").agg(F.count("*").alias("nt"))
+        counts = counts.withColumn("nf", F.col("nt"))
+    else:
+        counts = (
+            tgt.select("cx", "cy", F.lit(1).alias("nt"), F.lit(0).alias("nf"))
+            .unionByName(foc.select("cx", "cy", F.lit(0).alias("nt"),
+                                    F.lit(1).alias("nf")))
+            .groupBy("cx", "cy")
+            .agg(F.sum("nt").alias("nt"), F.sum("nf").alias("nf"))
+        )
+    cells = counts.toPandas()
+    cx, cy = cells["cx"].to_numpy(np.int64), cells["cy"].to_numpy(np.int64)
+    nt, nf = cells["nt"].to_numpy(np.int64), cells["nf"].to_numpy(np.int64)
+    rects, home = _tile_rects(cx, cy, nt, nf,
+                              spark.sparkContext.defaultParallelism,
+                              TILE_TARGETS)
+    has_t, has_f = nt > 0, nf > 0
+    t_box = (cx[has_t].min(), cx[has_t].max(),
+             cy[has_t].min(), cy[has_t].max())
+    lookup = spark.createDataFrame(pd.DataFrame(
+        {"cx": cx[has_f], "cy": cy[has_f], "tile": home[has_f]}), _CELLS)
+    foc_t = foc.join(F.broadcast(lookup), ["cx", "cy"]).select(
+        "tile", "id", "x", "y")
+    tiles = np.unique(home[has_f])
+
+    schema = _edge_schema(True)
+    parts = []
+    active = foc_t
+    halo = 1
+    for rnd in range(HALO_ROUNDS):
+        ship, covers, vmax = [], {}, 0
+        for t in tiles:
+            x0, x1, y0, y1 = rects[t] + np.array([-halo, halo, -halo, halo])
+            inside = has_t & (cx >= x0) & (cx <= x1) & (cy >= y0) & (cy <= y1)
+            ship.append(pd.DataFrame({"cx": cx[inside], "cy": cy[inside],
+                                      "tile": np.int32(t)}))
+            vmax = max(vmax, int(nt[inside].sum()))
+            covers[int(t)] = bool(x0 <= t_box[0] and x1 >= t_box[1]
+                                  and y0 <= t_box[2] and y1 >= t_box[3])
+        if rnd and vmax > HALO_TARGETS:
+            break
+        g = float(halo) * s
+        res = _tile_round(
+            active, tgt, spark.createDataFrame(pd.concat(ship), _CELLS),
+            covers, g * g, kk, excl, gdiv, is_binary, schema,
+        ).localCheckpoint(eager=True)
+        parts.append(res.where(F.col("neighbor").isNotNull()))
+        left = res.where(F.col("neighbor").isNull()).select(
+            F.col("focal").alias("id"))
+        if left.count() == 0:
+            active = None
+            break
+        active = foc_t.join(left, "id", "left_semi").localCheckpoint(
+            eager=True)
+        tiles = np.array([r.tile for r in
+                          active.select("tile").distinct().collect()])
+        halo *= 2
+    if active is not None:
+        parts.append(_brute_force(active.select("id", "x", "y").toPandas(),
+                                  tgt, kk, excl, gdiv, is_binary, schema))
+    return reduce(lambda a, b: a.unionByName(b), parts).select(*cols)
+
+
+def _tile_round(foc_t, tgt, ship, covers, g2, k, excl, gdiv, is_binary,
+                schema):
+    """One halo round: focals (tile, id, x, y) cogroup with the targets
+    ``ship`` routes to each tile; the kernel's rows of settled focals
+    come back as edges (with d2), each unsettled focal as one row with
+    a null neighbor."""
+    from pyspark.sql import functions as F
+
+    # fresh attributes: the focal side may be the same frame
+    tt = tgt.join(F.broadcast(ship), ["cx", "cy"]).select(
+        "tile", *(F.col(c).alias(c) for c in ("id", "x", "y")))
+
+    def run(key, fpdf, tpdf):
+        fid, fx, fy = _arrays(fpdf)
+        idx = build_target_index(*_arrays(tpdf), k)
+        got = [knn_batch(fid[c], fx[c], fy[c], idx, k, excl, gdiv)
+               for c in _focal_chunks(fx, fy, idx)]
+        f = np.concatenate([r[0] for r in got])
+        n = np.concatenate([r[1] for r in got])
+        d2 = np.concatenate([r[2] for r in got])
+        if covers[int(key[0])]:
+            done = np.ones(len(f), bool)
+        else:
+            uf, inv, cnt = np.unique(f, return_inverse=True,
+                                     return_counts=True)
+            top = np.full(len(uf), -np.inf)
+            np.maximum.at(top, inv, d2)
+            done = ((cnt >= k) & (top < g2))[inv]
+        out = edge_frame(f[done], n[done], d2[done], is_binary, True)
+        rest = np.setdiff1d(fid, f[done])
+        if len(rest) == 0:
+            return out
+        marks = pd.DataFrame({
+            "focal": rest, "neighbor": pd.array([None] * len(rest),
+                                                dtype="Int64"),
+            "weight": np.nan, "d2": np.nan,
+        })
+        return pd.concat([out, marks], ignore_index=True)
+
+    return (foc_t.groupBy("tile").cogroup(tt.groupBy("tile"))
+            .applyInPandas(run, schema=schema))
+
+
+def _focal_chunks(fx, fy, idx):
+    """Slices of the focals for one kernel call each: at most
+    ``_CHUNK`` focals and about ``_CANDIDATES`` first-ring candidates,
+    estimated as the targets in a focal's own search cell times the
+    ring's cells (3x3 on level 0, 9x9 on the fine grid of hot cells).
+    Hot spots of coincident points otherwise put thousands of
+    candidates behind every focal of a tile."""
+    def in_cell(keys, sk):
+        return np.searchsorted(sk, keys, "right") - np.searchsorted(sk, keys)
+
+    key0 = _keys(fx, fy, idx["s0"])
+    est = 9 * in_cell(key0, idx["sk0"])
+    hot = np.isin(key0, idx["hot"])
+    est[hot] = 81 * in_cell(_keys(fx[hot], fy[hot], idx["s_f"]), idx["sk_f"])
+    cum = np.cumsum(np.maximum(est, 1))
+    cuts = np.searchsorted(cum, np.arange(_CANDIDATES, cum[-1], _CANDIDATES)
+                           if len(cum) else [])
+    cuts = np.union1d(cuts, np.arange(_CHUNK, len(fx), _CHUNK))
+    return np.split(np.arange(len(fx)), cuts) if len(fx) else [slice(0, 0)]
+
+
+def _brute_force(rest: pd.DataFrame, tgt, k, excl, gdiv, is_binary, schema):
+    """Exact top-k of the ``rest`` focals (collected, broadcast) against
+    every target: the kernel runs per target batch, and the per-batch
+    top-k rows merge by (d2, neighbor) rank."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    spark = tgt.sparkSession
+    bc = spark.sparkContext.broadcast(_arrays(rest))
+
+    def partial(batches):
+        fid, fx, fy = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            idx = build_target_index(*_arrays(pdf), k)
+            f, n, d2 = knn_batch(fid, fx, fy, idx, k, excl, gdiv)
+            yield pd.DataFrame({"focal": f, "neighbor": n, "d2": d2})
+
+    def edges(batches):
+        for pdf in batches:
+            yield edge_frame(pdf["focal"].to_numpy(np.int64),
+                             pdf["neighbor"].to_numpy(np.int64),
+                             pdf["d2"].to_numpy(np.float64), is_binary, True)
+
+    win = Window.partitionBy("focal").orderBy("d2", "neighbor")
+    return (
+        tgt.select("id", "x", "y")
+        .mapInPandas(partial, schema="focal long, neighbor long, d2 double")
+        .withColumn("_r", F.row_number().over(win))
+        .where(F.col("_r") <= k)
+        .drop("_r")
+        .mapInPandas(edges, schema=schema)
+        .localCheckpoint(eager=True)
+    )

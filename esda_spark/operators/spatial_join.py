@@ -172,7 +172,6 @@ def knn_join(
     left: DataFrame,
     right: DataFrame,
     k: int,
-    cell_size: float | None = None,
     group_div: int | None = None,
 ) -> DataFrame:
     """(left_id, right_id, rank, dist): exact kNN of right-points for
@@ -180,53 +179,27 @@ def knn_join(
     a right point at distance 0 keeps it — the 1-NN-classifier
     semantics ADBSCAN's label extension needs).
 
-    Shares the weights builder's density-adaptive machinery with the
-    levels derived from the RIGHT side: per-cell candidate volume is
-    left_count x right_count, and only the right factor can be bounded
-    by refining the grid — a 33k-focal hot cell over 3k targets would
-    otherwise enumerate ~1e8 candidate rows in one cell.
+    The kNN kernel of :func:`esda_spark.operators.weights.knn_edges`
+    with the RIGHT side as its targets: below the ``knn_targets`` gate
+    the right side is broadcast and the left side streams through at
+    any size (ADBSCAN's 1-NN extension of millions of focals onto a
+    thinned sample qualifies whenever the sample fits); above it both
+    sides are cut into grid tiles.
 
     ``group_div``: restrict matches to pairs whose ids share the same
     integer-division group (``left_id div group_div == right_id div
     group_div``) — the same-draw guarantee fused ADBSCAN's composite-id
-    encoding relies on (see ``_knn_rounds_multi``)."""
+    encoding relies on.  The kernel applies it to every candidate,
+    brute-force fallback included, so no search radius can produce a
+    cross-group match."""
     from pyspark.sql import Window
 
-    from esda_spark.operators.weights import (
-        _density_levels,
-        _estimate_cell_size,
-        _knn_rounds_multi,
+    from esda_spark.operators.knn_incore import knn_edges_gated
+
+    edges = knn_edges_gated(
+        left.select("id", "x", "y"), right.select("id", "x", "y"), k,
+        binary=True, exclude_self=False, keep_d2=True, group_div=group_div,
     )
-
-    lpts = left.select("id", "x", "y")
-    rpts = right.select("id", "x", "y")
-    # Broadcast-kernel fast path (same gate as knn_edges): the TARGET
-    # side is what gets collected/broadcast — the focal side streams
-    # through the kernel at any size, so e.g. ADBSCAN's 1-NN extension
-    # (millions of focals onto a thinned sample) qualifies whenever the
-    # sample fits the gate.
-    from esda_spark.operators.knn_incore import knn_edges_incore
-
-    targets = gate.collect_if_fits(rpts, "knn_targets")
-    if targets is not None:
-        edges = knn_edges_incore(
-            lpts, targets, k, binary=True, exclude_self=False,
-            keep_d2=True, group_div=group_div,
-        )
-    else:
-        sc = left.sparkSession.sparkContext
-        pids_before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        if cell_size is None:
-            cell_size = _estimate_cell_size(rpts, k)
-        levels = _density_levels(lpts, rpts, cell_size,
-                                 density_threshold=max(4 * k, 32),
-                                 max_levels=12,
-                                 flat_budget=int(2e8) if k == 1 else None)
-        edges = _knn_rounds_multi(
-            levels, rpts, k, cell_size, binary=True, max_rounds=12,
-            pids_before=pids_before, exclude_self=False, keep_d2=True,
-            group_div=group_div,
-        )
     win = Window.partitionBy("focal").orderBy("d2", "neighbor")
     return (
         edges.withColumn("rank", F.row_number().over(win))

@@ -44,9 +44,6 @@ LIMITS: dict[str, int] = {
     # where the broadcast path's O(n) driver collect becomes the wall
     # (~160 MB of doubles); no collect of its own
     "crand_tiled_sites": 20_000_000,
-    # kNN level-0 ring-candidate pairs below which skewed inputs skip
-    # the quadtree refinement; 0 always refines; no collect
-    "flat_ring_pairs": 10_000_000,
 }
 
 # Spark's LIMIT takes a 32-bit int

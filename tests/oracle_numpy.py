@@ -271,6 +271,31 @@ def brute_knn_edges(xy: np.ndarray, k: int) -> np.ndarray:
     return np.array(out, dtype=np.int64)
 
 
+def brute_dbscan(xy: np.ndarray, eps: float, min_samples: int) -> dict:
+    """{id: cluster} of exact DBSCAN by brute force: neighbors at
+    d <= eps; a point is core with >= min_samples - 1 neighbors;
+    components of core points are labeled by their minimum id; a border
+    point takes the minimum label among its core neighbors; -1 is
+    noise."""
+    n = len(xy)
+    d2 = ((xy[:, None, :] - xy[None, :, :]) ** 2).sum(axis=2)
+    nbr = (d2 <= eps * eps) & ~np.eye(n, dtype=bool)
+    core = nbr.sum(axis=1) >= min_samples - 1
+    label = np.where(core, np.arange(n), -1)
+    changed = True
+    while changed:  # min-label propagation over core-core edges
+        lab = np.where(nbr & core[None, :] & core[:, None],
+                       label[None, :], n)
+        new = np.where(core, np.minimum(label, lab.min(axis=1)), -1)
+        changed = bool((new != label).any())
+        label = new
+    for i in np.flatnonzero(~core):
+        c = np.flatnonzero(nbr[i] & core)
+        if len(c):
+            label[i] = label[c].min()
+    return {i: int(label[i]) for i in range(n)}
+
+
 def brute_distance_band(xy: np.ndarray, threshold: float) -> np.ndarray:
     n = len(xy)
     out = []

@@ -116,11 +116,11 @@ def test_knn_join_group_div_respects_groups(spark):
         [(1, 50.0, 0.0), (101, 1.0, 0.0), (102, 201.0, 0.0)],
         "id long, x double, y double",
     )
-    res = knn_join(left, right, k=1, cell_size=2.0, group_div=id_base)
+    res = knn_join(left, right, k=1, group_div=id_base)
     got = {r.left_id: r.right_id for r in res.collect()}
     assert got == {0: 1, 100: 102}
     # without the constraint, focal 0 grabs the cross-group point
-    res2 = knn_join(left, right, k=1, cell_size=2.0)
+    res2 = knn_join(left, right, k=1)
     got2 = {r.left_id: r.right_id for r in res2.collect()}
     assert got2[0] == 101
 

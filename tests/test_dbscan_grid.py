@@ -1,9 +1,11 @@
-"""Grid-DBSCAN (dense-cell contraction) parity with the flat
-band-edge path — identical (id -> cluster) maps, not just identical
+"""Grid-DBSCAN (dense-cell contraction) parity with a brute-force
+numpy DBSCAN — identical (id -> cluster) maps, not just identical
 partitions, since both label components by their minimum point id."""
 
 import numpy as np
 import pytest
+
+from tests import oracle_numpy as onp
 
 
 def _run_both(spark, xy, eps, min_samples):
@@ -14,19 +16,15 @@ def _run_both(spark, xy, eps, min_samples):
         "id long, x double, y double",
     )
     grid = {r.id: r.cluster
-            for r in dbscan(pts, eps, min_samples,
-                            dense_contraction=True).collect()}
-    flat = {r.id: r.cluster
-            for r in dbscan(pts, eps, min_samples,
-                            dense_contraction=False).collect()}
-    return grid, flat
+            for r in dbscan(pts, eps, min_samples).collect()}
+    return grid, onp.brute_dbscan(xy, eps, min_samples)
 
 
 def test_grid_parity_uniform(spark):
     rng = np.random.default_rng(5)
     xy = rng.uniform(0, 30, size=(500, 2))
-    grid, flat = _run_both(spark, xy, eps=1.2, min_samples=4)
-    assert grid == flat
+    grid, want = _run_both(spark, xy, eps=1.2, min_samples=4)
+    assert grid == want
 
 
 def test_grid_parity_hot_blobs_with_border_and_noise(spark):
@@ -40,8 +38,8 @@ def test_grid_parity_hot_blobs_with_border_and_noise(spark):
     sparse = rng.uniform(-5, 25, size=(150, 2))
     noise = np.array([[100.0, 100.0], [-50.0, -50.0]])
     xy = np.vstack([blob_a, blob_b, blob_c, sparse, noise])
-    grid, flat = _run_both(spark, xy, eps=0.5, min_samples=10)
-    assert grid == flat
+    grid, want = _run_both(spark, xy, eps=0.5, min_samples=10)
+    assert grid == want
     # sanity: the two near blobs must have produced real clusters
     assert len({v for v in grid.values() if v != -1}) >= 2
 
@@ -51,8 +49,8 @@ def test_grid_parity_exact_eps_lattice(spark):
     eps, so any strict-inequality drift between the paths shows up."""
     xy = np.array([(float(i), float(j)) for i in range(6)
                    for j in range(6)])
-    grid, flat = _run_both(spark, xy, eps=1.0, min_samples=4)
-    assert grid == flat
+    grid, want = _run_both(spark, xy, eps=1.0, min_samples=4)
+    assert grid == want
     # one lattice-wide cluster (labelled 1: corners have only 2
     # orthogonal neighbors at eps, so point 0 is border, not core)
     assert set(grid.values()) == {1}
@@ -65,8 +63,8 @@ def test_grid_parity_tiny_min_samples(spark, ms):
         rng.normal((0, 0), 0.05, size=(8, 2)),
         np.array([[5.0, 5.0]]),
     ])
-    grid, flat = _run_both(spark, xy, eps=0.3, min_samples=ms)
-    assert grid == flat
+    grid, want = _run_both(spark, xy, eps=0.3, min_samples=ms)
+    assert grid == want
 
 
 def test_grid_parity_cell_pair_not_connected(spark):
@@ -81,6 +79,6 @@ def test_grid_parity_cell_pair_not_connected(spark):
     b = np.column_stack([rng.uniform(1.45, 1.50, 20),
                          rng.uniform(0.0, 0.05, 20)])
     xy = np.vstack([a, b])
-    grid, flat = _run_both(spark, xy, eps=eps, min_samples=5)
-    assert grid == flat
+    grid, want = _run_both(spark, xy, eps=eps, min_samples=5)
+    assert grid == want
     assert len(set(grid.values())) == 2

@@ -266,13 +266,13 @@ OPERATORS.update({op: ("stat_rows", call) for op, call in STATS.items()})
 CASES += [(op, fx) for op in STATS for fx in STAT_FIXTURES]
 # variants on one fixture each: the k=1 same-group kNN join, the
 # D/V-transformed probe of Moran, and the non-binary kNN weight
-# 1/sqrt(d2) over a coincident pair — where the two paths cannot
-# agree, so both must raise (as the global statistics must at
-# constant y): case -> (in-core message, distributed message)
+# 1/sqrt(d2) over a coincident pair — which is undefined, so both
+# feeders must raise the kernel's error (as the global statistics must
+# at constant y): case -> (in-core message, distributed message)
 OPERATORS.update(knn_join_grouped=("knn_targets", _knn_join_grouped),
                  knn_idw=("knn_targets", _knn_idw),
                  moran_v=("stat_rows", _stat("moran", "v")))
-BOTH_RAISE = {("knn_idw", "coincident"): ("coincident", "DIVIDE_BY_ZERO")}
+BOTH_RAISE = {("knn_idw", "coincident"): ("coincident",) * 2}
 BOTH_RAISE.update({(op, "constant"): ("division by zero",) * 2
                    for op in ("moran", "geary")})
 # G is uncentered by definition: at constant y, and at |mean| >> spread

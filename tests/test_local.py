@@ -300,7 +300,7 @@ def test_crand_tiled_mode_parity(spark):
          for i, ((x, yy), v) in enumerate(zip(xy, y))],
         "id long, x double, y double, y_cont double",
     )
-    edges = knn_edges(pts, k=6, cell_size=20.0)
+    edges = knn_edges(pts, k=6)
     w = transform_weights(edges, "R")
     mu, sd = float(y.mean()), float(y.std())
     z = pts.select("id", ((F.col("y_cont") - mu) / sd).alias("z"))
@@ -334,7 +334,7 @@ def test_crand_tiled_moments_and_keep(spark):
          for i, ((x, yy), v) in enumerate(zip(xy, y))],
         "id long, x double, y double, y_cont double",
     )
-    edges = knn_edges(pts, k=5, cell_size=15.0)
+    edges = knn_edges(pts, k=5)
     w = transform_weights(edges, "R")
     z = pts.select("id", (F.col("y_cont") / float(y.std())).alias("z"))
     obs = ls.moran_local(pts, edges, "y_cont", permutations=0).select(
@@ -398,7 +398,7 @@ def test_crand_tiled_recorded_parity(spark):
          for i, ((x, yy), v) in enumerate(zip(xy, y))],
         "id long, x double, y double, y_cont double",
     )
-    edges = knn_edges(pts, k=5, cell_size=20.0)
+    edges = knn_edges(pts, k=5)
     island = 7
     edges = edges.where(
         (F.col("focal") != island) & (F.col("neighbor") != island)

@@ -106,7 +106,7 @@ def test_by_col(spark, pts):
     from esda_spark.operators.weights import knn_edges
 
     _, _, _, _, df = pts
-    edges = knn_edges(df.select("id", "x", "y"), k=4, cell_size=8.0)
+    edges = knn_edges(df.select("id", "x", "y"), k=4)
     out = by_col(df, edges, moran_local, ["y_cont", "e"], permutations=0)
     cols = set(out.columns)
     assert "y_cont_moran_local_Is" in cols and "e_moran_local_Is" in cols
@@ -130,7 +130,7 @@ def test_silhouette_alist_and_nearest_label(spark):
         [(int(i), int(l)) for i, l in enumerate(labels_np)],
         "id long, label int",
     )
-    edges = knn_edges(pts, k=5, cell_size=3.0)
+    edges = knn_edges(pts, k=5)
     sil = silhouette_alist(pts, labs, edges, ["x", "y"]).collect()
     # numpy oracle per edge
     for r in sil[:50]:

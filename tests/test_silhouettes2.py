@@ -26,7 +26,7 @@ def clustered(spark):
         [(int(i), int(v)) for i, v in enumerate(labels_np)],
         "id long, label int",
     )
-    edges = knn_edges(pts, k=6, cell_size=5.0)
+    edges = knn_edges(pts, k=6)
     edges_np = {
         (r.focal, r.neighbor) for r in edges.select("focal", "neighbor").collect()
     }

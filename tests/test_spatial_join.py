@@ -65,7 +65,7 @@ def test_knn_join_exact(spark, pts):
         [(int(i), float(x), float(y)) for i, (x, y) in enumerate(q_xy)],
         "id long, x double, y double",
     )
-    res = knn_join(q, df, k=3, cell_size=1.5).collect()
+    res = knn_join(q, df, k=3).collect()
     got = {}
     for r in res:
         got.setdefault(r.left_id, []).append((r.rank, r.right_id))

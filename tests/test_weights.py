@@ -20,26 +20,18 @@ def _rand_points(spark, n=120, seed=7):
     return xy, spark.createDataFrame(rows, "id long, x double, y double")
 
 
-def test_knn_exact_vs_brute(spark):
-    xy, pts = _rand_points(spark)
-    for k in (1, 4, 8):
-        got = {
-            (r.focal, r.neighbor)
-            for r in knn_edges(pts, k=k, cell_size=12.0).collect()
-        }
+@pytest.mark.parametrize("limit", [None, 0], ids=["default", "off"])
+def test_knn_exact_vs_brute(spark, monkeypatch, limit):
+    # the default gate runs the broadcast feeder, 0 the tiled one
+    from esda_spark.plans import gate
+
+    if limit is not None:
+        monkeypatch.setitem(gate.LIMITS, "knn_targets", limit)
+    for n, k in ((120, 1), (120, 4), (120, 8), (60, 5)):
+        xy, pts = _rand_points(spark, n=n)
+        got = {(r.focal, r.neighbor) for r in knn_edges(pts, k=k).collect()}
         want = {tuple(e) for e in onp.brute_knn_edges(xy, k)}
-        assert got == want, f"k={k}"
-
-
-def test_knn_small_cell_forces_ring_expansion(spark):
-    # tiny cells => first ring almost never settles => exercises doubling
-    xy, pts = _rand_points(spark, n=60)
-    got = {
-        (r.focal, r.neighbor)
-        for r in knn_edges(pts, k=5, cell_size=1.0).collect()
-    }
-    want = {tuple(e) for e in onp.brute_knn_edges(xy, 5)}
-    assert got == want
+        assert got == want, f"n={n} k={k}"
 
 
 def test_distance_band_exact(spark):
@@ -124,68 +116,38 @@ def test_polygon_contiguity_rotated_grid(spark):
     assert remap(got_queen) == remap(want_queen)
 
 
-def test_knn_flat_gate_parity_on_skewed_points(spark, monkeypatch):
-    # skewed-but-small input: one hot cluster (hot cell > threshold)
-    # plus a sparse field; the flat gate must pick a single level AND
-    # produce the exact edge set the quadtree path produces
-    from esda_spark.operators import weights as W
+def test_knn_tiled_halo_rounds_and_brute_force(spark, monkeypatch):
+    # gate off: the tiled feeder.  A hot cluster, a sparse field and two
+    # far outliers in opposite corners: the grid cuts into several
+    # tiles, the outliers fail every halo round (no widened tile covers
+    # both corners) and finish in the brute-force pass
+    from esda_spark.operators import knn_incore as KI
     from esda_spark.plans import gate
 
-    # this test targets the DISTRIBUTED builder's flat-gate logic:
-    # disable the in-core fast path so it actually runs
     monkeypatch.setitem(gate.LIMITS, "knn_targets", 0)
+    seen = {"halos": [], "brute": 0}
+    tile_round, brute_force = KI._tile_round, KI._brute_force
 
+    def spy_round(foc_t, tgt, ship, covers, g2, *rest):
+        seen["tiles"] = max(seen.get("tiles", 0), len(covers))
+        seen["halos"].append(g2)
+        return tile_round(foc_t, tgt, ship, covers, g2, *rest)
+
+    def spy_brute(rest, *args):
+        seen["brute"] = len(rest)
+        return brute_force(rest, *args)
+
+    monkeypatch.setattr(KI, "_tile_round", spy_round)
+    monkeypatch.setattr(KI, "_brute_force", spy_brute)
     rng = np.random.default_rng(11)
     hot = rng.normal(loc=(5.0, 5.0), scale=0.05, size=(400, 2))
     sparse = rng.uniform(0, 100, size=(200, 2))
-    xy = np.vstack([hot, sparse])
+    xy = np.vstack([hot, sparse, [[1000.0, 1000.0], [-1000.0, -900.0]]])
     rows = [(int(i), float(x), float(y)) for i, (x, y) in enumerate(xy)]
     pts = spark.createDataFrame(rows, "id long, x double, y double")
 
-    cs = W._estimate_cell_size(pts.select("id", "x", "y"), 8)
-    levels = W._density_levels(
-        pts.select("id", "x", "y"), pts.select("id", "x", "y"), cs, 32, 12
-    )
-    assert [lv for lv, _ in levels] == [0], "flat gate should trigger"
-
-    flat = knn_edges(pts, k=8, keep_d2=True)
-    monkeypatch.setitem(gate.LIMITS, "flat_ring_pairs", 0)
-    quad = W.knn_edges(pts, k=8, keep_d2=True)
-    assert (
-        flat.exceptAll(quad).count() + quad.exceptAll(flat).count() == 0
-    )
-    want = {tuple(e) for e in onp.brute_knn_edges(xy, 8)}
-    got = {(r.focal, r.neighbor) for r in flat.collect()}
-    assert got == want
-
-def test_knn_flat_gate_budget_is_k_aware(spark, monkeypatch):
-    # the flat gate's budget reflects what the settlement can absorb:
-    # k>1 rows flow through a window sort (small budget), k=1 callers
-    # aggregate map-side and pass a raised flat_budget.  Fixture volume
-    # ~165k ring pairs sits between the two.
-    from esda_spark.operators import weights as W
-    from esda_spark.plans import gate
-
-    rng = np.random.default_rng(11)
-    hot = rng.normal(loc=(5.0, 5.0), scale=0.05, size=(400, 2))
-    sparse = rng.uniform(0, 100, size=(200, 2))
-    xy = np.vstack([hot, sparse])
-    rows = [(int(i), float(x), float(y)) for i, (x, y) in enumerate(xy)]
-    pts = spark.createDataFrame(rows, "id long, x double, y double")
-    base = pts.select("id", "x", "y")
-    cs = W._estimate_cell_size(base, 8)
-
-    monkeypatch.setitem(gate.LIMITS, "flat_ring_pairs", 100_000)
-    # default (k>1 window-sort) budget: volume exceeds it -> refine
-    levels = W._density_levels(base, base, cs, 32, 12)
-    assert [lv for lv, _ in levels] != [0], "should refine above budget"
-    # k=1-style caller: raised flat_budget (capped at 20x the module
-    # default) absorbs the same volume -> flat
-    levels1 = W._density_levels(base, base, cs, 32, 12,
-                                flat_budget=int(2e8))
-    assert [lv for lv, _ in levels1] == [0], "k=1 budget should stay flat"
-    # a zero gate wins over any explicit flat_budget
-    monkeypatch.setitem(gate.LIMITS, "flat_ring_pairs", 0)
-    levels0 = W._density_levels(base, base, cs, 32, 12,
-                                flat_budget=int(2e8))
-    assert [lv for lv, _ in levels0] != [0], "budget 0 must always refine"
+    got = {(r.focal, r.neighbor) for r in knn_edges(pts, k=8).collect()}
+    assert got == {tuple(e) for e in onp.brute_knn_edges(xy, 8)}
+    assert seen["tiles"] >= 2
+    assert len(seen["halos"]) >= 2 and seen["halos"][1] > seen["halos"][0]
+    assert seen["brute"] == 2
