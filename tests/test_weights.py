@@ -20,18 +20,51 @@ def _rand_points(spark, n=120, seed=7):
     return xy, spark.createDataFrame(rows, "id long, x double, y double")
 
 
-@pytest.mark.parametrize("limit", [None, 0], ids=["default", "off"])
-def test_knn_exact_vs_brute(spark, monkeypatch, limit):
-    # the default gate runs the broadcast feeder, 0 the tiled one
-    from esda_spark.plans import gate
-
-    if limit is not None:
-        monkeypatch.setitem(gate.LIMITS, "knn_targets", limit)
-    for n, k in ((120, 1), (120, 4), (120, 8), (60, 5)):
+def _check_knn_exact(spark, cases):
+    for n, k in cases:
         xy, pts = _rand_points(spark, n=n)
         got = {(r.focal, r.neighbor) for r in knn_edges(pts, k=k).collect()}
         want = {tuple(e) for e in onp.brute_knn_edges(xy, k)}
         assert got == want, f"n={n} k={k}"
+
+
+def test_knn_exact_vs_brute(spark):
+    # default gate: the broadcast feeder
+    _check_knn_exact(spark, ((120, 1), (120, 4), (120, 8), (60, 5)))
+
+
+def test_knn_exact_vs_brute_tiled(spark, monkeypatch):
+    # gate forced to 0: the tiled feeder
+    from esda_spark.plans import gate
+
+    monkeypatch.setitem(gate.LIMITS, "knn_targets", 0)
+    _check_knn_exact(spark, ((120, 1), (120, 4), (120, 8), (60, 5)))
+
+
+def test_knn_small_cell_forces_ring_expansion(spark, monkeypatch):
+    # the kernel sizes its cells for ~k targets each: focals on the rim
+    # of the point set do not settle in their first ring and go on
+    # with a doubled radius
+    from esda_spark.operators import knn_incore as KI
+
+    xy, pts = _rand_points(spark, n=60)
+    want = {tuple(e) for e in onp.brute_knn_edges(xy, 5)}
+    got = {(r.focal, r.neighbor) for r in knn_edges(pts, k=5).collect()}
+    assert got == want
+
+    rads = []
+    gather_ring = KI._gather_ring
+
+    def spy(fx, fy, s, rad, sk, order):
+        rads.append(rad)
+        return gather_ring(fx, fy, s, rad, sk, order)
+
+    monkeypatch.setattr(KI, "_gather_ring", spy)
+    ids = np.arange(len(xy), dtype=np.int64)
+    idx = KI.build_target_index(ids, xy[:, 0], xy[:, 1], 5)
+    f, nb, _ = KI.knn_batch(ids, xy[:, 0], xy[:, 1], idx, 5, True, None)
+    assert set(zip(f.tolist(), nb.tolist())) == want
+    assert max(rads) >= 2
 
 
 def test_distance_band_exact(spark):
