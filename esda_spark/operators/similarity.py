@@ -14,6 +14,7 @@
 from __future__ import annotations
 
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -149,21 +150,22 @@ def cosine_topk(
             .select("query_id", "vec_id", "rank", "sim")
         )
 
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).collect()
+    # one wave: the query collect and the corpus probe run concurrently
+    # (an empty query side wastes the probe, bounded by ann_rows + 1)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_q = pool.submit(queries.select(
+            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        ).collect)
+        f_e = pool.submit(gate.collect_if_fits, embeddings.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
+        ), "ann_rows")
+        qrows, emb_pdf = f_q.result(), f_e.result()
     spark = embeddings.sparkSession
     if not qrows:
         return _ranked_topk(spark, *_NO_PAIRS, k)
     qids = np.array([r.query_id for r in qrows], dtype=np.int64)
     Q = np.array([np.asarray(r.qv, dtype=np.float64) for r in qrows])
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    emb_pdf = gate.collect_if_fits(
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        ),
-        "ann_rows",
-    )
     if emb_pdf is not None and len(qids) * len(emb_pdf) <= 50_000_000:
         # in-core fast path: the query side is collected either way;
         # when the corpus also fits the gate, score the single (q, n)
@@ -389,22 +391,45 @@ def _seq_dot(A: np.ndarray, B: np.ndarray,
 
 def _incore_sides(embeddings, queries, id_col, vec_col, query_id_col):
     """(corpus, queries) as pandas frames — (vec_id, cv) and (query_id,
-    qv) — when both fit the ``ann_rows`` gate, else None."""
-    emb = gate.collect_if_fits(
-        embeddings.select(
+    qv) — when both fit the ``ann_rows`` gate, else None.
+
+    One probe wave: both probes run concurrently, as the global
+    statistics' ``_incore_arrays`` does.  When the corpus does not fit,
+    the query probe was wasted work, bounded by ``ann_rows + 1`` rows."""
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_e = pool.submit(gate.collect_if_fits, embeddings.select(
             F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        ),
-        "ann_rows",
-    )
-    if emb is None:
-        return None
-    q = gate.collect_if_fits(
-        queries.select(
+        ), "ann_rows")
+        f_q = pool.submit(gate.collect_if_fits, queries.select(
             F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        "ann_rows",
-    )
-    return None if q is None else (emb, q)
+        ), "ann_rows")
+        emb, q = f_e.result(), f_q.result()
+    return None if emb is None or q is None else (emb, q)
+
+
+def _bucket_members(keys: np.ndarray, probes: np.ndarray):
+    """(probe, pos) for every member of every probe's bucket: ``pos``
+    indexes the sorted ``keys`` whose value equals ``probes[probe]``.
+    Rows come probe by probe, members in sorted-key order."""
+    lo = np.searchsorted(keys, probes)
+    cnt = np.searchsorted(keys, probes, side="right") - lo
+    probe = np.repeat(np.arange(len(probes)), cnt)
+    pos = np.arange(len(probe)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return probe, pos + lo[probe]
+
+
+def _pair_sims(qid, Q, cid, C, qrow, crow):
+    """Flat (query_id, vec_id, sim) arrays of the candidate (query row,
+    corpus row) pairs, self matches dropped, sims by the sequential
+    fold the distributed scorers evaluate."""
+    keep = qid[qrow] != cid[crow]
+    qrow, crow = qrow[keep], crow[keep]
+    if len(qrow) == 0:
+        return _NO_PAIRS
+    qn = np.sqrt(_seq_dot(Q, Q))
+    cn = np.sqrt(_seq_dot(C, C))
+    sim = _seq_dot(Q, C, qrow, crow) / (qn[qrow] * cn[crow])
+    return qid[qrow], cid[crow], sim
 
 
 def _lsh_topk_incore(emb_pdf, q_pdf, dim, num_planes, seed,
@@ -412,7 +437,18 @@ def _lsh_topk_incore(emb_pdf, q_pdf, dim, num_planes, seed,
     """Driver-side LSH candidates over collected sides — identical
     draws, buckets, probes, candidate set and sims (sequential-fold
     arithmetic) as the distributed plan.  Returns flat (query_id,
-    vec_id, sim) arrays for :func:`_ranked_topk`."""
+    vec_id, sim) arrays for :func:`_ranked_topk`, in (query row, corpus
+    row) order.
+
+    All tables share one sorted key array: a corpus row's key in table
+    t is ``t << num_planes | bucket`` (buckets are below
+    ``2**num_planes``), and every exact or Hamming-1 probe of a query
+    carries its table the same way, so one ``searchsorted`` pair finds
+    every bucket mate.  The cross-table and cross-probe duplicates go
+    with a 1-D ``np.unique`` on the packed pair key ``qrow * len(C) +
+    crow``, which sorts like (qrow, crow).  The key uses row positions,
+    not ids; both sides are below the ``ann_rows`` gate (200k rows), so
+    it stays below 4e10, far inside int64."""
     if not len(emb_pdf) or not len(q_pdf):
         return _NO_PAIRS
     cid = emb_pdf["vec_id"].to_numpy(np.int64)
@@ -423,37 +459,21 @@ def _lsh_topk_incore(emb_pdf, q_pdf, dim, num_planes, seed,
         size=(num_tables, num_planes, dim)
     )
     pows = (1 << np.arange(num_planes)).astype(np.int64)
-    pairs = []
+    flips = np.r_[0, pows] if multiprobe else np.zeros(1, np.int64)
+    ckeys, pkeys = [], []
     for t in range(num_tables):
         cb = ((C @ H[t].T) > 0) @ pows
         qb = ((Q @ H[t].T) > 0) @ pows
-        probes = [qb]
-        if multiprobe:
-            probes += [qb ^ (1 << j) for j in range(num_planes)]
-        order = np.argsort(cb, kind="stable")
-        sb = cb[order]
-        for pb in probes:
-            lo = np.searchsorted(sb, pb)
-            hi = np.searchsorted(sb, pb, side="right")
-            cnt = hi - lo
-            tot = int(cnt.sum())
-            if tot == 0:
-                continue
-            qrow = np.repeat(np.arange(len(qid)), cnt)
-            within = np.arange(tot) - np.repeat(np.cumsum(cnt) - cnt,
-                                               cnt)
-            crow = order[lo[qrow] + within]
-            pairs.append(np.stack([qrow, crow], axis=1))
-    if not pairs:
-        return _NO_PAIRS
-    P = np.unique(np.concatenate(pairs), axis=0)
-    P = P[qid[P[:, 0]] != cid[P[:, 1]]]
-    if len(P) == 0:
-        return _NO_PAIRS
-    qn = np.sqrt(_seq_dot(Q, Q))
-    cn = np.sqrt(_seq_dot(C, C))
-    sim = _seq_dot(Q, C, P[:, 0], P[:, 1]) / (qn[P[:, 0]] * cn[P[:, 1]])
-    return qid[P[:, 0]], cid[P[:, 1]], sim
+        ckeys.append((t << num_planes) | cb)
+        # table-major, then query, then flip
+        pkeys.append(((t << num_planes) | (qb[:, None] ^ flips)).ravel())
+    ckeys = np.concatenate(ckeys)
+    order = np.argsort(ckeys)
+    probe, pos = _bucket_members(ckeys[order], np.concatenate(pkeys))
+    n = len(cid)
+    qrow = probe % (len(qid) * len(flips)) // len(flips)
+    P = np.unique(qrow * n + order[pos] % n)
+    return _pair_sims(qid, Q, cid, C, P // n, P % n)
 
 
 def lsh_topk(
@@ -775,24 +795,8 @@ def _ivf_topk_incore(emb_pdf, q_pdf, Cn, nprobe):
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
     probes = np.argsort(-(Qn @ Cn.T), axis=1)[:, :nprobe]
     order = np.argsort(lists, kind="stable")
-    sl = lists[order]
-    lo = np.searchsorted(sl, probes.ravel())
-    hi = np.searchsorted(sl, probes.ravel(), side="right")
-    cnt = hi - lo
-    tot = int(cnt.sum())
-    if tot == 0:
-        return _NO_PAIRS
-    qrow = np.repeat(np.repeat(np.arange(len(qid)), probes.shape[1]), cnt)
-    within = np.arange(tot) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-    crow = order[lo[np.repeat(np.arange(len(cnt)), cnt)] + within]
-    keep = qid[qrow] != cid[crow]
-    qrow, crow = qrow[keep], crow[keep]
-    if len(qrow) == 0:
-        return _NO_PAIRS
-    qn = np.sqrt(_seq_dot(Q, Q))
-    cn = np.sqrt(_seq_dot(C, C))
-    sim = _seq_dot(Q, C, qrow, crow) / (qn[qrow] * cn[crow])
-    return qid[qrow], cid[crow], sim
+    probe, pos = _bucket_members(lists[order], probes.ravel())
+    return _pair_sims(qid, Q, cid, C, probe // probes.shape[1], order[pos])
 
 
 def ivf_topk(

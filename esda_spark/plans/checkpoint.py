@@ -1,11 +1,17 @@
 """Checkpoint/resume with per-partition lineage + metrics (north rule).
 
 Every expensive stage can be materialized to Parquet alongside a
-``_manifest.json`` recording row count, per-partition row counts, the
+``_manifest.json`` recording row count, per-part-file row counts, the
 stage's input fingerprint, schema, and wall time.  Re-running a
 pipeline skips stages whose manifest matches the requested fingerprint
 — the 100 TB failure-recovery story: a killed job resumes from the
 last completed stage instead of recomputing the lineage from scratch.
+
+The counts come from the written files' Parquet footers, keyed by the
+part number in ``part-NNNNN-…`` (the writing task's partition), and
+the schema from the frame itself, so writing a stage runs the write job
+and nothing else.  Empty partitions write no part file; a wholly empty
+frame writes one empty file.
 """
 
 from __future__ import annotations
@@ -14,31 +20,27 @@ import json
 import os
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 MANIFEST = "_manifest.json"
 
 
-def write_stage(
-    df: DataFrame, path: str, fingerprint: str, partition_by: list[str] | None = None
-) -> dict:
+def write_stage(df: DataFrame, path: str, fingerprint: str) -> dict:
     """Materialize a stage + manifest; returns the manifest dict."""
     t0 = time.perf_counter()
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    out = df.sparkSession.read.parquet(path)
-    per_part = (
-        out.withColumn("_p", F.spark_partition_id())
-        .groupBy("_p").count().collect()
-    )
+    df.write.mode("overwrite").parquet(path)
+    parts: dict[int, int] = {}
+    for name in sorted(os.listdir(path)):
+        if name.startswith("part-") and name.endswith(".parquet"):
+            part = int(name.split("-")[1])
+            rows = pq.read_metadata(os.path.join(path, name)).num_rows
+            parts[part] = parts.get(part, 0) + rows
     manifest = {
         "fingerprint": fingerprint,
-        "rows": int(sum(r["count"] for r in per_part)),
-        "partitions": {int(r["_p"]): int(r["count"]) for r in per_part},
-        "schema": out.schema.simpleString(),
+        "rows": sum(parts.values()),
+        "partitions": parts,
+        "schema": df.schema.simpleString(),
         "wall_sec": round(time.perf_counter() - t0, 3),
         "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
@@ -55,18 +57,12 @@ def read_manifest(path: str) -> dict | None:
         return json.load(f)
 
 
-def stage(
-    spark: SparkSession,
-    path: str,
-    fingerprint: str,
-    build,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
+def stage(spark: SparkSession, path: str, fingerprint: str, build) -> DataFrame:
     """Return the stage output, rebuilding only when the fingerprint
     changed (resume-from-checkpoint)."""
     m = read_manifest(path)
     if m is not None and m.get("fingerprint") == fingerprint:
         return spark.read.parquet(path)
     df = build()
-    write_stage(df, path, fingerprint, partition_by)
+    write_stage(df, path, fingerprint)
     return spark.read.parquet(path)

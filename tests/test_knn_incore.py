@@ -10,6 +10,7 @@ Each case either agrees bit-for-bit (a global statistic's scalars: to
 raise."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -344,3 +345,75 @@ def test_incore_knn_tiny_and_degenerate(spark):
     # every point gets the 3 others, ordered ties by id
     assert len(got) == 12
     assert (0, 1) in got and (0, 2) in got and (0, 3) in got
+
+
+def _lsh_reference_pairs(emb, qp, dim, planes, seed, tables, multiprobe):
+    """Set-based LSH candidates: (query_id, vec_id) pairs whose buckets
+    are equal, or (multiprobe) one bit apart, in at least one table —
+    self pairs excluded."""
+    H = np.random.default_rng(seed).normal(size=(tables, planes, dim))
+    pows = 1 << np.arange(planes)
+    C = np.vstack(emb["cv"].to_numpy())
+    Q = np.vstack(qp["qv"].to_numpy())
+    hits, out = 0, set()
+    for t in range(tables):
+        cb = ((C @ H[t].T) > 0) @ pows
+        qb = ((Q @ H[t].T) > 0) @ pows
+        for qi, q in enumerate(qp["query_id"]):
+            for ci, c in enumerate(emb["vec_id"]):
+                dist = bin(int(qb[qi]) ^ int(cb[ci])).count("1")
+                if q != c and dist <= multiprobe:
+                    hits += 1
+                    out.add((int(q), int(c)))
+    return out, hits
+
+
+@pytest.mark.parametrize("multiprobe", [0, 1])
+def test_lsh_incore_candidate_set(multiprobe):
+    """The in-core LSH candidates are exactly the set-based pairs, each
+    once, in (query row, corpus row) order, with the sims of their
+    vectors — not only the top-k that test_gate_parity compares."""
+    from esda_spark.operators.similarity import _lsh_topk_incore
+
+    rng = np.random.default_rng(5)
+    dim, planes, tables, seed = 6, 3, 4, 9
+    n = 90
+    ids = 10**12 + 7 * rng.permutation(n)
+    X = rng.normal(size=(4, dim))[rng.integers(0, 4, n)]
+    X += 0.3 * rng.normal(size=(n, dim))
+    emb = pd.DataFrame({"vec_id": ids, "cv": list(X)})
+    qi = rng.choice(n, 25, replace=False)
+    Y = X[qi[:20]]
+    Y = np.vstack([Y, rng.normal(size=(5, dim))])  # 5 foreign queries
+    qids = np.r_[ids[qi[:20]], 10**12 + 7 * n + np.arange(5)]
+    qp = pd.DataFrame({"query_id": qids, "qv": list(Y)})
+
+    want, hits = _lsh_reference_pairs(emb, qp, dim, planes, seed, tables,
+                                      multiprobe)
+    assert hits > len(want)  # pairs repeat across tables and probes
+    q, v, sim = _lsh_topk_incore(emb, qp, dim, planes, seed, tables,
+                                 multiprobe)
+    got = list(zip(q.tolist(), v.tolist()))
+    assert len(got) == len(set(got)) and set(got) == want
+    row = {int(i): r for r, i in enumerate(ids)}
+    qrow = {int(i): r for r, i in enumerate(qids)}
+    keys = [(qrow[a], row[b]) for a, b in got]
+    assert keys == sorted(keys)
+    ref = np.array([Y[qrow[a]] @ X[row[b]]
+                    / np.linalg.norm(Y[qrow[a]]) / np.linalg.norm(X[row[b]])
+                    for a, b in got])
+    np.testing.assert_allclose(sim, ref, rtol=1e-12)
+
+
+def test_lsh_incore_no_candidates():
+    """Empty sides, and a query whose only bucket mate is itself, give
+    empty typed arrays."""
+    from esda_spark.operators.similarity import _lsh_topk_incore
+
+    one = pd.DataFrame({"vec_id": [10**12 + 7], "cv": [np.ones(4)]})
+    q = one.rename(columns={"vec_id": "query_id", "cv": "qv"})
+    none = one.iloc[:0]
+    for emb, qp in ((one, q), (none, q), (one, q.iloc[:0])):
+        out = _lsh_topk_incore(emb, qp, 4, 3, 1, 4, 1)
+        assert [len(a) for a in out] == [0, 0, 0]
+        assert [a.dtype for a in out] == [np.int64, np.int64, np.float64]

@@ -40,6 +40,29 @@ def test_checkpoint_stage_resume(spark, tmp_path):
     assert calls["n"] == 2
 
 
+@pytest.mark.parametrize("case", ["spread", "empty_parts", "empty"])
+def test_write_stage_manifest_counts(spark, tmp_path, case):
+    """The manifest's rows and per-part counts (read from the Parquet
+    footers) equal what a read-back counts, with empty partitions and
+    with a wholly empty frame."""
+    from esda_spark.plans.checkpoint import read_manifest, write_stage
+
+    df = spark.range(0, 200, numPartitions=6).withColumn("v", F.col("id") / 3)
+    if case == "empty_parts":
+        df = df.where(F.col("id") < 70)  # partitions 2..5 keep no row
+    elif case == "empty":
+        df = df.where(F.col("id") < 0)
+    p = str(tmp_path / case)
+    m = write_stage(df, p, "fp")
+    want = spark.read.parquet(p).count()
+    assert m["rows"] == sum(m["partitions"].values()) == want
+    assert m["schema"] == "struct<id:bigint,v:double>"
+    assert read_manifest(p)["rows"] == want
+    if case == "empty_parts":
+        assert want == 70 and all(c > 0 for c in m["partitions"].values())
+        assert max(m["partitions"]) < 6 and len(m["partitions"]) < 6
+
+
 def test_streaming_cell_counts(spark, tmp_path):
     from esda_spark.streaming.ingest import cell_counts_stream
 
