@@ -191,8 +191,7 @@ def ivf_cogroup_smoke(n_queries: int = 1_000_000,
         .repartition(CPUS).cache()
     nq = queries.count()
     centers = kmeans_fit(corpus, k=256, max_iters=6, seed=7)
-    res = ivf_topk(corpus, queries, centers, k=10, nprobe=2,
-                   mode="cogroup")
+    res = ivf_topk(corpus, queries, centers, k=10, nprobe=2)
     plan = res._jdf.queryExecution().executedPlan().toString()
     t0 = time.perf_counter()
     res.write.format("noop").mode("overwrite").save()

@@ -1,14 +1,34 @@
 """Similarity search over embedding columns (array<float>).
 
-- :func:`cosine_topk` — brute-force exact top-k: broadcast the query
-  block, JVM-side ``zip_with``/``aggregate`` dot products (sequential
-  fold => deterministic), per-query ``row_number`` top-k.  The
-  baseline every ANN variant is validated against.
-- :func:`lsh_topk` — random-hyperplane LSH bucketing as the scale
-  path: queries only score candidates sharing a signature-prefix
-  bucket, trading recall for a ~buckets-fold scan reduction.  The
-  hyperplanes derive from a seeded numpy RNG broadcast to a pandas
-  UDF (Arrow-batched).
+Every top-k operator returns (query_id, vec_id, rank, sim): per query
+the ``k`` best candidates by (sim desc, vec_id asc), self matches
+dropped.  A pair whose sim is not finite (a zero-norm vector) is never
+a candidate, so no NaN reaches a ranking (numpy orders NaN last,
+Spark's window first).  Each operator has ONE numpy kernel that turns
+a block of corpus rows and a block of query rows into flat (query_id,
+vec_id, sim) candidates:
+
+- :func:`cosine_topk` / :func:`cosine_topk_distributed` — exact: one
+  BLAS cosine matrix per block (:func:`_cosine_pairs`).
+- :func:`lsh_topk` — OR-amplified random-hyperplane LSH with Hamming-1
+  multiprobe: only (table, bucket) mates are scored
+  (:func:`_lsh_topk_incore`).
+- :func:`ivf_topk` — inverted lists over k-means centroids
+  (:func:`kmeans_fit`): a query scores the members of its ``nprobe``
+  nearest lists.
+
+Below the ``ann_rows`` gate both sides are collected and the kernel
+runs once on the driver (:func:`_ranked_topk`).  Above it the kernel
+runs once per cogroup slice (:func:`_cogroup_topk`): the corpus is
+hash-sliced by vec_id with the queries replicated to every slice (LSH,
+``cosine_topk_distributed``), or keyed by inverted list (IVF); each
+slice keeps its local top-k and one ``row_number`` window merges them.
+:func:`cosine_topk` instead broadcasts the query matrix to a
+``mapInPandas`` over the corpus, which measured faster than the
+cogroup shape (PLANS.md, Round 12).  LSH and IVF sims are a sequential
+fold (:func:`_seq_dot`), elementwise, so a slice's sims equal the
+in-core sims bit for bit; BLAS cosine sims can move in the last bits
+with the matrix shape.
 """
 
 from __future__ import annotations
@@ -24,6 +44,7 @@ from pyspark.sql import functions as F
 from esda_spark.plans import gate
 
 _TOPK_SCHEMA = "query_id long, vec_id long, rank int, sim double"
+_CAND_SCHEMA = "query_id long, vec_id long, sim double"
 _NO_PAIRS = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
 
 
@@ -45,57 +66,121 @@ def _norm(a):
     )
 
 
-def _topk_with_ties(sims: np.ndarray, vec_ids: np.ndarray, kk: int) -> list:
-    """Per-row column indices of the top-``kk`` by (sim desc, vec_id asc).
-
-    Plain ``argpartition`` keeps an arbitrary subset when more than kk
-    entries tie exactly at the cutoff sim, so the lowest-vec_id tie the
-    final global window would select can be dropped — and in the
-    bucketed kernel that makes results depend on ``n_buckets``.  Rows
-    with no tie at the cutoff (the generic case) stay on the pure
-    argpartition path; only tied rows pay the vec_id-ordered widening.
-    """
-    m, n = sims.shape
-    if n <= kk:
-        return [np.arange(n)] * m
-    part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-    kept = np.take_along_axis(sims, part, axis=1)
-    thresh = kept.min(axis=1)
-    tied_total = (sims == thresh[:, None]).sum(axis=1)
-    tied_kept = (kept == thresh[:, None]).sum(axis=1)
-    out = list(part)
-    for qi in np.nonzero(tied_total > tied_kept)[0]:
-        row = sims[qi]
-        cols = part[qi]
-        greater = cols[row[cols] > thresh[qi]]
-        tied_all = np.nonzero(row == thresh[qi])[0]
-        order = np.argsort(vec_ids[tied_all], kind="stable")
-        out[qi] = np.concatenate(
-            [greater, tied_all[order[: kk - len(greater)]]]
-        )
-    return out
-
-
-def _ranked_topk(spark, qid: np.ndarray, vid: np.ndarray, sim: np.ndarray,
-                 k: int) -> DataFrame:
-    """(query_id, vec_id, rank, sim) from flat driver-side candidate
-    arrays: per query the top ``k`` by (sim desc, vec_id asc) — the
-    window every distributed top-k plan applies.  No candidates give
-    a typed empty frame."""
+def _topk_rows(qid: np.ndarray, vid: np.ndarray, sim: np.ndarray, k: int):
+    """(positions, rank) of each query's top ``k`` candidates by (sim
+    desc, vec_id asc), query by query."""
     order = np.lexsort((vid, -sim, qid))
     qs = qid[order]
     starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
     seg_len = np.diff(np.r_[starts, len(qs)])
     rank = np.arange(len(qs)) - np.repeat(starts, seg_len) + 1
     top = rank <= k
-    sel = order[top]
+    return order[top], rank[top]
+
+
+def _ranked_topk(spark, qid: np.ndarray, vid: np.ndarray, sim: np.ndarray,
+                 k: int) -> DataFrame:
+    """(query_id, vec_id, rank, sim) from flat driver-side candidate
+    arrays: per query the top ``k`` by (sim desc, vec_id asc).  No
+    candidates give a typed empty frame."""
+    sel, rank = _topk_rows(qid, vid, sim, k)
     return spark.createDataFrame(
         pd.DataFrame({
             "query_id": qid[sel], "vec_id": vid[sel],
-            "rank": rank[top].astype(np.int32), "sim": sim[sel],
+            "rank": rank.astype(np.int32), "sim": sim[sel],
         }),
         schema=_TOPK_SCHEMA,
     )
+
+
+def _local_topk(cands, k: int) -> pd.DataFrame:
+    """A block's flat candidates cut to each query's top ``k`` — every
+    row the final window can rank — as a (query_id, vec_id, sim)
+    frame."""
+    qid, vid, sim = cands
+    sel, _ = _topk_rows(qid, vid, sim, k)
+    return pd.DataFrame(
+        {"query_id": qid[sel], "vec_id": vid[sel], "sim": sim[sel]})
+
+
+def _window_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per query the top ``k`` rows of ``scored`` by (sim desc, vec_id
+    asc): the merge of the blocks' local top-k."""
+    win = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(win))
+        .where(F.col("rank") <= k)
+        .select("query_id", "vec_id", "rank", "sim")
+    )
+
+
+def _cogroup_topk(corpus_keyed: DataFrame, queries_keyed: DataFrame,
+                  pairs, k: int) -> DataFrame:
+    """(query_id, vec_id, rank, sim) from a kernel run once per cogroup
+    slice: the above-gate shape of every ANN top-k.
+
+    ``corpus_keyed`` holds (key, vec_id, cv), ``queries_keyed`` (key,
+    query_id, qv).  Each key's group calls ``pairs(cpdf, qpdf)``, which
+    returns flat (query_id, vec_id, sim) arrays, self pairs dropped;
+    the group keeps each query's local top-k by (sim desc, vec_id asc)
+    and one ``row_number`` window merges the groups.  Exact as long as
+    no (query, vec) pair is a candidate in two groups.
+
+    A group is one pandas frame a side inside one Python worker: a key
+    must hold a corpus slice (and query block) that fits a worker, as
+    n / slices rows of a hash-sliced corpus do."""
+
+    def score(cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
+        both = len(cpdf) and len(qpdf)
+        return _local_topk(pairs(cpdf, qpdf) if both else _NO_PAIRS, k)
+
+    return _window_topk(
+        corpus_keyed.groupBy("key").cogroup(queries_keyed.groupBy("key"))
+        .applyInPandas(score, schema=_CAND_SCHEMA),
+        k,
+    )
+
+
+def _hash_slices(embeddings, queries, nb, id_col, vec_col, query_id_col):
+    """(corpus, queries) keyed for :func:`_cogroup_topk`: the corpus in
+    ``nb`` slices by ``pmod(xxhash64(vec_id), nb)``, every query
+    replicated once per slice (a broadcast crossJoin of the slice ids,
+    q * nb shuffled rows)."""
+    corpus = embeddings.select(
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(nb)).cast("int").alias("key"),
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"),
+    )
+    keys = embeddings.sparkSession.range(nb).select(
+        F.col("id").cast("int").alias("key"))
+    return corpus, queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    ).crossJoin(F.broadcast(keys))
+
+
+def _arrays(pdf: pd.DataFrame, id_col: str, vec_col: str):
+    """(ids int64, (rows, dim) float64 matrix) of a non-empty frame."""
+    return (pdf[id_col].to_numpy(np.int64),
+            np.vstack(pdf[vec_col].to_numpy()).astype(np.float64))
+
+
+def _cosine_pairs(qid, Q, cid, C, k: int):
+    """Flat (query_id, vec_id, sim) candidates of the exact cosine
+    top-k over one (queries x corpus rows) block: one BLAS matrix of
+    the normalized vectors.  Self pairs and non-finite sims are
+    dropped; of the rest, each query row keeps its entries at or above
+    the row's k-th largest sim — ties included, so the (sim desc,
+    vec_id asc) ranking sees every tie at the cutoff."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = ((Q / np.linalg.norm(Q, axis=1, keepdims=True))
+                @ (C / np.linalg.norm(C, axis=1, keepdims=True)).T)
+    ok = np.isfinite(sims) & (qid[:, None] != cid[None, :])
+    sims[~ok] = -np.inf
+    kk = min(k, sims.shape[1])
+    if kk == 0:
+        return _NO_PAIRS
+    cut = np.partition(sims, -kk, axis=1)[:, -kk]
+    qrow, crow = np.nonzero(ok & (sims >= cut[:, None]))
+    return qid[qrow], cid[crow], sims[qrow, crow]
 
 
 def cosine_topk(
@@ -110,30 +195,26 @@ def cosine_topk(
     """(query_id, vec_id, rank, sim): exact cosine top-k per query.
 
     Default path: broadcast the query matrix to an Arrow kernel; each
-    corpus partition computes one BLAS (queries x rows) score matrix
-    and emits only its local top-k per query, so the shuffle carries
-    O(partitions * q * k) rows — the map-side-combine shape that holds
-    at corpus sizes where the naive crossJoin's q*n rows would not.
+    corpus batch runs :func:`_cosine_pairs` and emits only its local
+    top-k per query, so the shuffle carries O(batches * q * k) rows —
+    the map-side-combine shape that holds at corpus sizes where the
+    naive crossJoin's q*n rows would not.  When the corpus also fits
+    the ``ann_rows`` gate, the same kernel runs once on the driver.
     ``arrow=False`` keeps the pure-Catalyst higher-order-function
     formulation (the SQL-oracle-comparable reference path).
 
     Bound: the QUERY side is collected to the driver and broadcast
     (q * dim * 8 bytes — ~1 GB at q=1e6, dim=128), so this operator is
     for validation and moderate query batches.  A large-q workload
-    should go through :func:`lsh_topk` (both sides stay distributed;
-    only bucket-mates are scored).
+    should go through :func:`cosine_topk_distributed` or
+    :func:`lsh_topk` (both sides stay distributed).
     """
+    corpus = embeddings.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"))
+    qside = queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     if not arrow:
-        q = F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(vec_col).alias("qv"),
-            )
-        )
-        c = embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        )
-        scored = q.crossJoin(c).where(
+        scored = F.broadcast(qside).crossJoin(corpus).where(
             F.col("query_id") != F.col("vec_id")
         ).select(
             "query_id",
@@ -141,115 +222,34 @@ def cosine_topk(
             (_dot(F.col("qv"), F.col("cv"))
              / (_norm(F.col("qv")) * _norm(F.col("cv")))).alias("sim"),
         )
-        win = Window.partitionBy("query_id").orderBy(
-            F.desc("sim"), F.asc("vec_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(win))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", "rank", "sim")
-        )
+        return _window_topk(scored, k)
 
     # one wave: the query collect and the corpus probe run concurrently
     # (an empty query side wastes the probe, bounded by ann_rows + 1)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_q = pool.submit(queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ).collect)
-        f_e = pool.submit(gate.collect_if_fits, embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        ), "ann_rows")
-        qrows, emb_pdf = f_q.result(), f_e.result()
+        f_q = pool.submit(qside.toPandas)
+        f_e = pool.submit(gate.collect_if_fits, corpus, "ann_rows")
+        q_pdf, emb_pdf = f_q.result(), f_e.result()
     spark = embeddings.sparkSession
-    if not qrows:
+    if not len(q_pdf):
         return _ranked_topk(spark, *_NO_PAIRS, k)
-    qids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    Q = np.array([np.asarray(r.qv, dtype=np.float64) for r in qrows])
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    qids, Q = _arrays(q_pdf, "query_id", "qv")
     if emb_pdf is not None and len(qids) * len(emb_pdf) <= 50_000_000:
-        # in-core fast path: the query side is collected either way;
-        # when the corpus also fits the gate, score the single (q, n)
-        # BLAS matrix on the driver — same normalize, same dgemm
-        # library, same (sim desc, vec_id asc) ranking — instead of a
-        # Python-worker stage plus a window merge.
-        if not len(emb_pdf):
-            return _ranked_topk(spark, *_NO_PAIRS, k)
-        cid = emb_pdf["vec_id"].to_numpy(np.int64)
-        C = np.vstack(emb_pdf["cv"].to_numpy()).astype(np.float64)
-        C /= np.linalg.norm(C, axis=1, keepdims=True)
-        sims = Qn @ C.T
-        qrow = np.repeat(np.arange(len(qids)), len(cid))
-        crow = np.tile(np.arange(len(cid)), len(qids))
-        keep = qids[qrow] != cid[crow]
-        qrow, crow = qrow[keep], crow[keep]
-        return _ranked_topk(spark, qids[qrow], cid[crow],
-                            sims[qrow, crow], k)
-    bc = spark.sparkContext.broadcast((qids, Qn))
+        # in-core: the query side is collected either way; when the
+        # corpus also fits, one (q, n) block on the driver
+        cands = (_cosine_pairs(qids, Q, *_arrays(emb_pdf, "vec_id", "cv"), k)
+                 if len(emb_pdf) else _NO_PAIRS)
+        return _ranked_topk(spark, *cands, k)
+    bc = spark.sparkContext.broadcast((qids, Q))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, Qn_ = bc.value
+        qids_, Q_ = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.vstack(pdf[id_col + "_v"].to_numpy()).astype(np.float64)
-            C /= np.linalg.norm(C, axis=1, keepdims=True)
-            sims = Qn_ @ C.T                     # (q, rows)
-            vec_ids = pdf["vid"].to_numpy(np.int64)
-            kk = min(k + 1, sims.shape[1])       # +1 to survive self-drop
-            part = _topk_with_ties(sims, vec_ids, kk)
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(qids_)):
-                cols = part[qi]
-                out_q.extend([qids_[qi]] * len(cols))
-                out_v.extend(vec_ids[cols])
-                out_s.extend(sims[qi, cols])
-            yield pd.DataFrame(
-                {"query_id": out_q, "vec_id": out_v, "sim": out_s}
-            )
+            if len(pdf):
+                yield _local_topk(_cosine_pairs(
+                    qids_, Q_, *_arrays(pdf, "vec_id", "cv"), k), k)
 
-    prepared = embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias(id_col + "_v")
-    )
-    scored = prepared.mapInPandas(
-        score, schema="query_id long, vec_id long, sim double"
-    ).where(F.col("query_id") != F.col("vec_id"))
-    win = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
-
-
-def _blas_topk_scorer(kk_keep: int):
-    """Cogroup kernel shared by :func:`cosine_topk_distributed` and
-    :func:`ivf_topk`'s cogroup posture: one BLAS (queries x corpus
-    slice) score matrix per group, local top-``kk_keep`` per query with
-    the (sim desc, vec_id asc) tie-break the final window applies."""
-
-    def score(key, cpdf: "pd.DataFrame", qpdf: "pd.DataFrame"):
-        if len(cpdf) == 0 or len(qpdf) == 0:
-            return pd.DataFrame({"query_id": [], "vec_id": [], "sim": []})
-        C = np.vstack(cpdf["cv"].to_numpy()).astype(np.float64)
-        C /= np.linalg.norm(C, axis=1, keepdims=True)
-        Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-        Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-        sims = Q @ C.T
-        vec_ids = cpdf["vec_id"].to_numpy(np.int64)
-        qids = qpdf["query_id"].to_numpy(np.int64)
-        kk = min(kk_keep, sims.shape[1])
-        part = _topk_with_ties(sims, vec_ids, kk)
-        out_q, out_v, out_s = [], [], []
-        for qi in range(len(qids)):
-            cols = part[qi]
-            out_q.extend([qids[qi]] * len(cols))
-            out_v.extend(vec_ids[cols])
-            out_s.extend(sims[qi, cols])
-        return pd.DataFrame(
-            {"query_id": out_q, "vec_id": out_v, "sim": out_s}
-        )
-
-    return score
+    return _window_topk(corpus.mapInPandas(score, schema=_CAND_SCHEMA), k)
 
 
 def cosine_topk_distributed(
@@ -266,41 +266,24 @@ def cosine_topk_distributed(
     collects + broadcasts the query matrix, ~1 GB at q=1e6 dim=128)
     explicitly does not cover.
 
-    Shape: the corpus hashes into ``n_buckets`` buckets; queries
-    replicate once per bucket through a broadcast crossJoin of the tiny
-    bucket-id range (shuffle volume q * n_buckets rows — choose
-    n_buckets ~ cores so replication stays ~O(cluster), while each
-    cogroup task's BLAS is (q, corpus/n_buckets)); each (corpus bucket,
-    query block) cogroup emits its local top-(k+1) per query and a
-    final per-query window merges bucket winners (n_buckets * q * (k+1)
-    rows).  No driver-side collect of either side at any point; total
-    flops identical to the broadcast path.  Results are exactly
-    :func:`cosine_topk`'s (same float64 kernel, same (sim desc, vec_id)
-    tie-break).
+    Shape: :func:`_cogroup_topk` over the corpus hashed into
+    ``n_buckets`` slices (default: the default parallelism), queries
+    replicated once per slice (shuffle volume q * n_buckets rows —
+    choose n_buckets ~ cores so replication stays ~O(cluster), while
+    each group's BLAS is (q, corpus/n_buckets)); each group emits its
+    local top-k per query and a final per-query window merges them.
+    No driver-side collect of either side; total flops identical to
+    the broadcast path.  Results are :func:`cosine_topk`'s (same
+    kernel, same (sim desc, vec_id) tie-break).
     """
-    spark = embeddings.sparkSession
-    nb = int(n_buckets or spark.sparkContext.defaultParallelism)
-    score = _blas_topk_scorer(k + 1)  # +1 survives the self-match drop
-    corp = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(nb)).cast("int").alias("cb"),
-    )
-    buckets = spark.range(nb).select(F.col("id").cast("int").alias("cb"))
-    qrep = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).crossJoin(F.broadcast(buckets))
-
-    scored = (
-        corp.groupBy("cb")
-        .cogroup(qrep.groupBy("cb"))
-        .applyInPandas(score, schema="query_id long, vec_id long, sim double")
-        .where(F.col("query_id") != F.col("vec_id"))
-    )
-    win = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
+    nb = int(n_buckets or embeddings.sparkSession.sparkContext
+             .defaultParallelism)
+    return _cogroup_topk(
+        *_hash_slices(embeddings, queries, nb, id_col, vec_col,
+                      query_id_col),
+        lambda cpdf, qpdf: _cosine_pairs(*_arrays(qpdf, "query_id", "qv"),
+                                         *_arrays(cpdf, "vec_id", "cv"), k),
+        k,
     )
 
 
@@ -372,20 +355,25 @@ def _seq_dot(A: np.ndarray, B: np.ndarray,
              bi: np.ndarray | None = None) -> np.ndarray:
     """Row-wise dot via a strict left-to-right column accumulation —
     bitwise identical to the Catalyst
-    ``aggregate(zip_with(a, b, *), 0.0, acc + v)`` fold that the
-    distributed scorer evaluates (0.0 + x0 == x0 exactly), unlike
-    pairwise-summing np.sum.  Optional ``ai``/``bi`` row gathers are
-    applied PER COLUMN so the working set stays (n,)-sized: a
-    (n, dim) gather + cumsum allocated ~100 MB of fresh pages per
-    call, which in the long-lived driver process measured 20-30x the
-    standalone cost (allocator/page-fault churn, CPU time == wall)."""
-    a0 = A[ai, 0] if ai is not None else A[:, 0]
-    b0 = B[bi, 0] if bi is not None else B[:, 0]
-    acc = a0 * b0
-    for j in range(1, A.shape[1]):
-        aj = A[ai, j] if ai is not None else A[:, j]
-        bj = B[bi, j] if bi is not None else B[:, j]
-        acc += aj * bj
+    ``aggregate(zip_with(a, b, *), 0.0, acc + v)`` fold (0.0 + x0 ==
+    x0 exactly), unlike pairwise-summing np.sum, and elementwise, so a
+    row pair's dot does not depend on the block it is computed in.
+
+    Optional ``ai``/``bi`` row gathers are applied PER COLUMN so the
+    working set stays (n,)-sized: a (n, dim) gather + cumsum allocated
+    ~100 MB of fresh pages per call, which in the long-lived driver
+    process measured 20-30x the standalone cost (allocator/page-fault
+    churn, CPU time == wall).  The columns come from transposed
+    contiguous copies, so each gather reads one contiguous row instead
+    of a stride-``dim`` column (27.5 ms against 43 ms on 94k pairs)."""
+    At, Bt = np.ascontiguousarray(A.T), np.ascontiguousarray(B.T)
+
+    def col(Mt, idx, j):
+        return Mt[j] if idx is None else Mt[j, idx]
+
+    acc = col(At, ai, 0) * col(Bt, bi, 0)
+    for j in range(1, len(At)):
+        acc += col(At, ai, j) * col(Bt, bi, j)
     return acc
 
 
@@ -420,25 +408,29 @@ def _bucket_members(keys: np.ndarray, probes: np.ndarray):
 
 def _pair_sims(qid, Q, cid, C, qrow, crow):
     """Flat (query_id, vec_id, sim) arrays of the candidate (query row,
-    corpus row) pairs, self matches dropped, sims by the sequential
-    fold the distributed scorers evaluate."""
+    corpus row) pairs by the sequential fold, self matches and
+    non-finite sims (a zero-norm side) dropped."""
     keep = qid[qrow] != cid[crow]
     qrow, crow = qrow[keep], crow[keep]
     if len(qrow) == 0:
         return _NO_PAIRS
     qn = np.sqrt(_seq_dot(Q, Q))
     cn = np.sqrt(_seq_dot(C, C))
-    sim = _seq_dot(Q, C, qrow, crow) / (qn[qrow] * cn[crow])
-    return qid[qrow], cid[crow], sim
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sim = _seq_dot(Q, C, qrow, crow) / (qn[qrow] * cn[crow])
+    ok = np.isfinite(sim)
+    return qid[qrow[ok]], cid[crow[ok]], sim[ok]
 
 
 def _lsh_topk_incore(emb_pdf, q_pdf, dim, num_planes, seed,
                      num_tables, multiprobe):
-    """Driver-side LSH candidates over collected sides — identical
-    draws, buckets, probes, candidate set and sims (sequential-fold
-    arithmetic) as the distributed plan.  Returns flat (query_id,
-    vec_id, sim) arrays for :func:`_ranked_topk`, in (query row, corpus
-    row) order.
+    """LSH candidates of a corpus block against a query block — the
+    kernel of :func:`lsh_topk` in both regimes (the whole collected
+    corpus on the driver, or one cogroup slice).  Returns flat
+    (query_id, vec_id, sim) arrays in (query row, corpus row) order,
+    sims by the sequential fold.  A pair's candidacy depends only on
+    the two signatures, so disjoint corpus slices neither lose a pair
+    nor duplicate one.
 
     All tables share one sorted key array: a corpus row's key in table
     t is ``t << num_planes | bucket`` (buckets are below
@@ -447,14 +439,12 @@ def _lsh_topk_incore(emb_pdf, q_pdf, dim, num_planes, seed,
     every bucket mate.  The cross-table and cross-probe duplicates go
     with a 1-D ``np.unique`` on the packed pair key ``qrow * len(C) +
     crow``, which sorts like (qrow, crow).  The key uses row positions,
-    not ids; both sides are below the ``ann_rows`` gate (200k rows), so
-    it stays below 4e10, far inside int64."""
+    not ids, so it is bounded by the block's query rows times its
+    corpus rows — 4e10 at 200k a side, far inside int64."""
     if not len(emb_pdf) or not len(q_pdf):
         return _NO_PAIRS
-    cid = emb_pdf["vec_id"].to_numpy(np.int64)
-    C = np.vstack(emb_pdf["cv"].to_numpy()).astype(np.float64)
-    qid = q_pdf["query_id"].to_numpy(np.int64)
-    Q = np.vstack(q_pdf["qv"].to_numpy()).astype(np.float64)
+    cid, C = _arrays(emb_pdf, "vec_id", "cv")
+    qid, Q = _arrays(q_pdf, "query_id", "qv")
     H = np.random.default_rng(seed).normal(
         size=(num_tables, num_planes, dim)
     )
@@ -497,97 +487,47 @@ def lsh_topk(
     ``multiprobe=1`` additionally probes every Hamming-distance-1
     bucket of each query signature (flip one plane's sign bit): a
     near-neighbor lost to one marginal hyperplane is recovered without
-    growing the corpus index at all — only the tiny broadcast query
-    side fans out (x ``1 + num_planes`` probe rows per table).  This
-    is the standard multi-probe LSH trade (Lv et al., VLDB 2007):
-    candidate volume grows ~(1 + planes * p_neighbor_flip) while
-    recall compounds across probes AND tables.  ``multiprobe=0``
-    restores exact-bucket probing.
+    growing the corpus index at all — only the query side fans out
+    (x ``1 + num_planes`` probes per table).  This is the standard
+    multi-probe LSH trade (Lv et al., VLDB 2007): candidate volume
+    grows ~(1 + planes * p_neighbor_flip) while recall compounds
+    across probes AND tables.  ``multiprobe=0`` restores exact-bucket
+    probing.
 
     ``num_planes=None`` (default) sizes the signature from the corpus
     count via :func:`auto_num_planes` (~25 vectors/bucket) — the
     setting the measured recall table in BASELINE.md shows ≥ 0.9
     recall@10 on clustered corpora without hand-tuning.
+
+    Below the ``ann_rows`` gate :func:`_lsh_topk_incore` runs once on
+    the collected sides; above it, once per hash slice of the corpus
+    against every query (:func:`_cogroup_topk`).  Both give the same
+    rows.
     """
     if multiprobe not in (0, 1):
         raise ValueError("multiprobe must be 0 or 1 (Hamming probe radius)")
-    # in-core fast path: both sides collected, identical draws/buckets/
-    # probes/candidate set, sims via the sequential fold, same ranking
-    # — two limit probes instead of ~6 jobs of Python-stage and
-    # broadcast latency.  A probe beats count + toPandas: 2k 64-dim
-    # vectors collect in 49 ms (min) against 109 ms on a 4-core
-    # local[4] session (see plans/gate.py).
     sides = _incore_sides(embeddings, queries, id_col, vec_col,
                           query_id_col)
-    if sides is not None:
-        emb_pdf, q_pdf = sides
-        np_planes = (num_planes if num_planes is not None
-                     else auto_num_planes(
-                         n_corpus if n_corpus is not None
-                         else len(emb_pdf)))
-        cands = _lsh_topk_incore(
-            emb_pdf, q_pdf, dim, np_planes, seed, num_tables, multiprobe,
-        )
-        return _ranked_topk(embeddings.sparkSession, *cands, k)
     if num_planes is None:
         # auto-sizing needs the corpus count; callers that know it pass
         # n_corpus and skip the count job (ADVICE r5)
-        num_planes = auto_num_planes(
-            n_corpus if n_corpus is not None else embeddings.count()
-        )
-    query_sig = hyperplane_signatures(
-        queries.select(F.col(query_id_col).alias("vec_id"),
-                       F.col(vec_col)),
-        dim, num_planes, seed, "vec_id", vec_col, num_tables,
-    ).withColumnRenamed("vec_id", "query_id")
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << j))
-              for j in range(num_planes)],
-        )
-        query_sig = query_sig.select(
-            "query_id", "table", F.explode(probes).alias("bucket")
-        )
-    corpus_sig = hyperplane_signatures(
-        embeddings, dim, num_planes, seed, id_col, vec_col, num_tables
-    )
-    # candidate generation and the cross-table dedup run on ID PAIRS
-    # only; the embedding arrays attach AFTERWARDS, so the dedup and
-    # ranking exchanges carry 16-byte rows instead of ~1 KB rows with
-    # both vectors (guide §2.3: shuffle keys, not payloads).  Norms
-    # are evaluated once per source vector; sim is bit-identical to
-    # the former per-candidate folds (same fold, same operands, same
-    # qn*cn order).
-    cand = (
-        F.broadcast(query_sig).join(corpus_sig, ["table", "bucket"])
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "vec_id")
-        .dropDuplicates(["query_id", "vec_id"])  # union across tables
-    )
-    qmap = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    cmap = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = (
-        cand.join(F.broadcast(qmap), "query_id")
-        .join(cmap, "vec_id")
-        .select(
-            "query_id", "vec_id",
-            (_dot(F.col("qv"), F.col("cv"))
-             / (F.col("qn") * F.col("cn"))).alias("sim"),
-        )
-    )
-    win = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
+        if n_corpus is None:
+            n_corpus = (len(sides[0]) if sides is not None
+                        else embeddings.count())
+        num_planes = auto_num_planes(n_corpus)
+
+    def kernel(cpdf, qpdf):
+        return _lsh_topk_incore(cpdf, qpdf, dim, num_planes, seed,
+                                num_tables, multiprobe)
+
+    spark = embeddings.sparkSession
+    if sides is not None:
+        return _ranked_topk(spark, *kernel(*sides), k)
+    return _cogroup_topk(
+        *_hash_slices(embeddings, queries,
+                      spark.sparkContext.defaultParallelism,
+                      id_col, vec_col, query_id_col),
+        kernel, k,
     )
 
 
@@ -682,6 +622,10 @@ def embedding_near_dup_pairs(
     )
 
 
+def _unit_rows(X: np.ndarray) -> np.ndarray:
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+
+
 def kmeans_fit(
     embeddings: DataFrame,
     k: int,
@@ -712,8 +656,8 @@ def kmeans_fit(
     if len(sample) < k:
         sample += embeddings.select(F.col(vec_col)).limit(
             k - len(sample)).collect()
-    C = np.array([np.asarray(r[0], dtype=np.float64) for r in sample[:k]])
-    C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    C = _unit_rows(np.array([np.asarray(r[0], dtype=np.float64)
+                             for r in sample[:k]]))
     dim = C.shape[1]
 
     prepared = embeddings.select(F.col(vec_col).alias("_v"))
@@ -725,10 +669,8 @@ def kmeans_fit(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-                X /= np.maximum(
-                    np.linalg.norm(X, axis=1, keepdims=True), 1e-12
-                )
+                X = _unit_rows(
+                    np.vstack(pdf["_v"].to_numpy()).astype(np.float64))
                 a = np.argmax(X @ C_.T, axis=1)
                 sums = np.zeros_like(C_)
                 np.add.at(sums, a, X)
@@ -780,23 +722,38 @@ def kmeans_fit(
     return C
 
 
+def _ivf_lists(X: np.ndarray, Cn: np.ndarray) -> np.ndarray:
+    """Each row's inverted list: its nearest normalized centroid."""
+    return np.argmax(_unit_rows(X) @ Cn.T, axis=1)
+
+
+def _ivf_probes(Q: np.ndarray, Cn: np.ndarray, nprobe: int) -> np.ndarray:
+    """(q, nprobe) lists each query probes, nearest first."""
+    return np.argsort(-(_unit_rows(Q) @ Cn.T), axis=1)[:, :nprobe]
+
+
 def _ivf_topk_incore(emb_pdf, q_pdf, Cn, nprobe):
-    """Driver-side IVF candidates — identical assignment/probe/sim
-    arithmetic as the distributed plan (see ivf_topk).  Returns flat
-    (query_id, vec_id, sim) arrays for :func:`_ranked_topk`."""
+    """Driver-side IVF candidates: flat (query_id, vec_id, sim) arrays
+    for :func:`_ranked_topk`, every (query, member of a probed list)
+    pair by :func:`_pair_sims`."""
     if not len(emb_pdf) or not len(q_pdf):
         return _NO_PAIRS
-    cid = emb_pdf["vec_id"].to_numpy(np.int64)
-    C = np.vstack(emb_pdf["cv"].to_numpy()).astype(np.float64)
-    Xn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    lists = np.argmax(Xn @ Cn.T, axis=1)
-    qid = q_pdf["query_id"].to_numpy(np.int64)
-    Q = np.vstack(q_pdf["qv"].to_numpy()).astype(np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    probes = np.argsort(-(Qn @ Cn.T), axis=1)[:, :nprobe]
+    cid, C = _arrays(emb_pdf, "vec_id", "cv")
+    qid, Q = _arrays(q_pdf, "query_id", "qv")
+    lists = _ivf_lists(C, Cn)
+    probes = _ivf_probes(Q, Cn, nprobe)
     order = np.argsort(lists, kind="stable")
     probe, pos = _bucket_members(lists[order], probes.ravel())
     return _pair_sims(qid, Q, cid, C, probe // probes.shape[1], order[pos])
+
+
+def _list_pairs(cpdf, qpdf):
+    """Every (query, member) pair of one inverted list's cogroup
+    slice, by :func:`_pair_sims`."""
+    cid, C = _arrays(cpdf, "vec_id", "cv")
+    qid, Q = _arrays(qpdf, "query_id", "qv")
+    qrow, crow = np.divmod(np.arange(len(qid) * len(cid)), len(cid))
+    return _pair_sims(qid, Q, cid, C, qrow, crow)
 
 
 def ivf_topk(
@@ -808,127 +765,65 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    mode: str = "auto",
-    broadcast_max_probe_rows: int = 1_000_000,
 ) -> DataFrame:
     """(query_id, vec_id, rank, sim): IVF approximate top-k — the
     second ANN scale path next to :func:`lsh_topk`.
 
     The corpus is assigned once to its nearest k-means centroid (the
     inverted lists); each query probes its ``nprobe`` closest
-    centroids and scores ONLY those lists' members.
+    centroids and scores ONLY those lists' members.  Expected
+    candidate volume ~ n * nprobe / k_lists per query.
 
-    mode="broadcast": probe rows (q * nprobe, with full query vectors)
-    broadcast-join the corpus on list id — lowest latency, bounded by
-    the broadcast size at millions of queries.
-    mode="cogroup": the large-q posture — probes stay distributed and
-    each inverted list cogroups with its probing queries (one BLAS per
-    list, local top-(k+1), final per-query window merge), exactly
-    :func:`cosine_topk_distributed`'s shape keyed by list id instead
-    of a hash bucket.  No collect or broadcast of either side.
-    mode="auto" (default) picks cogroup once q * nprobe exceeds
-    ``broadcast_max_probe_rows``.
-
-    Expected candidate volume ~ n * nprobe / k_lists per query either
-    way; skewed lists (dense regions) are handled by AQE skew-join
-    like any other hot key.
+    Below the ``ann_rows`` gate both sides are collected and scored on
+    the driver.  Above it the corpus and the (query, probed list) rows
+    are assigned per Arrow batch and cogrouped on list id
+    (:func:`_cogroup_topk`): each list scores its members against its
+    probing queries — no collect or broadcast of either side.  A
+    vector lives in one list, so no pair is scored twice.  Sims are
+    the sequential fold on both sides of the gate; only a near-tie
+    argmax of the per-batch BLAS assignment could move a vector to
+    another list.  A list (members x probing queries pairs) must fit a
+    Python worker.
     """
-    if mode not in ("auto", "broadcast", "cogroup"):
-        raise ValueError(f"unknown ivf_topk mode {mode!r}")
     spark = embeddings.sparkSession
-    Cn = centers / np.maximum(
-        np.linalg.norm(centers, axis=1, keepdims=True), 1e-12
-    )
-    # in-core fast path: same centroid assignment (argmax of the
-    # identical normalized matmul), same probe selection, sims via the
-    # sequential fold, same ranking — two limit probes instead of two
-    # Python stages, the auto-mode count job, a join and a window.
-    sides = (_incore_sides(embeddings, queries, id_col, vec_col,
-                           query_id_col)
-             if mode in ("auto", "broadcast") else None)
+    Cn = _unit_rows(centers)
+    sides = _incore_sides(embeddings, queries, id_col, vec_col,
+                          query_id_col)
     if sides is not None:
         return _ranked_topk(spark, *_ivf_topk_incore(*sides, Cn, nprobe), k)
     bc = spark.sparkContext.broadcast(Cn)
 
     def assign_corpus(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C_ = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True),
-                                1e-12)
-            yield pd.DataFrame({
-                "vec_id": pdf["_id"].to_numpy(),
-                "list_id": np.argmax(Xn @ C_.T, axis=1),
-                "cv": pdf["_v"].to_numpy(),
-            })
+            if len(pdf):
+                yield pd.DataFrame({
+                    "key": _ivf_lists(_arrays(pdf, "vec_id", "cv")[1],
+                                      bc.value),
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "cv": pdf["cv"].to_numpy(),
+                })
 
     def assign_queries(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C_ = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True),
-                                1e-12)
-            probes = np.argsort(-(Xn @ C_.T), axis=1)[:, :nprobe]
-            ids = pdf["_id"].to_numpy()
-            yield pd.DataFrame({
-                "query_id": np.repeat(ids, probes.shape[1]),
-                "list_id": probes.ravel(),
-                "qv": np.repeat(pdf["_v"].to_numpy(), probes.shape[1]),
-            })
+            if len(pdf):
+                probes = _ivf_probes(_arrays(pdf, "query_id", "qv")[1],
+                                     bc.value, nprobe)
+                yield pd.DataFrame({
+                    "key": probes.ravel(),
+                    "query_id": np.repeat(pdf["query_id"].to_numpy(),
+                                          probes.shape[1]),
+                    "qv": np.repeat(pdf["qv"].to_numpy(), probes.shape[1]),
+                })
 
     vec_t = "array<double>"
     corpus = embeddings.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).mapInPandas(
-        assign_corpus, schema=f"vec_id long, list_id long, cv {vec_t}"
-    )
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
+    ).mapInPandas(assign_corpus, schema=f"key long, vec_id long, cv {vec_t}")
     qprobes = queries.select(
-        F.col(query_id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).mapInPandas(
-        assign_queries, schema=f"query_id long, list_id long, qv {vec_t}"
-    )
-    if mode == "auto":
-        q_count = queries.count()
-        mode = ("broadcast"
-                if q_count * nprobe <= broadcast_max_probe_rows
-                else "cogroup")
-    if mode == "broadcast":
-        # per-source-row norms (same Catalyst fold, evaluated once per
-        # corpus/probe row instead of once per candidate; sim values
-        # bit-identical)
-        scored = (
-            F.broadcast(qprobes.withColumn("qn", _norm(F.col("qv"))))
-            .join(corpus.withColumn("cn", _norm(F.col("cv"))), "list_id")
-            .where(F.col("query_id") != F.col("vec_id"))
-            .select(
-                "query_id", "vec_id",
-                (_dot(F.col("qv"), F.col("cv"))
-                 / (F.col("qn") * F.col("cn"))).alias("sim"),
-            )
-            .dropDuplicates(["query_id", "vec_id"])
-        )
-    else:
-        # each corpus vector lives in exactly one list, so (query, vec)
-        # pairs are unique across the nprobe lists — no dedup needed
-        scored = (
-            corpus.groupBy("list_id")
-            .cogroup(qprobes.groupBy("list_id"))
-            .applyInPandas(
-                _blas_topk_scorer(k + 1),
-                schema="query_id long, vec_id long, sim double",
-            )
-            .where(F.col("query_id") != F.col("vec_id"))
-        )
-    win = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    ).mapInPandas(assign_queries,
+                  schema=f"key long, query_id long, qv {vec_t}")
+    return _cogroup_topk(corpus, qprobes, _list_pairs, k)
 
 
 def near_dup_groups(
@@ -991,16 +886,16 @@ def near_dup_groups(
             limit=gate.LIMITS["dedup_pairs"] * num_tables,
         )
         if cand_pdf is not None:
-            pairs = np.unique(
-                cand_pdf[["vec_a", "vec_b"]].to_numpy(np.int64), axis=0
-            )
-            ua, va = pairs[:, 0], pairs[:, 1]
+            # dedup on one packed key: ids ranked in their sorted union
+            # u, rank(a) * len(u) + rank(b) sorts like (vec_a, vec_b)
+            ab = cand_pdf[["vec_a", "vec_b"]].to_numpy(np.int64)
+            u, inv = np.unique(ab.T.ravel(), return_inverse=True)
+            P = np.unique(inv[:len(ab)] * len(u) + inv[len(ab):])
+            ua, va = u[P // max(len(u), 1)], u[P % max(len(u), 1)]
             keep = np.zeros(len(ua), dtype=bool)
             if len(ua):
                 cid_df = spark.createDataFrame(
-                    pd.DataFrame({"vec_id": np.unique(np.r_[ua, va])}),
-                    "vec_id long",
-                )
+                    pd.DataFrame({"vec_id": u}), "vec_id long")
                 vec_pdf = e.join(F.broadcast(cid_df), "vec_id",
                                  "left_semi").toPandas()
                 vid = vec_pdf["vec_id"].to_numpy(np.int64)

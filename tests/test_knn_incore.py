@@ -80,6 +80,12 @@ def _vectors(fixture):
         base = rng.normal(size=(30, DIM))
         return np.vstack([base, base + 0.001 * rng.normal(size=(30, DIM)),
                           rng.normal(size=(40, DIM))])
+    if fixture == "zero":
+        # a zero-norm vector, as corpus row and as query: its cosine is
+        # 0/0, so it is no pair's candidate on either side of the gate
+        v = rng.normal(size=(12, DIM))
+        v[5] = 0.0
+        return v
     # ties: scaled one-hot vectors — every cosine is exactly 0 or 1
     return np.vstack([np.eye(DIM)[i % 4] * (1 + i // 4) for i in range(12)])
 
@@ -185,8 +191,7 @@ def _lsh_topk(spark, fixture):
     from esda_spark.operators.similarity import lsh_topk
 
     emb = _embeddings(spark, fixture)
-    # bitwise incl. sims: the in-core scorer reproduces the Catalyst
-    # sequential fold exactly
+    # bitwise incl. sims: both sides run the same sequential fold
     return lsh_topk(emb, _queries(emb), dim=DIM, k=5, num_planes=5,
                     num_tables=4)
 
@@ -283,6 +288,8 @@ BOTH_RAISE.update({("getis_g", fx): ("getis_g: non-positive VG",) * 2
                    for fx in ("constant", "large_mean")})
 CASES += [("knn_join_grouped", "duplicates"), ("moran_v", "island"),
           ("knn_idw", "coincident")]
+# the ANN top-k over a zero-norm vector
+CASES += [(op, "zero") for op in ("cosine_topk", "lsh_topk", "ivf_topk")]
 
 
 def _run(spark, monkeypatch, op, fixture, limit):

@@ -621,29 +621,58 @@ def test_topk_duplicate_vector_ties(spark):
         assert got == want, nb
 
 
-def test_ivf_topk_cogroup_parity(spark):
-    """ivf_topk mode="cogroup" (large-q posture: probes never
-    broadcast) must match mode="broadcast" rank-for-rank."""
-    from esda_spark.operators.similarity import ivf_topk, kmeans_fit
+def _clustered_2k(spark):
+    """(corpus, queries): 2,000 x 24 clustered vectors, 30 queries."""
     from esda_spark.sources.embeddings import synthetic_embeddings
 
     emb = synthetic_embeddings(
         spark, 2000, dim=24, clusters=20, noise=0.35
     ).cache()
     emb.count()
-    centers = kmeans_fit(emb, k=16, max_iters=6, seed=5)
-    q = emb.where(F.col("vec_id") < 30).select(
+    return emb, emb.where(F.col("vec_id") < 30).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    a = {(r.query_id, r.rank): (r.vec_id, r.sim)
-         for r in ivf_topk(emb, q, centers, k=8, nprobe=3,
-                           mode="broadcast").collect()}
-    b = {(r.query_id, r.rank): (r.vec_id, r.sim)
-         for r in ivf_topk(emb, q, centers, k=8, nprobe=3,
-                           mode="cogroup").collect()}
-    assert set(a) == set(b)
-    for key in a:
-        assert a[key][0] == b[key][0], key
-        assert a[key][1] == pytest.approx(b[key][1], rel=1e-9)
+
+
+def _assert_around_gate(monkeypatch, n, run):
+    """``run()`` at ``ann_rows`` = n - 1 (above the gate: the cogroup
+    slices) and n (in-core) gives the rows of the in-core run at
+    10**9: equal (query_id, vec_id, rank), bit-equal sims."""
+    from esda_spark.plans import gate
+
+    def rows(limit):
+        monkeypatch.setitem(gate.LIMITS, "ann_rows", limit)
+        return sorted((r.query_id, r.vec_id, r.rank, r.sim)
+                      for r in run().collect())
+
+    want = rows(10**9)
+    assert len(want) == 30 * 8
+    for limit in (n - 1, n):
+        got = rows(limit)
+        assert [r[:3] for r in got] == [r[:3] for r in want], limit
+        assert (np.array([r[3] for r in got]).view(np.int64)
+                == np.array([r[3] for r in want]).view(np.int64)).all()
+
+
+def test_ivf_topk_cogroup_parity(spark, monkeypatch):
+    """ivf_topk's cogroup plan (probes never broadcast) matches its
+    in-core rows at and around the ann_rows gate."""
+    from esda_spark.operators.similarity import ivf_topk, kmeans_fit
+
+    emb, q = _clustered_2k(spark)
+    centers = kmeans_fit(emb, k=16, max_iters=6, seed=5)
+    _assert_around_gate(monkeypatch, 2000, lambda: ivf_topk(
+        emb, q, centers, k=8, nprobe=3))
+    emb.unpersist()
+
+
+def test_lsh_topk_cogroup_parity(spark, monkeypatch):
+    """lsh_topk's per-slice kernel matches its in-core rows at and
+    around the ann_rows gate."""
+    from esda_spark.operators.similarity import lsh_topk
+
+    emb, q = _clustered_2k(spark)
+    _assert_around_gate(monkeypatch, 2000, lambda: lsh_topk(
+        emb, q, dim=24, k=8, num_tables=4))
     emb.unpersist()
 
 
