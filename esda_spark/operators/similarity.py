@@ -163,23 +163,29 @@ def _arrays(pdf: pd.DataFrame, id_col: str, vec_col: str):
             np.vstack(pdf[vec_col].to_numpy()).astype(np.float64))
 
 
+def _row_cut(sims, ok, k: int, slack: float = 0.0) -> np.ndarray:
+    """Mask of the ``ok`` entries of a (queries x corpus rows) sim
+    matrix at or above their row's k-th largest ``ok`` sim minus
+    ``slack`` — ties included, so a (sim desc, vec_id asc) ranking
+    sees every tie at the cutoff.  Sets the other entries to -inf."""
+    kk = min(k, sims.shape[1])
+    if kk == 0:
+        return np.zeros_like(ok)
+    sims[~ok] = -np.inf
+    cut = np.partition(sims, -kk, axis=1)[:, -kk]
+    return ok & (sims >= cut[:, None] - slack)
+
+
 def _cosine_pairs(qid, Q, cid, C, k: int):
     """Flat (query_id, vec_id, sim) candidates of the exact cosine
     top-k over one (queries x corpus rows) block: one BLAS matrix of
-    the normalized vectors.  Self pairs and non-finite sims are
-    dropped; of the rest, each query row keeps its entries at or above
-    the row's k-th largest sim — ties included, so the (sim desc,
-    vec_id asc) ranking sees every tie at the cutoff."""
+    the normalized vectors, self pairs and non-finite sims dropped,
+    each row cut by :func:`_row_cut`."""
     with np.errstate(divide="ignore", invalid="ignore"):
         sims = ((Q / np.linalg.norm(Q, axis=1, keepdims=True))
                 @ (C / np.linalg.norm(C, axis=1, keepdims=True)).T)
     ok = np.isfinite(sims) & (qid[:, None] != cid[None, :])
-    sims[~ok] = -np.inf
-    kk = min(k, sims.shape[1])
-    if kk == 0:
-        return _NO_PAIRS
-    cut = np.partition(sims, -kk, axis=1)[:, -kk]
-    qrow, crow = np.nonzero(ok & (sims >= cut[:, None]))
+    qrow, crow = np.nonzero(_row_cut(sims, ok, k))
     return qid[qrow], cid[crow], sims[qrow, crow]
 
 
@@ -747,13 +753,23 @@ def _ivf_topk_incore(emb_pdf, q_pdf, Cn, nprobe):
     return _pair_sims(qid, Q, cid, C, probe // probes.shape[1], order[pos])
 
 
-def _list_pairs(cpdf, qpdf):
-    """Every (query, member) pair of one inverted list's cogroup
-    slice, by :func:`_pair_sims`."""
+def _list_pairs(cpdf, qpdf, k: int):
+    """Each probing query's top-k candidates among one inverted list's
+    members (a cogroup slice), sims by :func:`_pair_sims` (the in-core
+    fold, bit for bit).  Only the pairs within 1e-9 of their row's
+    k-th largest BLAS sim (over the fold's norms) are refolded: both
+    sims stay within (2 * dim + 4) * 2**-53 of the true cosine, so up
+    to dim ~1e6 that keeps the folded top-k with its ties, while no
+    nonzero norm leaves [1e-100, 1e100] (else every pair is)."""
     cid, C = _arrays(cpdf, "vec_id", "cv")
     qid, Q = _arrays(qpdf, "query_id", "qv")
-    qrow, crow = np.divmod(np.arange(len(qid) * len(cid)), len(cid))
-    return _pair_sims(qid, Q, cid, C, qrow, crow)
+    qn, cn = np.sqrt(_seq_dot(Q, Q)), np.sqrt(_seq_dot(C, C))
+    keep = np.outer(qn > 0, cn > 0) & (qid[:, None] != cid[None, :])
+    n = np.r_[qn, cn]
+    if np.all((n == 0) | ((n >= 1e-100) & (n <= 1e100))):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            keep = _row_cut((Q @ C.T) / np.outer(qn, cn), keep, k, 1e-9)
+    return _pair_sims(qid, Q, cid, C, *np.nonzero(keep))
 
 
 def ivf_topk(
@@ -778,12 +794,12 @@ def ivf_topk(
     the driver.  Above it the corpus and the (query, probed list) rows
     are assigned per Arrow batch and cogrouped on list id
     (:func:`_cogroup_topk`): each list scores its members against its
-    probing queries — no collect or broadcast of either side.  A
-    vector lives in one list, so no pair is scored twice.  Sims are
-    the sequential fold on both sides of the gate; only a near-tie
-    argmax of the per-batch BLAS assignment could move a vector to
-    another list.  A list (members x probing queries pairs) must fit a
-    Python worker.
+    probing queries (:func:`_list_pairs`) — no collect or broadcast of
+    either side.  A vector lives in one list, so no pair is scored
+    twice.  Sims are the sequential fold on both sides of the gate;
+    only a near-tie argmax of the per-batch BLAS assignment could move
+    a vector to another list.  A list's (probing queries x members)
+    sim matrix must fit a Python worker.
     """
     spark = embeddings.sparkSession
     Cn = _unit_rows(centers)
@@ -823,7 +839,8 @@ def ivf_topk(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
     ).mapInPandas(assign_queries,
                   schema=f"key long, query_id long, qv {vec_t}")
-    return _cogroup_topk(corpus, qprobes, _list_pairs, k)
+    return _cogroup_topk(corpus, qprobes,
+                         lambda c, q: _list_pairs(c, q, k), k)
 
 
 def near_dup_groups(

@@ -676,6 +676,46 @@ def test_lsh_topk_cogroup_parity(spark, monkeypatch):
     emb.unpersist()
 
 
+@pytest.mark.parametrize("case", ["gauss", "ties", "near", "extreme"])
+def test_ivf_list_kernel_matches_all_pairs(case):
+    """The IVF list kernel refolds only the pairs its BLAS matrix
+    picks; its local top-k equals the top-k over every (query, member)
+    pair's sequential fold, bit for bit — with integer-valued vectors
+    (exact ties at the cutoff), members a hair apart (BLAS and the
+    fold order them differently), a duplicate member, a zero member,
+    shared query/member ids and norms outside [1e-100, 1e100]."""
+    import pandas as pd
+
+    from esda_spark.operators import similarity as S
+
+    rng = np.random.default_rng(7)
+    C, Q = rng.normal(size=(60, 32)), rng.normal(size=(25, 32))
+    if case == "ties":
+        C, Q = np.round(C), np.round(Q)
+    if case == "near":
+        C = C[0] + C * 1e-15
+        Q[5:] = C[0] + Q[5:] * 1e-3
+    C[3], C[4] = C[2], 0.0
+    if case == "extreme":
+        C[5:8] *= 1e-120
+        C[10:30] *= 1e154
+        Q[6:10] *= 1e154
+    cid = np.arange(60, dtype=np.int64)
+    qid = np.r_[cid[:5], np.arange(100, 120)]
+    cpdf = pd.DataFrame({"vec_id": cid, "cv": list(C)})
+    qpdf = pd.DataFrame({"query_id": qid, "qv": list(Q)})
+    qrow, crow = np.divmod(np.arange(25 * 60), 60)
+    for k in (1, 4, 10):
+        with np.errstate(over="ignore", invalid="ignore"):
+            got = S._local_topk(S._list_pairs(cpdf, qpdf, k), k)
+            want = S._local_topk(
+                S._pair_sims(qid, Q, cid, C, qrow, crow), k)
+        assert got[["query_id", "vec_id"]].equals(
+            want[["query_id", "vec_id"]]), k
+        assert (got.sim.to_numpy().view(np.int64)
+                == want.sim.to_numpy().view(np.int64)).all(), k
+
+
 def test_kmeans_fit_wide_dim(spark):
     """dim > 256 takes the Arrow partial-sum reduce (no dim-expression
     aggregate); centers still unit-norm and usable."""
